@@ -579,9 +579,6 @@ object Dedup {
     withPlantedDups(docs)
       .select(col("doc_id"), simHashSig(col("text"), portable).as("simhash"))
 
-  /** Column API kept for single-expression use in tests. */
-  def simHash(text: Column): Column = simHashSig(text, portable = false)
-
   /** Candidate pairs by 16-bit chunk bucketing (hamming ≤ 3 pairs must share
     * at least one of 4 chunks), verified by bit_count(xor). Bucket pair
     * emission is bounded via [[candidatePairs]].

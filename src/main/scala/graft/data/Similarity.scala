@@ -91,10 +91,6 @@ object Similarity {
     emb.select(col("vec_id"), quantized(col("embedding")).as("v"))
       .select(col("vec_id"), hyperplaneBucket(col("v"), nPlanes).as("bucket"))
 
-  /** Bucket histogram — the partition-balance diagnostic for the ANN index. */
-  def lshBucketSizes(emb: DataFrame, nPlanes: Int = 8): DataFrame =
-    lshBuckets(emb, nPlanes).groupBy(col("bucket")).agg(count(lit(1)).as("n_vectors"))
-
   // -------------------------------------------------------------------
   // IVF (inverted-file) ANN: coarse quantizer cells instead of hash buckets
   // -------------------------------------------------------------------

@@ -33,16 +33,6 @@ object EnrichOps {
     ("code_exec", "acme", "gold"),
     ("browser", "other", "bronze"))
 
-  def roleLookupDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    RoleLookup.toDF("role", "team", "cost_center")
-  }
-
-  def toolLookupDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    ToolLookup.toDF("tool", "vendor", "tier")
-  }
-
   /** Enrich transcripts with both lookups. Left joins: unmatched keys keep
     * null enrichment columns (the reference leaves the record untouched).
     * Both dims are broadcast — zero shuffle of the transcript side.

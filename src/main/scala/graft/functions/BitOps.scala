@@ -1,17 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{ShiftLeft, ShiftRight, ShiftRightUnsigned}
+import org.apache.spark.sql.catalyst.expressions.ShiftRightUnsigned
 
-/** Column-shift-amount bit ops (the public Scala functions API only accepts
+/** Column-shift-amount bit op (the public Scala functions API only accepts
   * Int shift amounts; Catalyst's expressions take arbitrary columns, which
   * higher-order-function lambdas need — e.g. per-bit SimHash extraction).
   */
 object BitOps {
-  def shiftL(c: Column, n: Column): Column =
-    GraftBridge.column(ShiftLeft(GraftBridge.expression(c), GraftBridge.expression(n)))
-  def shiftR(c: Column, n: Column): Column =
-    GraftBridge.column(ShiftRight(GraftBridge.expression(c), GraftBridge.expression(n)))
   def shiftRU(c: Column, n: Column): Column =
     GraftBridge.column(ShiftRightUnsigned(GraftBridge.expression(c), GraftBridge.expression(n)))
 }

@@ -388,8 +388,6 @@ object Transcripts {
         coalesce(g.getField("minute"), lit("00"))),
       "yyyy-MM-dd HH:mm")
 
-  def entityTime(path: Column): Column = entityTimeFrom(entityParsed(path))
-
   /** Telemetry signal from the entity name (helpers.go:76-86: metric/log/
     * trace signifiers matched in that order).
     */
@@ -400,8 +398,6 @@ object Transcripts {
       .when(last.contains("traces_"), "traces")
       .otherwise("")
   }
-
-  def entitySignal(path: Column): Column = entitySignalFrom(entityParsed(path))
 
   /** First-class time-bounded scan over the partitioned table:
     * starting_time <= entity_time <= ending_time (IsInTimeRange is

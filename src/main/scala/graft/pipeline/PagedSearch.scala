@@ -122,8 +122,8 @@ object PagedSearch {
           throw new RuntimeException(s"injected failure before page $p")
         val t0 = System.nanoTime()
         val pageDf = store.filter(col("page") === p) // partition-pruned scan
-        // count via observe on the write itself (Router.fanOut pattern) —
-        // one pruned scan per page, no second pass
+        // count via observe on the write itself — one pruned scan per
+        // page, no second pass
         val obs = new org.apache.spark.sql.Observation(s"page_$p")
         pageDf.observe(obs, count(lit(1)).as("n"))
           .write.mode("append").parquet(outDir)

@@ -1,10 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.enrich.EnrichOps
-import graft.model.Transcripts
 import graft.route.Router
 
 /** Pipeline spec + compiler: the engine's analogue of the collector's
@@ -130,10 +129,8 @@ object Pipeline {
               case "batch" => df // sizing applied at the sink (maxRecordsPerFile)
             }
           }
-          val routeCol = v.routes.init.foldRight(lit(v.routes.last.name): Column) {
-            (r, acc) => when(expr(r.predicateSql), r.name).otherwise(acc)
-          }
-          afterOps.withColumn("route", routeCol)
+          afterOps.withColumn("route", Router.routeTag(
+            v.routes.map(r => Router.Route(r.name, expr(r.predicateSql)))))
         }
     }
   }
@@ -158,18 +155,18 @@ object Pipeline {
   * per-partition manifest commits and resume.
   *
   * Scale design (10^12 turns): partitions are processed in bounded groups —
-  * each group is ONE partition-pruned scan and ONE persisted fan-out (the
-  * input is never re-read per sink), and each hour partition commits to the
-  * manifest independently, so a killed run loses at most the in-flight
-  * group and re-runs idempotently (dynamic partition overwrite).
+  * each group is ONE partition-pruned scan and ONE write partitioned by
+  * (route, year, month, day, hour), so every row reaches its sink table in
+  * the pass that parsed it (the input is never re-read per sink and nothing
+  * is cached), and each hour partition commits to the manifest
+  * independently, so a killed run loses at most the in-flight group and
+  * re-runs idempotently (dynamic partition overwrite).
   */
 object PipelineRunner {
 
   case class RunReport(partitionsProcessed: Int, partitionsSkipped: Int,
                        rowsIn: Long, sinkCounts: Map[String, Long],
-                       rowsOut: Long = -1L) {
-    def rowsWritten: Long = if (rowsOut >= 0) rowsOut else sinkCounts.values.sum
-  }
+                       rowsOut: Long)
 
   /** Discover hour partitions of a `year=/month=/day=/hour=` table. */
   def discoverPartitions(spark: SparkSession, inputPath: String): Seq[String] = {
@@ -190,12 +187,13 @@ object PipelineRunner {
   def sinkPath(outRoot: String, sink: String): String =
     s"$outRoot/sinks/route=$sink"
 
-  /** Measured fan-out writer defaults (tools/WriteLab, 8M-turn matrix,
-    * best-of-N on tmpfs): zstd level 1 + dictionary encoding disabled on
-    * the high-cardinality columns cut write wall ~22% AND output bytes
-    * ~45% vs snappy-with-dictionaries. Dictionaries on text/conv_id/ts
-    * overflow and fall back — pure encode overhead — while the enum
-    * columns (role/tool/severity_text/...) keep theirs for the size win.
+  /** Measured sink writer defaults (BASELINE.md "Write-phase experiment
+    * matrix": 8M-turn matrix, best-of-N on tmpfs): zstd level 1 +
+    * dictionary encoding disabled on the high-cardinality columns cut write
+    * wall ~22% AND output bytes ~45% vs snappy-with-dictionaries.
+    * Dictionaries on text/conv_id/ts overflow and fall back — pure encode
+    * overhead — while the enum columns (role/tool/severity_text/...) keep
+    * theirs for the size win.
     * At cluster scale the byte reduction compounds: the written bytes are
     * re-read by every downstream consumer.
     */
@@ -205,43 +203,29 @@ object PipelineRunner {
     Seq("text", "conv_id", "ts", "attrs_json")
       .map(c => s"parquet.enable.dictionary#$c" -> "false")
 
-  /** @param strategy `"partitioned"` (default): ONE write of the tagged
-    *   stream partitioned by (route, year, month, day, hour) — a single
-    *   compute pass, flat memory, the only shape that survives 10^12 turns
-    *   (no multi-TB cache). `"persist"`: cache the tagged parent and run one
-    *   filtered write per sink — lower write fan-out per task, but the cache
-    *   materialization costs memory bandwidth and capacity.
+  /** Run `spec` over every hour partition of `inputPath` not yet in the
+    * manifest, `groupSize` partitions per scan; the sink tables land under
+    * `outRoot/sinks` (see [[sinkPath]]).
     */
   def run(spark: SparkSession, spec: Pipeline.PipelineSpec,
           inputPath: String, outRoot: String,
-          groupSize: Int = 24, strategy: String = "partitioned",
-          maxRecordsPerFile: Long = 5000000L,
+          groupSize: Int = 24,
           failure: Option[RandomFailure] = None, attempt: Int = 0): RunReport = {
-    // batchprocessor send_batch_size analogue (manifest.yaml:86): output
-    // batches are bounded by capping records per written file
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val manifest = new Manifest(s"$outRoot/_manifest")
     val transform = Pipeline.compile(spec, spark)
-    // a `batch` operator in the SPEC overrides the caller's default cap
-    // (send_batch_size is pipeline config, not a runner flag)
+    // batchprocessor send_batch_size analogue (manifest.yaml:86): output
+    // batches are bounded by capping records per written file; the cap is
+    // pipeline config (the spec's `batch` operator), not a runner flag
     val recordCap = spec.operators.find(_.opType == "batch")
-      .flatMap(_.params.get("max_records")).map(_.toLong)
-      .getOrElse(maxRecordsPerFile)
+      .flatMap(_.params.get("max_records"))
+      .getOrElse(Pipeline.OperatorParams("batch").head.default.get).toLong
     val all = discoverPartitions(spark, inputPath)
     val committed = manifest.committedPartitions()
     val todo = all.filterNot(p => committed.contains(sanitize(p)))
     var rowsIn = 0L
     var rowsOut = 0L
     val sinkTotals = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
-
-    val profile = sys.env.contains("SPARK_GRAFT_PROFILE")
-    def phase[T](name: String)(f: => T): T = {
-      val t = System.nanoTime()
-      val r = f
-      if (profile) System.err.println(
-        f"[profile] $name: ${(System.nanoTime() - t) / 1e9}%.2f s")
-      r
-    }
 
     todo.grouped(groupSize).foreach { group =>
       // randomfailureprocessor injection point: per consume call (= per
@@ -251,60 +235,38 @@ object PipelineRunner {
       val t0 = System.nanoTime()
       // one pruned scan for the whole group
       val paths = group.map(p => s"$inputPath/$p")
-      val input = phase("read+list")(spark.read
+      val input = spark.read
         .option("basePath", inputPath)
-        .parquet(paths: _*))
+        .parquet(paths: _*)
       // true input volume per partition (filter/sample ops may drop rows
       // downstream, so rows_in ≠ rows written): a zero-column count grouped
       // on the partition columns — parquet decodes no data pages for it
-      val inCounts: Map[String, Long] = phase("count-in")(
+      val inCounts: Map[String, Long] =
         input.groupBy(col("year"), col("month"), col("day"), col("hour"))
           .agg(count(lit(1)).as("n")).collect()
           .map(r => (s"year=${r.get(0)}/month=${r.get(1)}/day=${r.get(2)}/hour=${r.get(3)}",
-            r.getLong(4))).toMap)
-      val tagged = phase("plan")(transform(input))
+            r.getLong(4))).toMap
 
-      val perSinkPart: Map[String, Map[String, Long]] =
-        if (strategy == "persist") {
-          val cached = tagged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val counts = countsBySinkPartition(cached)
-            import scala.concurrent.{Await, Future}
-            import scala.concurrent.duration.Duration
-            import scala.concurrent.ExecutionContext.Implicits.global
-            val writes = spec.sinks.map { sink => Future {
-              cached.filter(col("route") === sink)
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", recordCap)
-                .options(WriterOptions)
-                .partitionBy("year", "month", "day", "hour")
-                .parquet(sinkPath(outRoot, sink))
-            }}
-            writes.foreach(Await.result(_, Duration.Inf))
-            counts
-          } finally cached.unpersist()
-        } else {
-          // single pass: route is the leading output partition column —
-          // every row lands in its sink table in the same job that parsed it
-          // (batchprocessor size caps via maxRecordsPerFile, manifest.yaml:86).
-          // Tested and REJECTED (WriteLab r5): sortWithinPartitions(conv_id,
-          // turn_idx) before the write looked −10% on isolated write wall
-          // but is noise-neutral end-to-end over 2×2 alternating bench runs
-          // (sorted 2.51/2.84M tps vs unsorted 2.73/2.37M) — the per-task
-          // sort CPU eats the writer-side gain, so the simpler plan ships
-          phase("write")(tagged.write.mode("overwrite")
-            .option("maxRecordsPerFile", recordCap)
-            .options(WriterOptions)
-            .partitionBy("route", "year", "month", "day", "hour")
-            .parquet(s"$outRoot/sinks"))
-          // manifest metrics: count the WRITTEN rows — a column-less scan over
-          // the fresh output (footer-bound, cheap) that also double-checks the
-          // write landed
-          phase("count")(countsBySinkPartition(spark.read
-            .option("basePath", s"$outRoot/sinks")
-            .parquet(group.flatMap(p => spec.sinks.map(s =>
-              s"${sinkPath(outRoot, s)}/$p")).filter(pathExists(spark, _)): _*)))
-        }
+      // single pass: route is the leading output partition column — every
+      // row lands in its sink table in the same job that parsed it.
+      // Tested and rejected (BASELINE.md "Write-phase experiment matrix"):
+      // sortWithinPartitions(conv_id, turn_idx) before the write looked −10%
+      // on isolated write wall but is noise-neutral end-to-end over 2×2
+      // alternating bench runs (sorted 2.51/2.84M tps vs unsorted
+      // 2.73/2.37M) — the per-task sort CPU eats the writer-side gain, so
+      // the simpler plan ships
+      transform(input).write.mode("overwrite")
+        .option("maxRecordsPerFile", recordCap)
+        .options(WriterOptions)
+        .partitionBy("route", "year", "month", "day", "hour")
+        .parquet(s"$outRoot/sinks")
+      // manifest metrics: count the WRITTEN rows — a column-less scan over
+      // the fresh output (footer-bound, cheap) that also double-checks the
+      // write landed
+      val perSinkPart = countsBySinkPartition(spark.read
+        .option("basePath", s"$outRoot/sinks")
+        .parquet(group.flatMap(p => spec.sinks.map(s =>
+          s"${sinkPath(outRoot, s)}/$p")).filter(pathExists(spark, _)): _*))
 
       val wallMs = (System.nanoTime() - t0) / 1000000
       group.foreach { p =>

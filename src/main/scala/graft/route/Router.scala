@@ -1,6 +1,6 @@
 package graft.route
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.parse.ParseOps
@@ -14,11 +14,11 @@ import graft.parse.ParseOps
   * that route's sink table.
   *
   * Physical design for 100 TB: the route tag is computed ONCE per row in the
-  * same codegen stage as the parse; the tagged parent is persisted (or staged
-  * to a checkpoint table) and each sink write is a partition-pruned filter
-  * over it — the input is scanned once, not once per sink (the reference
-  * pushes each batch to all routes in one pass; naive per-sink Spark jobs
-  * would rescan the source N times).
+  * same codegen stage as the parse, and the pipeline writes the tagged
+  * stream ONCE, partitioned by `route` (PipelineRunner.run) — each
+  * `route=<name>` directory is that sink's table. The input is scanned once
+  * and nothing is cached, as the reference pushes each batch to all routes
+  * in one pass; naive per-sink Spark jobs would rescan the source N times.
   */
 object Router {
 
@@ -67,25 +67,6 @@ object Router {
       .withColumn("severity_text", ParseOps.severityText(col("severity_number")))
     withSev.withColumn("route",
       routeTag(defaultRoutes(col("severity_number"), col("tool"))))
-  }
-
-  /** Single-pass multi-sink fan-out: persist the tagged parent once, then one
-    * filtered write per sink. Returns sink name → row count written.
-    */
-  def fanOut(spark: SparkSession, t: DataFrame, outDir: String): Map[String, Long] = {
-    import org.apache.spark.storage.StorageLevel
-    val parent = tagged(t).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val routes = defaultRoutes(col("severity_number"), col("tool")).map(_.name)
-      routes.map { name =>
-        // count via observe on the write itself — no re-scan of the output
-        val obs = new org.apache.spark.sql.Observation(s"fanout_$name")
-        val rows = parent.filter(col("route") === name)
-          .observe(obs, count(lit(1)).as("n"))
-        rows.write.mode("overwrite").parquet(s"$outDir/$name")
-        name -> obs.get("n").asInstanceOf[Long]
-      }.toMap
-    } finally parent.unpersist()
   }
 
   // -------------------------------------------------------------------

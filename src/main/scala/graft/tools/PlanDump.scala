@@ -3,8 +3,10 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 /** Writes `.explain("formatted")` output for named queries to
-  * `plans/<round>/<query>_<suffix>.txt` — the optimization-round evidence
-  * files (the judge checks plan claims against these).
+  * `plans/<round>/<query>_<suffix>.txt`, relative to the working directory
+  * (the repo root under `sbt runMain`) — the evidence files that back a
+  * plan-shape claim. The session comes from `GraftSession.builder()`
+  * (`SPARK_GRAFT_CPUS` cores).
   * Usage: runMain graft.tools.PlanDump <round> <suffix> [sfDir] [q1 q2 ...]
   */
 object PlanDump {
@@ -15,9 +17,9 @@ object PlanDump {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val s = graft.GraftSession.builder(master = "local[32]").getOrCreate()
+    val s = graft.GraftSession.builder().getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    val outDir = Paths.get("/root/repo/plans", round)
+    val outDir = Paths.get("plans", round)
     Files.createDirectories(outDir)
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(s, d)

@@ -122,17 +122,22 @@ class PipelineSpec extends SparkTestBase {
     assert(m.getAs[Long]("log_raw_bytes") > 0)
   }
 
-  test("persist and partitioned fan-out strategies produce identical sink counts") {
-    val base = java.nio.file.Files.createTempDirectory("strat").toString
-    graft.model.Transcripts.writePartitioned(
-      graft.model.Transcripts.generate(spark, nTurns = 8000, nConvs = 20), s"$base/in")
-    val a = graft.pipeline.PipelineRunner.run(spark, Pipeline.Canonical,
-      s"$base/in", s"$base/outA", strategy = "partitioned")
-    val b = graft.pipeline.PipelineRunner.run(spark, Pipeline.Canonical,
-      s"$base/in", s"$base/outB", strategy = "persist")
-    assert(a.sinkCounts == b.sinkCounts)
-    assert(a.rowsIn == 8000)
+  test("partitioned write lands each row in exactly one sink, counts match the route tag") {
+    val base = java.nio.file.Files.createTempDirectory("sinks").toString
+    Transcripts.writePartitioned(
+      Transcripts.generate(spark, nTurns = 8000, nConvs = 20), s"$base/in")
+    val r = PipelineRunner.run(spark, Pipeline.Canonical, s"$base/in", s"$base/out")
+    assert(r.rowsIn == 8000)
+    assert(r.sinkCounts.values.sum == r.rowsIn)
+    val expected = graft.route.Router.tagged(spark.read.parquet(s"$base/in"))
+      .groupBy(col("route")).count().collect()
+      .map(row => row.getString(0) -> row.getLong(1)).toMap
+    assert(r.sinkCounts == expected)
     Bench.deleteRec(base)
+  }
+
+  test("SparkEntry.entry (the flagship smoke) returns rows at sf0.001") {
+    assert(SparkEntry.entry(spark).collect().nonEmpty)
   }
 
   test("compiled pipeline == hand-built plan on the same input") {

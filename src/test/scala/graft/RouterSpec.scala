@@ -81,13 +81,6 @@ class RouterSpec extends SparkTestBase {
     assert(sparkCounts == oracleCounts)
   }
 
-  test("fanOut writes each row to exactly one sink (counts partition the input)") {
-    val out = java.nio.file.Files.createTempDirectory("fanout").toString
-    val counts = Router.fanOut(spark, Transcripts.fromEvents(spark, sfDir), out)
-    assert(counts.values.sum == turns.size)
-    Bench.deleteRec(out)
-  }
-
   test("topology routes: all-four-headers gate, last-seen wins per gateway") {
     import java.sql.Timestamp
     def ts(s: Long) = new Timestamp(s * 1000)
