@@ -66,17 +66,16 @@ object EnrichOps {
 
   /** CSV-file lookup join. The dimension is (re)read from disk on every
     * compile — the batch analogue of the reference's reload ticker
-    * (processor.go:72-91). Semantics parity with addLookupValues
-    * (processor.go:293-312): key read from the selected context; a missing
-    * or NON-STRING key column is a silent no-op; unmatched keys keep null
-    * enrichment columns. Physical plan: broadcast hash join on the dim —
-    * the fact side never shuffles.
+    * (processor.go:72-91) — and built on the driver by [[lookupDim]].
+    * Semantics parity with addLookupValues (processor.go:293-312): key read
+    * from the selected context; a missing or NON-STRING key column is a
+    * silent no-op; unmatched keys keep null enrichment columns. Physical
+    * plan: a LocalTableScan dim under a broadcast hash join — the fact side
+    * never shuffles, and building the dim costs no Spark job.
     */
   def lookupCsv(spark: SparkSession, df: DataFrame, spec: LookupSpec): DataFrame = {
     spec.validate()
-    val dim = spark.read.option("header", "true").csv(spec.csv)
-    require(dim.columns.contains(spec.field),
-      s"lookup column '${spec.field}' not in CSV header ${dim.columns.mkString(",")}")
+    val dim = lookupDim(spark, spec.csv, spec.field)
     val keyCol: Option[Column] = spec.context match {
       case "body" =>
         // body context: the key is a field of the (JSON) body
@@ -91,17 +90,7 @@ object EnrichOps {
     keyCol match {
       case None => df // silent no-op, reference parity
       case Some(k) =>
-        // duplicate-key parity: indexRecords (csv.go) builds a map row by
-        // row, so a repeated lookup key LAST-WINS — dedupe the dim by file
-        // order before broadcasting, else the left join would duplicate
-        // fact rows
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__lookup_key")).orderBy(col("__ord").desc)
-        val dimKeyed = dim
-          .withColumn("__ord", monotonically_increasing_id())
-          .withColumnRenamed(spec.field, "__lookup_key")
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn", "__ord")
+        val dimKeyed = dim.withColumnRenamed(spec.field, "__lookup_key")
         // enrichment columns overwrite same-named attributes on MATCHED
         // records only (processor.go sets attrs[col] per matched key);
         // unmatched records keep their original value
@@ -119,9 +108,50 @@ object EnrichOps {
     }
   }
 
-  /** Deterministic on-disk CSV fixtures (written once, then read through the
-    * real csv file source — header parsing, type inference off, reload via
-    * re-read).
+  /** The dimension of a lookup CSV file, parsed on the driver: one
+    * all-string column per header field, one row per `field` value.
+    * Duplicate-key parity with indexRecords (csv.go:88-114): the reference
+    * builds a map row by row, so a repeated key LAST-WINS in file order —
+    * without the fold the left join would duplicate fact rows. The dialect
+    * is the CSV source's own (its univocity settings, header naming and
+    * blank-line skipping; short rows pad with null, long rows truncate,
+    * empty and quoted-empty fields read as null), so the result equals
+    * `spark.read.option("header", "true").csv(csv)` after the same fold.
+    */
+  def lookupDim(spark: SparkSession, csv: String, field: String): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.csv.CSVOptions
+    import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val opts = new CSVOptions(Map("header" -> "true"), false,
+      spark.conf.get("spark.sql.session.timeZone"))
+    val path = new org.apache.hadoop.fs.Path(csv)
+    val in = path.getFileSystem(spark.sparkContext.hadoopConfiguration).open(path)
+    // line splitting as the CSV source's line reader (\n, \r or \r\n)
+    val lines = try CSVUtils.filterCommentAndEmpty(
+        new java.io.BufferedReader(new java.io.InputStreamReader(in, opts.charset))
+          .lines().iterator().asScala, opts).toVector
+      finally in.close()
+    val parser = new com.univocity.parsers.csv.CsvParser(opts.asParserSettings)
+    val header = lines.headOption.fold(Array.empty[String])(l => CSVUtils.makeSafeHeader(
+      parser.parseLine(l), spark.conf.get("spark.sql.caseSensitive").toBoolean, opts))
+    require(header.contains(field),
+      s"lookup column '$field' not in CSV header ${header.mkString(",")}")
+    val key = header.indexOf(field)
+    val rows = lines.drop(1).map { l =>
+      val tokens = parser.parseLine(l)
+      Row.fromSeq(header.indices.map(i =>
+        if (i < tokens.length && tokens(i) != opts.nullValue) tokens(i) else null))
+    }
+    val lastWins = rows.reverse.distinctBy(_.get(key)).reverse
+    spark.createDataFrame(lastWins.asJava,
+      StructType(header.map(StructField(_, StringType))))
+  }
+
+  /** Deterministic on-disk CSV fixtures (written once, then read like any
+    * lookup CSV: parsed on the driver by [[lookupDim]] on every compile,
+    * so a rewrite is picked up by the next one).
     */
   def lookupFixture(name: String, header: String,
                     rows: Seq[(String, String, String)]): String = {

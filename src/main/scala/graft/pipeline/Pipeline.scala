@@ -160,9 +160,16 @@ object Pipeline {
   * the pass that parsed it (the input is never re-read per sink and nothing
   * is cached), and each hour partition commits to the manifest
   * independently, so a killed run loses at most the in-flight group and
-  * re-runs idempotently (dynamic partition overwrite).
+  * re-runs idempotently (dynamic partition overwrite). The write is the
+  * only job of a group that moves rows: the manifest's rows in and rows per
+  * sink are parquet footer row counts read on the driver (see
+  * [[footerRows]]), not count jobs.
   */
 object PipelineRunner {
+  import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+  import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
+  import org.apache.parquet.hadoop.ParquetFileReader
+  import org.apache.parquet.hadoop.util.HadoopInputFile
 
   case class RunReport(partitionsProcessed: Int, partitionsSkipped: Int,
                        rowsIn: Long, sinkCounts: Map[String, Long],
@@ -170,13 +177,13 @@ object PipelineRunner {
 
   /** Discover hour partitions of a `year=/month=/day=/hour=` table. */
   def discoverPartitions(spark: SparkSession, inputPath: String): Seq[String] = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val root = new HPath(inputPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def ls(p: HPath): Seq[HPath] =
       if (!fs.exists(p)) Seq.empty
       else fs.listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
     for {
-      y <- ls(new HPath(inputPath)) if y.getName.startsWith("year=")
+      y <- ls(root) if y.getName.startsWith("year=")
       m <- ls(y); d <- ls(m); h <- ls(d)
     } yield s"${y.getName}/${m.getName}/${d.getName}/${h.getName}"
   }
@@ -220,6 +227,11 @@ object PipelineRunner {
     val recordCap = spec.operators.find(_.opType == "batch")
       .flatMap(_.params.get("max_records"))
       .getOrElse(Pipeline.OperatorParams("batch").head.default.get).toLong
+    val conf = spark.sparkContext.hadoopConfiguration
+    // one read-options object for every footer of the run: building it
+    // copies the Hadoop conf, which per file would cost more than the read
+    val footerOptions = HadoopReadOptions.builder(conf).build()
+    val outFs = new HPath(outRoot).getFileSystem(conf)
     val all = discoverPartitions(spark, inputPath)
     val committed = manifest.committedPartitions()
     val todo = all.filterNot(p => committed.contains(sanitize(p)))
@@ -239,13 +251,16 @@ object PipelineRunner {
         .option("basePath", inputPath)
         .parquet(paths: _*)
       // true input volume per partition (filter/sample ops may drop rows
-      // downstream, so rows_in ≠ rows written): a zero-column count grouped
-      // on the partition columns — parquet decodes no data pages for it
-      val inCounts: Map[String, Long] =
-        input.groupBy(col("year"), col("month"), col("day"), col("hour"))
-          .agg(count(lit(1)).as("n")).collect()
-          .map(r => (s"year=${r.get(0)}/month=${r.get(1)}/day=${r.get(2)}/hour=${r.get(3)}",
-            r.getLong(4))).toMap
+      // downstream, so rows_in ≠ rows written): footer row counts of the
+      // files the scan's own file index listed, keyed by their
+      // year=/month=/day=/hour= parents — no Spark job
+      val inCounts: Map[String, Long] = input.inputFiles.toSeq
+        .map { f =>
+          val file = new HPath(new java.net.URI(f))
+          partitionKey(file) -> footerRows(
+            HadoopInputFile.fromPath(file, conf), footerOptions)
+        }
+        .groupMapReduce(_._1)(_._2)(_ + _)
 
       // single pass: route is the leading output partition column — every
       // row lands in its sink table in the same job that parsed it.
@@ -260,19 +275,20 @@ object PipelineRunner {
         .options(WriterOptions)
         .partitionBy("route", "year", "month", "day", "hour")
         .parquet(s"$outRoot/sinks")
-      // manifest metrics: count the WRITTEN rows — a column-less scan over
-      // the fresh output (footer-bound, cheap) that also double-checks the
-      // write landed
-      val perSinkPart = countsBySinkPartition(spark.read
-        .option("basePath", s"$outRoot/sinks")
-        .parquet(group.flatMap(p => spec.sinks.map(s =>
-          s"${sinkPath(outRoot, s)}/$p")).filter(pathExists(spark, _)): _*))
+      // manifest metrics: count the WRITTEN rows — footer row counts of the
+      // files now in each sink's leaf directory (the write replaced the
+      // whole leaf, so stale files of an earlier attempt are not counted)
+      val outCounts: Map[String, Map[String, Long]] = group.map { p =>
+        p -> spec.sinks.map { s =>
+          s -> dataFiles(outFs, new HPath(s"${sinkPath(outRoot, s)}/$p"))
+            .map(st => footerRows(HadoopInputFile.fromStatus(st, conf), footerOptions))
+            .sum
+        }.toMap
+      }.toMap
 
       val wallMs = (System.nanoTime() - t0) / 1000000
       group.foreach { p =>
-        val sinkCounts = spec.sinks.map { s =>
-          s -> perSinkPart.getOrElse(s, Map.empty).getOrElse(p, 0L)
-        }.toMap
+        val sinkCounts = outCounts(p)
         val pIn = inCounts.getOrElse(p, 0L)
         val pOut = sinkCounts.values.sum
         rowsIn += pIn
@@ -286,25 +302,31 @@ object PipelineRunner {
     RunReport(todo.size, committed.size, rowsIn, sinkTotals.toMap, rowsOut)
   }
 
-  private def pathExists(spark: SparkSession, p: String): Boolean = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    FileSystem.get(spark.sparkContext.hadoopConfiguration).exists(new HPath(p))
+  /** Row count of one parquet file, summed over its footer's row groups and
+    * read on the driver. Measured over the 84 files of a 100k-turn table on
+    * local disk (4-core host, five passes): 0.55–1.5 ms per file with the
+    * shared `footerOptions`, 8–16 ms when every open builds its own options
+    * from the Hadoop conf. Reads are sequential: `groupSize` bounds the
+    * files per group.
+    */
+  private def footerRows(file: HadoopInputFile, footerOptions: ParquetReadOptions): Long = {
+    val reader = ParquetFileReader.open(file, footerOptions)
+    try reader.getRecordCount finally reader.close()
   }
 
-  /** route → (year=/month=/day=/hour= key → row count). */
-  private def countsBySinkPartition(df: org.apache.spark.sql.DataFrame)
-      : Map[String, Map[String, Long]] = {
-    val counts = df.groupBy(col("route"), col("year"), col("month"),
-        col("day"), col("hour"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getString(0),
-        s"year=${r.get(1)}/month=${r.get(2)}/day=${r.get(3)}/hour=${r.get(4)}",
-        r.getLong(5)))
-    counts.groupBy(_._1).map { case (s, rs) =>
-      s -> rs.map(r => r._2 -> r._3).toMap
-    }
-  }
+  /** The data files of a leaf directory, skipping `_`/`.` names as Spark's
+    * file index does; a missing directory has none.
+    */
+  private def dataFiles(fs: FileSystem, dir: HPath): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    } catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** `year=/month=/day=/hour=` key of a file: its four parent directories. */
+  private def partitionKey(file: HPath): String =
+    Iterator.iterate(file.getParent)(_.getParent).take(4)
+      .map(_.getName).toSeq.reverse.mkString("/")
 
   private def sanitize(s: String): String = s.replaceAll("[^A-Za-z0-9=_-]", "_")
 }

@@ -136,6 +136,75 @@ class PipelineSpec extends SparkTestBase {
     Bench.deleteRec(base)
   }
 
+  test("footer counts equal Spark counts when an operator drops rows") {
+    val base = java.nio.file.Files.createTempDirectory("footers").toString
+    Transcripts.writePartitioned(
+      Transcripts.generate(spark, nTurns = 8000, nConvs = 20), s"$base/in")
+    val spec = Canonical.copy(operators = Canonical.operators :+
+      OperatorSpec("filter", Map("drop_where" -> "role = 'system'")))
+    PipelineRunner.run(spark, spec, s"$base/in", s"$base/out", groupSize = 2)
+    def key(r: org.apache.spark.sql.Row, from: Int): String =
+      s"year=${r.get(from)}/month=${r.get(from + 1)}/day=${r.get(from + 2)}/hour=${r.get(from + 3)}"
+        .replaceAll("[^A-Za-z0-9=_-]", "_")
+    val parts = Seq(col("year"), col("month"), col("day"), col("hour"))
+    val inCounts = spark.read.parquet(s"$base/in").groupBy(parts: _*).count()
+      .collect().map(r => key(r, 0) -> r.getLong(4)).toMap
+    val outCounts = spark.read.option("basePath", s"$base/out/sinks")
+      .parquet(s"$base/out/sinks").groupBy(col("route") +: parts: _*).count()
+      .collect().groupBy(r => key(r, 1))
+      .map { case (k, rs) => k -> rs.map(r => r.getString(0) -> r.getLong(5)).toMap }
+    val entries = spark.read.option("multiLine", "true")
+      .json(s"$base/out/_manifest/*.json").collect()
+    assert(entries.length == inCounts.size)
+    entries.foreach { e =>
+      val p = e.getAs[String]("partition")
+      assert(e.getAs[Long]("rows_in") == inCounts(p), p)
+      val sc = e.getAs[org.apache.spark.sql.Row]("sink_counts")
+      val manifestSinks = spec.sinks.map(s => s -> sc.getAs[Long](s)).toMap
+      val expected = spec.sinks.map(s =>
+        s -> outCounts.getOrElse(p, Map.empty[String, Long]).getOrElse(s, 0L)).toMap
+      assert(manifestSinks == expected, p)
+      assert(e.getAs[Long]("rows_out") == expected.values.sum, p)
+    }
+    // the filter really dropped rows: written < read
+    assert(entries.map(_.getAs[Long]("rows_in")).sum >
+      entries.map(_.getAs[Long]("rows_out")).sum)
+    Bench.deleteRec(base)
+  }
+
+  test("job budget: compiling runs no job, a one-group run only its few fixed jobs") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.GraftSparkBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = java.nio.file.Files.createTempDirectory("jobs").toString
+    Transcripts.writePartitioned(
+      Transcripts.generate(spark, nTurns = 4000, nConvs = 20), s"$base/in")
+    val parts = PipelineRunner.discoverPartitions(spark, s"$base/in")
+    val input = spark.read.parquet(s"$base/in")
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      GraftSparkBridge.waitListeners(spark.sparkContext)
+      jobs.set(0)
+      body
+      GraftSparkBridge.waitListeners(spark.sparkContext)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // lookup dims are parsed on the driver: building the plan runs nothing
+      assert(jobsOf(Pipeline.compile(Canonical, spark)(input)) == 0)
+      // measured 4: the input schema, one broadcast per lookup dim, and the
+      // write; the manifest counts are footer reads, not jobs
+      val n = jobsOf(PipelineRunner.run(spark, Canonical, s"$base/in", s"$base/out",
+        groupSize = parts.size))
+      assert(n <= 4, s"one group ran $n jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    Bench.deleteRec(base)
+  }
+
   test("SparkEntry.entry (the flagship smoke) returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).collect().nonEmpty)
   }
@@ -285,6 +354,14 @@ class ResumeSpec extends SparkTestBase {
 
     // uncommit ONE partition (manifest only — sink files stay on disk)
     val victim = parts.last
+    val inVictim = victim.split("/").map { kv =>
+      val Array(k, v) = kv.split("=")
+      col(k) === v.toInt
+    }.reduce(_ && _)
+    val victimShare = spark.read.option("basePath", s"$out/sinks")
+      .parquet(s"$out/sinks").filter(inVictim)
+      .groupBy(col("route")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     val manifest = new Manifest(s"$out/_manifest")
     manifest.clear()
     parts.init.foreach { p =>
@@ -316,6 +393,10 @@ class ResumeSpec extends SparkTestBase {
       resumed.partitionsSkipped == parts.size - 1)
     assert(sinkCountsOnDisk() == baseline,
       "rerun did not replace the uncommitted partition's stale sink files")
+    // the run's own footer counts see the replaced leaves, not the orphans
+    assert(resumed.sinkCounts == Pipeline.Canonical.sinks.map(s =>
+      s -> victimShare.getOrElse(s, 0L)).toMap)
+    assert(resumed.rowsIn == spark.read.parquet(input).filter(inVictim).count())
     Bench.deleteRec(base)
   }
 
