@@ -1004,14 +1004,14 @@ object SparkEntry {
       val tt = t(s, d).select(col("conv_id"), col("turn_idx"), col("role"))
       // the two-snapshot table builds ONCE per input CONTENT (the cache key
       // is the source-file fingerprint, so a regenerated table at the same
-      // path rebuilds; the m3 suffix versions the METADATA FORMAT — the
+      // path rebuilds; the m4 suffix versions the METADATA FORMAT — the
       // manifest-chain layout rejects old-format caches, so a format bump
       // must miss) and publishes ATOMICALLY from a staging dir suffixed
       // with pid AND a JVM-unique nonce (two cold-cache builders in the
       // same JVM — e.g. parallel query execution — must not share a
       // staging dir; racers on the rename discard their staging copy) —
       // repeated invocations time the PINNED SCAN only
-      val key = Transcripts.sourceFingerprint(d) + "_m3"
+      val key = Transcripts.sourceFingerprint(d) + "_m4"
       val root = s"${System.getProperty("java.io.tmpdir")}/graft_icb_cache_$key"
       // probe WITHOUT constructing a table at root (the constructor creates
       // metadata/, which would block the staging dir's atomic rename)

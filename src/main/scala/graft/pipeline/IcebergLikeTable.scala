@@ -11,10 +11,9 @@ import scala.jdk.CollectionConverters._
   * lineage, and OPTIMISTIC atomic commits: the new version file is staged
   * to a temp file and published with an exclusive hard link, so two racing
   * committers cannot both claim version N and a reader can never observe a
-  * half-written metadata file. No Iceberg jar exists in this sandbox; this
-  * implements the same commit/snapshot/time-travel contract
-  * ([[TableFormat]], verified by `TableFormatConformance`) against plain
-  * files, and a real Iceberg catalog drops in behind the same trait.
+  * half-written metadata file. It implements Iceberg's commit/snapshot/
+  * time-travel contract against plain files; `q_snapshot_read` is its
+  * caller. Every record is JSON through [[Manifest]]'s codec.
   *
   * Metadata I/O follows the spec's shape:
   *  - each `vN.metadata.json` embeds the CUMULATIVE committed-partition
@@ -24,13 +23,15 @@ import scala.jdk.CollectionConverters._
   *    `committedAsOf` read exactly ONE metadata file regardless of how
   *    many versions exist;
   *  - each commit's DATA FILE list lives in its own manifest file
-  *    (`snap-<v>-<nonce>.manifest`, a delta — never rewritten), chained by
-  *    a parent pointer like a manifest list. The metadata files stay
-  *    O(#partitions) bytes instead of O(#data-files), and time travel
+  *    (`snap-<v>-<nonce>.manifest`: `{"parent": .., "files": [..]}`, a
+  *    delta — never rewritten), chained by a parent pointer like a
+  *    manifest list. The metadata files stay O(#partitions) bytes
+  *    instead of O(#data-files), and time travel
   *    (`dataFilesAsOf`) walks the chain: O(v) small delta reads, the same
   *    cost as real Iceberg reading a snapshot's manifest list + manifests.
   */
-class IcebergLikeTable(root: String) extends TableFormat {
+class IcebergLikeTable(root: String) {
+  import Manifest.{Json, field, putStrings, readJson, strings}
 
   private val metaDir: Path = Paths.get(root, "metadata")
   Files.createDirectories(metaDir)
@@ -44,7 +45,7 @@ class IcebergLikeTable(root: String) extends TableFormat {
     * crashed committer walks back to the last real version). Probes are
     * existence stats, not content reads — amortized O(1) with a live hint.
     */
-  override def currentSnapshot(): Long = {
+  def currentSnapshot(): Long = {
     val start =
       if (Files.exists(hintFile))
         try Files.readString(hintFile).trim.toLong catch { case _: Exception => 0L }
@@ -58,47 +59,23 @@ class IcebergLikeTable(root: String) extends TableFormat {
   protected case class Entry(snapshot: Long, partition: String, rows: Long,
                              manifest: String, allPartitions: Seq[String])
 
-  // ONE escape alphabet for both metadata JSON fields and manifest lines:
-  // quotes/backslashes (the JSON string atoms) AND newlines — a raw '\n'
-  // inside a partition name would keep the metadata line from ever
-  // re-matching FieldRe (Java '.' excludes \n), bricking every later read,
-  // and would split a manifest entry in two
-  private[graft] def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                case '\n' => "\\n"; case '\r' => "\\r"; case c => c.toString }
-  private[graft] def unesc(s: String): String =
-    """\\(.)""".r.replaceAllIn(s, m =>
-      java.util.regex.Matcher.quoteReplacement(m.group(1) match {
-        case "n" => "\n"; case "r" => "\r"; case other => other
-      }))
-  // string fields parse with escape-aware atoms so a '"' or '\' inside a
-  // partition name or file path round-trips exactly
-  private val Str = """"((?:[^"\\]|\\.)*)""""
-  private val FieldRe =
-    ("""\{"snapshot":(\d+),"parent":(-?\d+),"partition":""" + Str +
-      ""","rows":(\d+),"manifest":""" + Str +
-      ""","all_partitions":\[(.*?)\]\}""").r
-
-  private def strList(s: String): Seq[String] =
-    Str.r.findAllMatchIn(s).map(m => unesc(m.group(1))).toSeq
-
   // overridable (protected) so tests can COUNT metadata reads and assert
   // the O(1)-reads-per-commit contract mechanically
   protected def readEntry(v: Long): Option[Entry] = {
     val f = versionFile(v)
     if (!Files.exists(f)) None
-    else Files.readString(f).trim match {
-      case FieldRe(s, _, p, r, mf, aps) =>
-        Some(Entry(s.toLong, unesc(p), r.toLong, unesc(mf), strList(aps)))
+    else {
+      val n = readJson(f)
       // old generations inlined the file list ("files":[...]), which the
       // manifest layout dropped — that key is the discriminator, so real
       // corruption of NEW-format files still reports as corruption
-      case old if old.contains(""""files":[""") =>
+      if (n.has("files"))
         throw new IllegalStateException(
           s"metadata $f was written by an older format generation " +
             "(pre-manifest inline-file layout); rebuild the table or clear() it")
-      case other =>
-        throw new IllegalStateException(s"corrupt metadata $f: $other")
+      Some(Entry(field(n, "snapshot").asLong, field(n, "partition").asText,
+        field(n, "rows").asLong, field(n, "manifest").asText,
+        strings(field(n, "all_partitions"))))
     }
   }
 
@@ -113,13 +90,15 @@ class IcebergLikeTable(root: String) extends TableFormat {
       if (snapshot > head && head > 0) readEntry(head) else None
     }
 
-  // a manifest file: line 1 = parent manifest name (or "-" at the chain
-  // root), then one escaped data-file path per line (same alphabet as the
-  // JSON fields — newline-escaped, so a path never splits into two entries)
-  private def writeManifest(name: String, parent: String,
-                            files: Seq[String]): Unit =
-    Files.writeString(metaDir.resolve(name),
-      (parent +: files.map(esc)).mkString("\n"))
+  // a manifest file: {"parent": <parent manifest name, null at the chain
+  // root>, "files": [<this commit's data-file paths>]}
+  private def writeManifest(name: String, parent: Option[String],
+                            files: Seq[String]): Unit = {
+    val m = Json.createObjectNode()
+    parent.fold(m.putNull("parent"))(m.put("parent", _))
+    putStrings(m, "files", files)
+    Files.write(metaDir.resolve(name), Json.writeValueAsBytes(m))
+  }
 
   private def readManifestChain(name: String): Seq[String] = {
     // walk child -> root, then restore commit order (root first).
@@ -128,14 +107,14 @@ class IcebergLikeTable(root: String) extends TableFormat {
     // (readEntry's contract), never spin
     val rev = scala.collection.mutable.ArrayBuffer[Seq[String]]()
     val visited = scala.collection.mutable.HashSet[String]()
-    var cur = name
-    while (cur != "-") {
-      if (!visited.add(cur))
+    var cur: Option[String] = Some(name)
+    while (cur.isDefined) {
+      if (!visited.add(cur.get))
         throw new IllegalStateException(
-          s"corrupt manifest chain: cycle at '$cur'")
-      val lines = Files.readString(metaDir.resolve(cur)).split("\n", -1).toSeq
-      rev += lines.drop(1).filter(_.nonEmpty).map(unesc)
-      cur = lines.head
+          s"corrupt manifest chain: cycle at '${cur.get}'")
+      val m = readJson(metaDir.resolve(cur.get))
+      rev += strings(field(m, "files"))
+      cur = Option(field(m, "parent").textValue)
     }
     rev.reverse.flatten.toSeq
   }
@@ -146,8 +125,8 @@ class IcebergLikeTable(root: String) extends TableFormat {
     * Idempotent per partition name: a resumed run re-committing an already
     * committed partition is a no-op, not a duplicate snapshot.
     */
-  override def commitPartition(partition: String, rowsOut: Long,
-                               inputFiles: Seq[String]): Unit = {
+  def commitPartition(partition: String, rowsOut: Long,
+                      inputFiles: Seq[String]): Unit = {
     var committed = false
     while (!committed) {
       // Linearizable duplicate protection: read head ONCE, validate the
@@ -169,15 +148,15 @@ class IcebergLikeTable(root: String) extends TableFormat {
       // then delete the manifest the winner's metadata references); readers
       // only follow pointers from CLAIMED metadata
       val mfName = s"snap-$v-${java.util.UUID.randomUUID()}.manifest"
-      writeManifest(mfName, headEntry.map(_.manifest).getOrElse("-"),
-        inputFiles)
-      val allPartitions = priorPartitions :+ partition
-      def arr(xs: Seq[String]) = xs.map(x => "\"" + esc(x) + "\"").mkString(",")
-      val json = s"""{"snapshot":$v,"parent":$head,"partition":"${esc(partition)}","rows":$rowsOut,"manifest":"${esc(mfName)}","all_partitions":[${arr(allPartitions)}]}"""
+      writeManifest(mfName, headEntry.map(_.manifest), inputFiles)
+      val meta = Json.createObjectNode()
+        .put("snapshot", v).put("parent", head).put("partition", partition)
+        .put("rows", rowsOut).put("manifest", mfName)
+      putStrings(meta, "all_partitions", priorPartitions :+ partition)
       var tmp: Path = null
       try {
         tmp = Files.createTempFile(metaDir, s".v$v-", ".tmp")
-        Files.write(tmp, json.getBytes("UTF-8"),
+        Files.write(tmp, Json.writeValueAsBytes(meta),
           StandardOpenOption.TRUNCATE_EXISTING)
         Files.createLink(versionFile(v), tmp) // exclusive: throws if claimed
         committed = true
@@ -197,14 +176,14 @@ class IcebergLikeTable(root: String) extends TableFormat {
     }
   }
 
-  override def isPartitionCommitted(partition: String): Boolean =
+  def isPartitionCommitted(partition: String): Boolean =
     committed().contains(partition)
 
-  override def committed(): Set[String] =
+  def committed(): Set[String] =
     committedAsOf(currentSnapshot())
 
   /** ONE metadata read: the cumulative set embedded at `snapshot`. */
-  override def committedAsOf(snapshot: Long): Set[String] =
+  def committedAsOf(snapshot: Long): Set[String] =
     entryAt(snapshot).map(_.allPartitions.toSet).getOrElse(Set.empty)
 
   /** Time travel over the DATA: every data file visible at `snapshot` —
@@ -217,7 +196,7 @@ class IcebergLikeTable(root: String) extends TableFormat {
       .map(e => readManifestChain(e.manifest).distinct)
       .getOrElse(Seq.empty)
 
-  override def clear(): Unit = {
+  def clear(): Unit = {
     val stream = Files.list(metaDir)
     try stream.iterator().asScala.toSeq.foreach(Files.deleteIfExists)
     finally stream.close()

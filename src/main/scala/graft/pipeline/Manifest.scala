@@ -1,8 +1,12 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 /** Run manifest: per-partition commit log with lineage + metrics, the
   * engine's durable state for checkpointed resume.
@@ -13,76 +17,56 @@ import scala.jdk.CollectionConverters._
   * partition only commits after ALL its sinks succeed (matching the route
   * error propagation in routereceiver/receiver.go:84-99).
   *
-  * Layout: `<manifestDir>/<partitionKey>.json`, written atomically
-  * (tmp + rename). This is the "Iceberg-shaped" snapshot log of SURVEY §7 —
-  * one entry per hour partition; a real Iceberg catalog can replace the
-  * directory without touching callers (the [[Manifest]] API is the seam).
+  * Layout: `<manifestDir>/<stem>.json`, written atomically (tmp + rename),
+  * where the stem is the partition name with every character outside
+  * `[A-Za-z0-9=_-]` replaced by `_`; the entry body keeps the raw name.
+  * Every commit also appends `_snapshots/<seq>.json`, the lineage log.
   */
-final class Manifest(manifestDir: String) extends TableFormat {
-
-  // ---- TableFormat conformance (the Iceberg-replaceable surface) ----
-  override def commitPartition(partition: String, rowsOut: Long,
-                               inputFiles: Seq[String]): Unit =
-    commit(PartitionEntry(partition, "committed", rowsOut,
-      Map("out" -> rowsOut), inputFiles, 0L))
-  override def isPartitionCommitted(partition: String): Boolean =
-    isCommitted(partition)
-  override def committed(): Set[String] = committedPartitions()
-  override def committedAsOf(snapshot: Long): Set[String] =
-    committedPartitionsAsOf(snapshot).map(sanitize)
+final class Manifest(manifestDir: String) {
+  import Manifest._
 
   private val dir: Path = Paths.get(manifestDir)
   Files.createDirectories(dir)
 
-  case class PartitionEntry(partition: String, status: String,
-                            rowsIn: Long, sinkCounts: Map[String, Long],
-                            inputFiles: Seq[String], wallMs: Long,
-                            rowsOut: Long = -1L) {
-    /** rows_out defaults to the sink total when not supplied separately. */
-    def rowsWritten: Long = if (rowsOut >= 0) rowsOut else sinkCounts.values.sum
-  }
-
   /** ShouldParse parity: a partition is skipped iff previously committed. */
   def isCommitted(partition: String): Boolean =
-    Files.exists(dir.resolve(s"${sanitize(partition)}.json"))
+    Files.exists(dir.resolve(s"${stem(partition)}.json"))
 
-  def committedPartitions(): Set[String] = {
-    val s = Files.list(dir)
-    try s.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json"))
-      .toSet
-    finally s.close()
+  /** Stems of the committed partitions: one directory listing. */
+  def committedPartitions(): Set[String] = jsonStems(dir).toSet
+
+  /** The partitions of `partitions` not yet committed, in order: one
+    * directory listing, however many partitions are asked about.
+    */
+  def uncommitted(partitions: Seq[String]): Seq[String] = {
+    val done = committedPartitions()
+    partitions.filterNot(p => done.contains(stem(p)))
   }
 
   /** Commit a partition: all-sinks-succeeded is the caller's contract; the
     * write is atomic so a kill mid-commit leaves either no entry (partition
     * re-runs, idempotent because sink writes are dynamic-partition
-    * overwrites) or a complete one.
+    * overwrites) or a complete one. `rows_out` is Σ`sinkCounts`.
     */
-  def commit(e: PartitionEntry): Unit = {
-    val json =
-      s"""{"partition": ${q(e.partition)}, "status": ${q(e.status)},
-         | "rows_in": ${e.rowsIn}, "rows_out": ${e.rowsWritten},
-         | "sink_counts": {${e.sinkCounts.map { case (k, v) => s"${q(k)}: $v" }.mkString(", ")}},
-         | "input_files": [${e.inputFiles.map(q).mkString(", ")}],
-         | "wall_ms": ${e.wallMs}}""".stripMargin
-    val target = dir.resolve(s"${sanitize(e.partition)}.json")
-    val tmp = dir.resolve(s".${sanitize(e.partition)}.json.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    appendSnapshot(e)
+  def commit(partition: String, rowsIn: Long, sinkCounts: Map[String, Long],
+             inputFiles: Seq[String], wallMs: Long): Unit = {
+    val rowsOut = sinkCounts.values.sum
+    val e = Json.createObjectNode()
+      .put("partition", partition).put("status", "committed")
+      .put("rows_in", rowsIn).put("rows_out", rowsOut)
+    val counts = e.putObject("sink_counts")
+    sinkCounts.foreach { case (k, v) => counts.put(k, v) }
+    putStrings(e, "input_files", inputFiles)
+    e.put("wall_ms", wallMs)
+    writeAtomically(dir.resolve(s"${stem(partition)}.json"), e)
+    appendSnapshot(partition, rowsOut, inputFiles)
   }
 
   // -------------------------------------------------------------------
-  // Iceberg-shaped snapshot log: every commit also appends a
-  // sequence-numbered snapshot entry with a parent pointer — the lineage
-  // chain a real Iceberg catalog keeps per table commit. As-of reads
-  // reconstruct the committed partition set at any earlier snapshot
-  // (time travel over the run's own history). A real Iceberg catalog can
-  // replace this directory without touching callers.
+  // Snapshot log: every commit also appends a sequence-numbered snapshot
+  // entry with a parent pointer — the lineage chain an Iceberg catalog
+  // keeps per table commit. As-of reads reconstruct the committed
+  // partition set at any earlier snapshot.
   // -------------------------------------------------------------------
   private val snapDir: Path = dir.resolve("_snapshots")
 
@@ -90,32 +74,26 @@ final class Manifest(manifestDir: String) extends TableFormat {
   // commit after (a per-commit full listing would be O(N²) over a run)
   private var lastSeq: Long = -1L
 
-  private def snapshotSeqs(): Seq[Long] = {
-    if (!Files.isDirectory(snapDir)) return Seq.empty
-    val s = Files.list(snapDir)
-    try s.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".json") && !n.startsWith("."))
-      .map(_.stripSuffix(".json").toLong)
-      .toSeq.sorted
-    finally s.close()
-  }
+  private def snapshotSeqs(): Seq[Long] =
+    if (!Files.isDirectory(snapDir)) Seq.empty
+    else jsonStems(snapDir).map(_.toLong).sorted
 
-  private def appendSnapshot(e: PartitionEntry): Unit = {
+  private def appendSnapshot(partition: String, rowsOut: Long,
+                             inputFiles: Seq[String]): Unit = {
     Files.createDirectories(snapDir)
     if (lastSeq < 0) lastSeq = snapshotSeqs().lastOption.getOrElse(0L)
     val seq = lastSeq + 1
-    val parent = seq - 1
-    val json =
-      s"""{"sequence_number": $seq, "parent_id": $parent,
-         | "partition": ${q(e.partition)}, "rows_out": ${e.rowsWritten},
-         | "input_files": [${e.inputFiles.map(q).mkString(", ")}]}""".stripMargin
-    val tmp = snapDir.resolve(s".$seq.json.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, snapDir.resolve(f"$seq%d.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val s = Json.createObjectNode()
+      .put("sequence_number", seq).put("parent_id", seq - 1)
+      .put("partition", partition).put("rows_out", rowsOut)
+    putStrings(s, "input_files", inputFiles)
+    writeAtomically(snapDir.resolve(s"$seq.json"), s)
     lastSeq = seq
   }
+
+  /** The raw partition name a snapshot entry records. */
+  private def snapshotPartition(seq: Long): String =
+    field(readJson(snapDir.resolve(s"$seq.json")), "partition").asText
 
   // Crash reconciliation: commit() writes the partition entry, then the
   // snapshot entry — a kill between the two leaves a committed partition
@@ -124,62 +102,88 @@ final class Manifest(manifestDir: String) extends TableFormat {
   // construction: re-append a snapshot entry for every committed partition
   // the lineage is missing, reconstructed from the partition file itself.
   locally {
-    val inLineage: Set[String] =
-      if (!Files.isDirectory(snapDir)) Set.empty
-      else snapshotSeqs().flatMap { n =>
-        val body = new String(Files.readAllBytes(snapDir.resolve(s"$n.json")),
-          StandardCharsets.UTF_8)
-        """"partition":\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(body)
-          .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-      }.toSet
-    val lineageStems = inLineage.map(sanitize)
-    committedPartitions().toSeq.sorted
-      .filterNot(stem => lineageStems.contains(stem)).foreach { stem =>
-        val body = new String(
-          Files.readAllBytes(dir.resolve(s"$stem.json")), StandardCharsets.UTF_8)
-        // the raw (unsanitized) partition name lives in the entry body
-        val p = """"partition":\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(body)
-          .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-          .getOrElse(stem)
-        val rowsOut = """"rows_out":\s*(-?\d+)""".r.findFirstMatchIn(body)
-          .map(_.group(1).toLong).getOrElse(-1L)
-        val files = """"input_files":\s*\[([^\]]*)\]""".r.findFirstMatchIn(body)
-          .map(_.group(1)).getOrElse("")
-          .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq
-        appendSnapshot(PartitionEntry(p, "committed", -1L, Map.empty,
-          files, 0L, rowsOut))
-      }
+    val inLineage = snapshotSeqs().map(n => stem(snapshotPartition(n))).toSet
+    (committedPartitions() -- inLineage).toSeq.sorted.foreach { st =>
+      val e = readJson(dir.resolve(s"$st.json"))
+      appendSnapshot(field(e, "partition").asText, field(e, "rows_out").asLong,
+        strings(field(e, "input_files")))
+    }
   }
 
   /** Current snapshot id (0 = empty table). */
   def currentSnapshot(): Long = snapshotSeqs().lastOption.getOrElse(0L)
 
-  /** Time travel: the committed partition set as of snapshot `seq`. */
+  /** Time travel: stems of the partitions committed as of snapshot `seq`,
+    * the same form as [[committedPartitions]].
+    */
   def committedPartitionsAsOf(seq: Long): Set[String] =
-    snapshotSeqs().filter(_ <= seq).map { n =>
-      val body = new String(Files.readAllBytes(snapDir.resolve(s"$n.json")),
-        StandardCharsets.UTF_8)
-      """"partition":\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(body)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-        .getOrElse(throw new IllegalStateException(s"corrupt snapshot $n"))
-    }.toSet
+    snapshotSeqs().filter(_ <= seq).map(n => stem(snapshotPartition(n))).toSet
 
   def clear(): Unit = {
-    val s = Files.list(dir)
-    try s.iterator().asScala.filter(_.toString.endsWith(".json")).foreach(Files.delete)
-    finally s.close()
     // the snapshot lineage must clear WITH the partition state, else
     // time travel would claim cleared partitions are still committed
-    if (Files.isDirectory(snapDir)) {
-      val sn = Files.list(snapDir)
-      try sn.iterator().asScala.filter(_.toString.endsWith(".json")).foreach(Files.delete)
-      finally sn.close()
+    Seq(dir, snapDir).filter(Files.isDirectory(_)).foreach { d =>
+      val s = Files.list(d)
+      try s.iterator().asScala.filter(_.toString.endsWith(".json")).foreach(Files.delete)
+      finally s.close()
     }
     lastSeq = 0L
   }
+}
 
-  private def sanitize(s: String): String = s.replaceAll("[^A-Za-z0-9=_-]", "_")
-  private def q(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+object Manifest {
+
+  /** The one JSON codec of the commit logs ([[Manifest]] and
+    * [[IcebergLikeTable]]); trailing content after a record is corruption.
+    */
+  private[pipeline] val Json: ObjectMapper = JsonMapper.builder()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS).build()
+
+  /** A commit-log record: a JSON object, or an `IllegalStateException`
+    * naming the file.
+    */
+  private[pipeline] def readJson(f: Path): JsonNode = {
+    val n = try Json.readTree(f.toFile) catch {
+      case e: JsonProcessingException =>
+        throw new IllegalStateException(s"corrupt metadata $f: ${e.getOriginalMessage}")
+    }
+    if (n == null || !n.isObject) throw new IllegalStateException(s"corrupt metadata $f")
+    n
+  }
+
+  /** A required field of a record read by [[readJson]]. */
+  private[pipeline] def field(n: JsonNode, key: String): JsonNode =
+    Option(n.get(key)).getOrElse(
+      throw new IllegalStateException(s"corrupt metadata: no '$key' in $n"))
+
+  /** The strings of a JSON array. */
+  private[pipeline] def strings(n: JsonNode): Seq[String] =
+    n.elements().asScala.map(_.asText).toSeq
+
+  /** Add `xs` to `n` as the JSON array `key`. */
+  private[pipeline] def putStrings(n: ObjectNode, key: String, xs: Seq[String]): Unit = {
+    val arr = n.putArray(key)
+    xs.foreach(x => arr.add(x))
+  }
+
+  /** Write `n` to `target` through a dot-named sibling and an atomic rename:
+    * readers see the whole record or none.
+    */
+  private def writeAtomically(target: Path, n: JsonNode): Unit = {
+    val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
+    Files.write(tmp, Json.writeValueAsBytes(n))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Stems of the `*.json` files of `d` (staging files end in `.tmp`). */
+  private def jsonStems(d: Path): Seq[String] = {
+    val s = Files.list(d)
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".json")).map(_.stripSuffix(".json")).toSeq
+    finally s.close()
+  }
+
+  private def stem(partition: String): String =
+    partition.replaceAll("[^A-Za-z0-9=_-]", "_")
 }

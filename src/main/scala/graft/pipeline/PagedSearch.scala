@@ -128,11 +128,8 @@ object PagedSearch {
         pageDf.observe(obs, count(lit(1)).as("n"))
           .write.mode("append").parquet(outDir)
         val n = obs.get("n").asInstanceOf[Long]
-        manifest.commit(manifest.PartitionEntry(
-          partition = s"page=$p", status = "committed", rowsIn = n,
-          sinkCounts = Map("out" -> n),
-          inputFiles = Seq(s"$storePath/page=$p"),
-          wallMs = (System.nanoTime() - t0) / 1000000L))
+        manifest.commit(s"page=$p", n, Map("out" -> n),
+          Seq(s"$storePath/page=$p"), (System.nanoTime() - t0) / 1000000L)
         exported += 1; rows += n
       }
     }

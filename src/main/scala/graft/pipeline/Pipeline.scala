@@ -233,11 +233,14 @@ object PipelineRunner {
     val footerOptions = HadoopReadOptions.builder(conf).build()
     val outFs = new HPath(outRoot).getFileSystem(conf)
     val all = discoverPartitions(spark, inputPath)
-    val committed = manifest.committedPartitions()
-    val todo = all.filterNot(p => committed.contains(sanitize(p)))
+    val todo = manifest.uncommitted(all)
     var rowsIn = 0L
     var rowsOut = 0L
     val sinkTotals = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
+    // the first group's inferred schema serves every later group: schema
+    // merging is off, so one file's schema is the table's, and a given
+    // schema skips the inference job
+    var schema: Option[org.apache.spark.sql.types.StructType] = None
 
     todo.grouped(groupSize).foreach { group =>
       // randomfailureprocessor injection point: per consume call (= per
@@ -247,9 +250,9 @@ object PipelineRunner {
       val t0 = System.nanoTime()
       // one pruned scan for the whole group
       val paths = group.map(p => s"$inputPath/$p")
-      val input = spark.read
-        .option("basePath", inputPath)
-        .parquet(paths: _*)
+      val reader = spark.read.option("basePath", inputPath)
+      val input = schema.fold(reader)(reader.schema).parquet(paths: _*)
+      schema = Some(input.schema)
       // true input volume per partition (filter/sample ops may drop rows
       // downstream, so rows_in ≠ rows written): footer row counts of the
       // files the scan's own file index listed, keyed by their
@@ -290,16 +293,13 @@ object PipelineRunner {
       group.foreach { p =>
         val sinkCounts = outCounts(p)
         val pIn = inCounts.getOrElse(p, 0L)
-        val pOut = sinkCounts.values.sum
         rowsIn += pIn
-        rowsOut += pOut
+        rowsOut += sinkCounts.values.sum
         sinkCounts.foreach { case (k, v) => sinkTotals(k) += v }
-        manifest.commit(manifest.PartitionEntry(
-          sanitize(p), "committed", pIn, sinkCounts,
-          Seq(s"$inputPath/$p"), wallMs, rowsOut = pOut))
+        manifest.commit(p, pIn, sinkCounts, Seq(s"$inputPath/$p"), wallMs)
       }
     }
-    RunReport(todo.size, committed.size, rowsIn, sinkTotals.toMap, rowsOut)
+    RunReport(todo.size, all.size - todo.size, rowsIn, sinkTotals.toMap, rowsOut)
   }
 
   /** Row count of one parquet file, summed over its footer's row groups and
@@ -327,6 +327,4 @@ object PipelineRunner {
   private def partitionKey(file: HPath): String =
     Iterator.iterate(file.getParent)(_.getParent).take(4)
       .map(_.getName).toSeq.reverse.mkString("/")
-
-  private def sanitize(s: String): String = s.replaceAll("[^A-Za-z0-9=_-]", "_")
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -142,10 +142,10 @@ object StreamingPipeline {
       GroupStateTimeout.EventTimeTimeout, forceFlushTimeoutMs)
     .toDF()
 
-  /** Exactly-once streaming fan-out through the SAME durable commit plane
-    * the batch runner uses (Manifest/TableFormat — §2E checkpoint/resume):
-    * a `foreachBatch` sink whose unit of commitment is the MICRO-BATCH,
-    * the streaming analogue of PipelineRunner's per-partition commit.
+  /** Exactly-once streaming fan-out through the same commit log the batch
+    * runner uses (`pipeline.Manifest` — §2E checkpoint/resume): a
+    * `foreachBatch` sink whose unit of commitment is the MICRO-BATCH, the
+    * streaming analogue of PipelineRunner's per-partition commit.
     *
     * Structured Streaming re-delivers an uncommitted micro-batch after a
     * restart with the SAME batchId (the reference's at-least-once exporter
@@ -161,40 +161,38 @@ object StreamingPipeline {
     *     sharing an hour (or hours sharing a batch) never clobber each
     *     other, the hazard a plain (route, hour) overwrite would have;
     *   - the manifest entry commits AFTER the write (all-sinks-succeeded,
-    *     same contract as the batch runner), with per-sink counts from one
-    *     cached pass over the bounded micro-batch (NOT the batch runner's
-    *     written-files count: re-listing the sinks tree every micro-batch
-    *     would be O(total partitions) per batch, superlinear over a run).
+    *     same contract as the batch runner), with per-sink counts from an
+    *     `observe` tap on the write itself — one `count_if` per sink, so a
+    *     sink the batch sent nothing counts 0 — and no second pass over the
+    *     micro-batch (NOT the batch runner's written-files count: re-listing
+    *     the sinks tree every micro-batch would be O(total partitions) per
+    *     batch, superlinear over a run).
+    *
+    * The manifest is opened once per sink, not per micro-batch: opening it
+    * reads every lineage entry.
     */
   def manifestSink(spec: graft.pipeline.Pipeline.PipelineSpec,
                    outRoot: String): (DataFrame, Long) => Unit = {
+    require(spec.sinks.nonEmpty, s"pipeline '${spec.name}' has no sink to count")
+    val manifest = new graft.pipeline.Manifest(s"$outRoot/_manifest")
     (df, batchId) =>
-      val spark = df.sparkSession
-      val manifest = new graft.pipeline.Manifest(s"$outRoot/_manifest")
       val key = f"batch=$batchId%019d"
       if (!manifest.isCommitted(key)) {
         val t0 = System.nanoTime()
+        val spark = df.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        // persist the micro-batch once for the count + the write: counting
-        // from the WRITTEN files (the batch runner's idiom) would re-list
-        // the whole sinks tree every micro-batch — O(total partitions) per
-        // batch, superlinear across a long run — while a micro-batch is
-        // bounded by the trigger, so one cached pass is the scale-safe form
-        val tagged = graft.pipeline.Pipeline.compile(spec, spark)(df)
+        val obs = new Observation(s"sinks_$batchId")
+        val taps = spec.sinks.map(s => count_if(col("route") === s).as(s))
+        graft.pipeline.Pipeline.compile(spec, spark)(df)
           .withColumn("batch_id", lit(batchId))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val bySink: Map[String, Long] = tagged
-            .groupBy(col("route")).agg(count(lit(1)).as("n"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          tagged.write.mode("overwrite")
-            .options(graft.pipeline.PipelineRunner.WriterOptions)
-            .partitionBy("route", "year", "month", "day", "hour", "batch_id")
-            .parquet(s"$outRoot/sinks")
-          manifest.commit(manifest.PartitionEntry(
-            key, "committed", bySink.values.sum, bySink, Seq.empty,
-            (System.nanoTime() - t0) / 1000000))
-        } finally tagged.unpersist()
+          .observe(obs, taps.head, taps.tail: _*)
+          .write.mode("overwrite")
+          .options(graft.pipeline.PipelineRunner.WriterOptions)
+          .partitionBy("route", "year", "month", "day", "hour", "batch_id")
+          .parquet(s"$outRoot/sinks")
+        val bySink = spec.sinks.map(s => s -> obs.get(s).asInstanceOf[Long]).toMap
+        manifest.commit(key, bySink.values.sum, bySink, Seq.empty,
+          (System.nanoTime() - t0) / 1000000)
       }
   }
 

@@ -1094,6 +1094,24 @@ class StreamingSpec extends SparkTestBase {
       .groupBy("route").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(streamedCounts == batchCounts && streamedCounts.values.sum == 6000L)
+    // every micro-batch's manifest entry carries its own per-sink counts,
+    // zeros included, equal to that batch's rows on disk
+    val onDisk = spark.read.option("basePath", s"$out/sinks").parquet(s"$out/sinks")
+      .groupBy("batch_id", "route").count().collect()
+      .map(r => (r.getAs[Number](0).longValue, r.getString(1)) -> r.getLong(2)).toMap
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val entries = new java.io.File(s"$out/_manifest").listFiles()
+      .filter(_.getName.endsWith(".json")).map(mapper.readTree)
+    assert(entries.length > 1, "maxFilesPerTrigger must force several micro-batches")
+    entries.foreach { e =>
+      val id = e.get("partition").asText.stripPrefix("batch=").toLong
+      val counts = Pipeline.Canonical.sinks.map(k => k -> e.get("sink_counts").get(k)).toMap
+      assert(counts.values.forall(_ != null), s"batch $id: ${e.get("sink_counts")}")
+      Pipeline.Canonical.sinks.foreach { k =>
+        assert(counts(k).asLong == onDisk.getOrElse((id, k), 0L), s"batch $id $k")
+      }
+      assert(e.get("rows_in").asLong == counts.values.map(_.asLong).sum, s"batch $id")
+    }
 
     // replay semantics, driven directly (a fresh outRoot isolates them):
     val out2 = s"$base/out2"

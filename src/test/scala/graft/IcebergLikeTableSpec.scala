@@ -1,34 +1,28 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-import graft.pipeline.{Manifest, TableFormat}
-
-/** Trait-level conformance for the table-format seam: any implementation —
-  * today's directory manifest, a future Iceberg catalog — must pass these
-  * verbatim. The suite is abstract over the factory so a real Iceberg impl
-  * only supplies `newFormat()`.
+/** The Iceberg-layout filesystem table: the commit/snapshot contract
+  * (exactly-once commits, monotone snapshots, as-of reads, reopen, clear),
+  * REAL time-travel reads over parquet data files pinned by snapshot, a
+  * stale version-hint healing, and the optimistic-claim exclusivity that
+  * makes racing committers safe.
   */
-abstract class TableFormatConformance extends AnyFunSuite {
+class IcebergLikeTableSpec extends SparkTestBase {
+  import graft.pipeline.IcebergLikeTable
 
-  /** A FRESH, empty format instance backed by fresh storage. */
-  def newFormat(): TableFormat
+  private def newTable(): IcebergLikeTable =
+    new IcebergLikeTable(java.nio.file.Files.createTempDirectory("icb").toString)
 
-  /** Reopen the same storage (crash-recovery view); formats that cannot
-    * reopen may return the same instance.
-    */
-  def reopen(f: TableFormat): TableFormat
-
-  test("conformance: empty table is snapshot 0 with no partitions") {
-    val f = newFormat()
+  test("empty table is snapshot 0 with no partitions") {
+    val f = newTable()
     assert(f.currentSnapshot() == 0L)
     assert(f.committed().isEmpty)
     assert(f.committedAsOf(0L).isEmpty)
   }
 
-  test("conformance: commits are visible, monotone, and exactly-once per name") {
-    val f = newFormat()
+  test("commits are visible, monotone, and exactly-once per name") {
+    val f = newTable()
     f.commitPartition("hour=2024-01-01-00", 10L, Seq("a.parquet"))
     f.commitPartition("hour=2024-01-01-01", 20L, Seq("b.parquet"))
     assert(f.isPartitionCommitted("hour=2024-01-01-00"))
@@ -41,8 +35,8 @@ abstract class TableFormatConformance extends AnyFunSuite {
     assert(f.committed().size == 2)
   }
 
-  test("conformance: as-of reads reconstruct history; head as-of equals live") {
-    val f = newFormat()
+  test("as-of reads reconstruct history; head as-of equals live") {
+    val f = newTable()
     f.commitPartition("p1", 1L, Seq("f1"))
     val s1 = f.currentSnapshot()
     f.commitPartition("p2", 2L, Seq("f2"))
@@ -51,18 +45,19 @@ abstract class TableFormatConformance extends AnyFunSuite {
     assert(f.committedAsOf(f.currentSnapshot()) == f.committed())
   }
 
-  test("conformance: reopened storage sees the same committed state") {
-    val f = newFormat()
+  test("reopened storage sees the same committed state") {
+    val root = java.nio.file.Files.createTempDirectory("icb_reopen").toString
+    val f = new IcebergLikeTable(root)
     f.commitPartition("p1", 1L, Seq("f1"))
     f.commitPartition("p2", 2L, Seq("f2"))
-    val g = reopen(f)
+    val g = new IcebergLikeTable(root)
     assert(g.committed() == f.committed())
     assert(g.currentSnapshot() == f.currentSnapshot())
     assert(g.isPartitionCommitted("p1"))
   }
 
-  test("conformance: clear resets partitions AND lineage together") {
-    val f = newFormat()
+  test("clear resets partitions AND lineage together") {
+    val f = newTable()
     f.commitPartition("p1", 1L, Seq("f1"))
     f.clear()
     assert(f.committed().isEmpty && f.currentSnapshot() == 0L)
@@ -70,43 +65,6 @@ abstract class TableFormatConformance extends AnyFunSuite {
     f.commitPartition("p9", 9L, Seq("f9"))
     assert(f.committedAsOf(f.currentSnapshot()) == f.committed())
   }
-}
-
-/** The directory-manifest implementation under the conformance contract. */
-class ManifestConformanceSpec extends TableFormatConformance {
-  private val dirs = scala.collection.mutable.Map[TableFormat, String]()
-
-  override def newFormat(): TableFormat = {
-    val d = java.nio.file.Files.createTempDirectory("tf_conf").toString
-    val m = new Manifest(d)
-    dirs(m) = d
-    m
-  }
-
-  override def reopen(f: TableFormat): TableFormat = new Manifest(dirs(f))
-}
-
-/** The Iceberg-layout filesystem implementation under the same contract. */
-class IcebergLikeConformanceSpec extends TableFormatConformance {
-  private val dirs = scala.collection.mutable.Map[TableFormat, String]()
-
-  override def newFormat(): TableFormat = {
-    val d = java.nio.file.Files.createTempDirectory("icb_conf").toString
-    val t = new graft.pipeline.IcebergLikeTable(d)
-    dirs(t) = d
-    t
-  }
-
-  override def reopen(f: TableFormat): TableFormat =
-    new graft.pipeline.IcebergLikeTable(dirs(f))
-}
-
-/** Beyond the metadata contract: REAL time-travel reads over parquet data
-  * files pinned by snapshot, a stale version-hint healing, and the
-  * optimistic-claim exclusivity that makes racing committers safe.
-  */
-class IcebergLikeTableSpec extends SparkTestBase {
-  import graft.pipeline.IcebergLikeTable
 
   test("snapshot-pinned scans read exactly the files visible at that snapshot") {
     import spark.implicits._
@@ -153,9 +111,11 @@ class IcebergLikeTableSpec extends SparkTestBase {
     val m1 = manifestOf("snap-1-"); val m2 = manifestOf("snap-2-")
     // corrupt snap-1's parent pointer to point at its own child: the
     // child->root walk becomes snap-2 -> snap-1 -> snap-2 -> ...
-    val lines = java.nio.file.Files.readString(m1).split("\n", -1)
-    java.nio.file.Files.writeString(m1,
-      (m2.getFileName.toString +: lines.drop(1).toSeq).mkString("\n"))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val delta = mapper.readTree(m1.toFile)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    delta.put("parent", m2.getFileName.toString)
+    mapper.writeValue(m1.toFile, delta)
     val fresh = new IcebergLikeTable(root)
     val ex = intercept[IllegalStateException] {
       fresh.dataFilesAsOf(fresh.currentSnapshot())
@@ -166,9 +126,7 @@ class IcebergLikeTableSpec extends SparkTestBase {
   test("partition names and file paths with quotes/backslashes/newlines round-trip") {
     val root = java.nio.file.Files.createTempDirectory("icb_esc").toString
     val t = new IcebergLikeTable(root)
-    // newlines are the nastiest case: unescaped they would both split a
-    // manifest line AND keep the one-line metadata JSON from ever
-    // re-matching its extractor (Java '.' excludes \n)
+    // quotes, backslashes and newlines must survive the JSON records
     val oddName = "hour=\"00\"\\back\nslash"
     val oddFile = "/data/file \"v1\"\\part\n2.parquet"
     t.commitPartition(oddName, 1L, Seq(oddFile, "/plain.parquet"))

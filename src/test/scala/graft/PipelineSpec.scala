@@ -145,7 +145,6 @@ class PipelineSpec extends SparkTestBase {
     PipelineRunner.run(spark, spec, s"$base/in", s"$base/out", groupSize = 2)
     def key(r: org.apache.spark.sql.Row, from: Int): String =
       s"year=${r.get(from)}/month=${r.get(from + 1)}/day=${r.get(from + 2)}/hour=${r.get(from + 3)}"
-        .replaceAll("[^A-Za-z0-9=_-]", "_")
     val parts = Seq(col("year"), col("month"), col("day"), col("hour"))
     val inCounts = spark.read.parquet(s"$base/in").groupBy(parts: _*).count()
       .collect().map(r => key(r, 0) -> r.getLong(4)).toMap
@@ -201,6 +200,13 @@ class PipelineSpec extends SparkTestBase {
       val n = jobsOf(PipelineRunner.run(spark, Canonical, s"$base/in", s"$base/out",
         groupSize = parts.size))
       assert(n <= 4, s"one group ran $n jobs")
+      // later groups reuse the first group's schema: no inference job
+      assert(parts.size >= 3, s"need several groups, got ${parts.size} partitions")
+      val groupSize = (parts.size + 2) / 3
+      val g = (parts.size + groupSize - 1) / groupSize
+      val multi = jobsOf(PipelineRunner.run(spark, Canonical, s"$base/in",
+        s"$base/out_multi", groupSize = groupSize))
+      assert(multi == n + (g - 1) * (n - 1), s"$g groups ran $multi jobs, one group $n")
     } finally spark.sparkContext.removeSparkListener(listener)
     Bench.deleteRec(base)
   }
@@ -247,8 +253,7 @@ class ResumeSpec extends SparkTestBase {
     val manifest = new Manifest(s"$out/_manifest")
     val (done, todo) = parts.splitAt(parts.size / 2)
     done.foreach { p =>
-      manifest.commit(manifest.PartitionEntry(
-        p.replaceAll("[^A-Za-z0-9=_-]", "_"), "committed", 0L, Map.empty, Seq(p), 0L))
+      manifest.commit(p, 0L, Map.empty, Seq(p), 0L)
     }
 
     val resumed = PipelineRunner.run(spark, Pipeline.Canonical, input, out)
@@ -365,9 +370,7 @@ class ResumeSpec extends SparkTestBase {
     val manifest = new Manifest(s"$out/_manifest")
     manifest.clear()
     parts.init.foreach { p =>
-      manifest.commit(manifest.PartitionEntry(
-        p.replaceAll("[^A-Za-z0-9=_-]", "_"), "committed", 0L, Map.empty,
-        Seq(p), 0L))
+      manifest.commit(p, 0L, Map.empty, Seq(p), 0L)
     }
     // inject a partial extra part file into each of the victim's leaf dirs
     // (a killed writer's orphaned output): a COPY of a real part file, so
@@ -429,19 +432,22 @@ class ResumeSpec extends SparkTestBase {
     val base = java.nio.file.Files.createTempDirectory("snap").toString
     val m = new Manifest(base)
     Seq("p1", "p2", "p3").foreach { p =>
-      m.commit(m.PartitionEntry(p, "committed", 1L, Map("out" -> 1L), Seq(p), 0L))
+      m.commit(p, 1L, Map("out" -> 1L), Seq(p), 0L)
     }
     assert(m.currentSnapshot() == 3L)
     assert(m.committedPartitionsAsOf(1L) == Set("p1"))
     assert(m.committedPartitionsAsOf(2L) == Set("p1", "p2"))
     assert(m.committedPartitionsAsOf(m.currentSnapshot()) == Set("p1", "p2", "p3"))
     // as-of matches the live view at head
-    assert(m.committedPartitionsAsOf(3L).map(_.replaceAll("[^A-Za-z0-9=_-]", "_"))
-      == m.committedPartitions())
+    assert(m.committedPartitionsAsOf(3L) == m.committedPartitions())
+    assert(m.isCommitted("p1") && !m.isCommitted("p4"))
+    // re-committing a partition does not duplicate the listing
+    m.commit("p1", 1L, Map("out" -> 1L), Seq("p1"), 0L)
+    assert(m.committedPartitions() == Set("p1", "p2", "p3"))
     // clear() resets the snapshot lineage WITH the partition state
     m.clear()
     assert(m.currentSnapshot() == 0L && m.committedPartitions().isEmpty)
-    m.commit(m.PartitionEntry("p9", "committed", 1L, Map("out" -> 1L), Seq("p9"), 0L))
+    m.commit("p9", 1L, Map("out" -> 1L), Seq("p9"), 0L)
     assert(m.currentSnapshot() == 1L)
     assert(m.committedPartitionsAsOf(1L) == Set("p9"))
     Bench.deleteRec(base)
@@ -450,13 +456,14 @@ class ResumeSpec extends SparkTestBase {
   test("manifest heals a commit/snapshot split: partition committed, lineage missing") {
     val base = java.nio.file.Files.createTempDirectory("snapheal").toString
     val m = new Manifest(base)
-    m.commit(m.PartitionEntry("p1", "committed", 1L, Map("out" -> 1L), Seq("f1"), 0L))
-    m.commit(m.PartitionEntry("p2", "committed", 2L, Map("out" -> 2L), Seq("f2"), 0L))
+    m.commit("p1", 1L, Map("out" -> 1L), Seq("f1"), 0L)
+    m.commit("p2", 2L, Map("out" -> 2L), Seq("f2"), 0L)
     // simulate a kill between the partition write and appendSnapshot():
     // delete p2's lineage entry, keep its partition file
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$base/_snapshots/2.json"))
     // a fresh Manifest reconciles: p2 re-enters the lineage
     val m2 = new Manifest(base)
+    assert(m2.committedPartitions() == m.committedPartitions())
     assert(m2.committedPartitionsAsOf(m2.currentSnapshot()) == Set("p1", "p2"))
     assert(m2.currentSnapshot() == 2L) // healed entry fills the lineage head
     // idempotent: constructing again appends nothing

@@ -2,14 +2,15 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 import graft.expr.Ottl
-import graft.pipeline.{IcebergLikeTable, RandomFailure}
+import graft.pipeline.{IcebergLikeTable, Manifest, RandomFailure}
 
 /** Property-based tests (scalacheck) over the pure string/hash kernels the
   * engine's correctness leans on. Example-based specs pin the documented
   * cases; these pin the CLASS of inputs — arbitrary unicode through the
-  * manifest escape alphabet, arbitrary quote/paren nesting through the OTTL
+  * commit logs' JSON records, arbitrary quote/paren nesting through the OTTL
   * splitters, the full string space through the Bernoulli hash — because
   * each of these kernels has already had one escape/edge bug in its history
   * (raw '\n' bricking manifest reads; quoted ';' corrupting statement
@@ -23,27 +24,38 @@ class PropertySpec extends AnyFunSuite {
     assert(res.passed, s"$name: ${res.status}")
   }
 
-  // --- IcebergLikeTable escape alphabet -------------------------------
+  // --- commit-log JSON round trips -----------------------------------
 
-  private lazy val iceberg: IcebergLikeTable = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("prop_iceberg").toString
-    new IcebergLikeTable(dir)
+  private def withDir(prefix: String)(body: String => Boolean): Boolean = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(dir) finally Bench.deleteRec(dir)
   }
 
-  test("esc/unesc round-trips arbitrary unicode strings") {
-    check("escape round-trip", Prop.forAll { (s: String) =>
-      iceberg.unesc(iceberg.esc(s)) == s
+  test("IcebergLikeTable commit round-trips arbitrary unicode partition names") {
+    check("iceberg round-trip", Prop.forAll { (s: String) =>
+      withDir("prop_iceberg") { dir =>
+        new IcebergLikeTable(dir).commitPartition(s, 1L, Seq(s))
+        val reopened = new IcebergLikeTable(dir)
+        reopened.committed() == Set(s) &&
+          reopened.dataFilesAsOf(reopened.currentSnapshot()) == Seq(s)
+      }
     })
   }
 
-  test("esc output never carries a raw newline or quote") {
-    // the invariant the alphabet exists for: FieldRe ('.') must be able to
-    // match every escaped field, and the JSON string atom must not close
-    check("escape alphabet", Prop.forAll { (s: String) =>
-      val e = iceberg.esc(s)
-      !e.contains('\n') && !e.contains('\r') &&
-        !e.replace("\\\\", "").replace("\\\"", "").contains('"')
+  test("Manifest commit of arbitrary unicode names writes only parseable JSON") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    check("manifest round-trip", Prop.forAll { (s: String) =>
+      withDir("prop_manifest") { dir =>
+        val m = new Manifest(dir)
+        m.commit(s, 1L, Map(s -> 1L), Seq(s), 0L)
+        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        val files = try walk.iterator().asScala
+          .filter(java.nio.file.Files.isRegularFile(_)).toList
+        finally walk.close()
+        files.size == 2 &&
+          files.forall(f => mapper.readTree(f.toFile).get("partition").asText == s) &&
+          m.isCommitted(s)
+      }
     })
   }
 
