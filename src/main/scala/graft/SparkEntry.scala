@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.agg.AggOps
 import graft.data.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.enrich.EnrichOps
+import graft.io.Parquet
 import graft.model.Transcripts
 import graft.parse.ParseOps
 import graft.route.Router
@@ -1404,7 +1405,7 @@ object SparkEntry {
     // --------------- relational breadth (events/lineitem/orders) ---------------
     "q_events_sessionize" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val e = s.read.parquet(s"$d/events.parquet")
+      val e = Parquet.read(s, s"$d/events.parquet")
         .withColumn("tsu", unix_micros(col("ts").cast("timestamp")))
       val w = Window.partitionBy(col("user_id")).orderBy(col("tsu"), col("event_id"))
       val brk = when(col("tsu") - lag(col("tsu"), 1).over(w) > 1800000000L, 1L)
@@ -1418,7 +1419,7 @@ object SparkEntry {
           sum(round(col("value") * 100).cast("long")).as("total_value_cents"))
     }),
     "q_tpch_agg" -> ((s, d) =>
-      s.read.parquet(s"$d/lineitem.parquet")
+      Parquet.read(s, s"$d/lineitem.parquet")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity")).as("sum_qty"),
           // per-row double product is IEEE-identical cross-engine; summing
@@ -1427,8 +1428,8 @@ object SparkEntry {
             .cast("long")).as("revenue_e4"),
           count(lit(1)).as("n"))),
     "q_join_orders_customer" -> ((s, d) => {
-      val o = s.read.parquet(s"$d/orders.parquet")
-      val c = s.read.parquet(s"$d/customer.parquet")
+      val o = Parquet.read(s, s"$d/orders.parquet")
+      val c = Parquet.read(s, s"$d/customer.parquet")
       o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"), sum(col("o_totalprice")).as("total"))
@@ -1453,7 +1454,7 @@ object SparkEntry {
       // correctness of placement, not write volume — Bench covers that)
       Transcripts.writePartitioned(
         t(s, d).filter(col("ts") < lit("2024-01-03").cast("timestamp_ntz")), out)
-      s.read.parquet(out)
+      Parquet.read(s, out)
         .groupBy(col("year"), col("month"), col("day"), col("hour"))
         .agg(count(lit(1)).as("n"))
         .select(format_string("%04d-%02d-%02d %02d:00:00",

@@ -28,7 +28,7 @@ object Multimodal {
     */
   def assets(spark: SparkSession, sfDir: String): Dataset[MediaAsset] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    graft.io.Parquet.read(spark, s"$sfDir/documents.parquet")
       .select(
         col("doc_id").as("asset_id"),
         element_at(array(lit("image"), lit("audio"), lit("video")),
@@ -110,7 +110,7 @@ object Multimodal {
     */
   def realAssets(spark: SparkSession, sfDir: String): Dataset[MediaAsset] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    graft.io.Parquet.read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id")).as[Long]
       .mapPartitions { it =>
         it.map { id =>

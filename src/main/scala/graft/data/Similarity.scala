@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   def embeddings(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
+    graft.io.Parquet.read(spark, s"$sfDir/embeddings.parquet")
 
   /** Quantize to integers (×1000) so dot products are exact int64 math —
     * deterministic ranking with zero float-summation-order hazards (the

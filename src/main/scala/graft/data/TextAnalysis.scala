@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 object TextAnalysis {
 
   def documents(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    graft.io.Parquet.read(spark, s"$sfDir/documents.parquet")
 
   // -------------------------------------------------------------------
   // Token counting: whitespace tokens + a BPE-ish subword regex count

@@ -87,7 +87,7 @@ object Transcripts {
       }
       out.toString
     })
-    spark.read.parquet(path)
+    graft.io.Parquet.read(spark, path)
   }
 
   private def deleteRec(f: java.io.File): Unit = {
@@ -97,7 +97,7 @@ object Transcripts {
 
   /** The raw (unmaterialized) derivation. Keep in lockstep with [[oracleCte]]. */
   def fromEventsDerived(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = spark.read.parquet(s"$sfDir/events.parquet")
+    val e = graft.io.Parquet.read(spark, s"$sfDir/events.parquet")
 
     val eid = col("event_id")
     val uid = col("user_id")
@@ -350,7 +350,7 @@ object Transcripts {
       .parquet(path)
 
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.io.Parquet.read(spark, path)
       .select(Columns.map(col): _*)
 
   // ---------------------------------------------------------------------
@@ -403,13 +403,15 @@ object Transcripts {
     * starting_time <= entity_time <= ending_time (IsInTimeRange is
     * INCLUSIVE on both ends, helpers.go:89-92). The predicate references
     * only partition columns, so it prunes at plan time — unselected hour
-    * directories are never listed, the 100 TB rehydration path.
+    * directories are never read, the 100 TB rehydration path. They are
+    * still listed: Spark's file index lists every leaf of `path` when the
+    * DataFrame is built, and pruning only skips reading them.
     */
   def timeRangeScan(spark: SparkSession, path: String,
                     startingTime: String, endingTime: String): DataFrame = {
     val et = make_timestamp(col("year"), col("month"), col("day"),
       col("hour"), lit(0), lit(0))
-    spark.read.parquet(path)
+    graft.io.Parquet.read(spark, path)
       .filter(et >= lit(startingTime).cast("timestamp") &&
         et <= lit(endingTime).cast("timestamp"))
       .select(Columns.map(col): _*)

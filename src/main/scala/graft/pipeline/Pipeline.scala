@@ -160,16 +160,17 @@ object Pipeline {
   * the pass that parsed it (the input is never re-read per sink and nothing
   * is cached), and each hour partition commits to the manifest
   * independently, so a killed run loses at most the in-flight group and
-  * re-runs idempotently (dynamic partition overwrite). The write is the
-  * only job of a group that moves rows: the manifest's rows in and rows per
-  * sink are parquet footer row counts read on the driver (see
-  * [[footerRows]]), not count jobs.
+  * re-runs idempotently (dynamic partition overwrite, set on the write, not
+  * on the caller's session). The write is the only job of a group that
+  * moves rows: the input schema and the manifest's rows in and rows per sink all come from
+  * parquet footers read on the driver (see [[graft.io.Parquet]]), so every
+  * group runs the same jobs — the write and one broadcast per lookup dim.
   */
 object PipelineRunner {
-  import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
-  import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
-  import org.apache.parquet.hadoop.ParquetFileReader
+  import org.apache.hadoop.fs.{Path => HPath}
+  import org.apache.parquet.HadoopReadOptions
   import org.apache.parquet.hadoop.util.HadoopInputFile
+  import graft.io.Parquet
 
   case class RunReport(partitionsProcessed: Int, partitionsSkipped: Int,
                        rowsIn: Long, sinkCounts: Map[String, Long],
@@ -218,7 +219,6 @@ object PipelineRunner {
           inputPath: String, outRoot: String,
           groupSize: Int = 24,
           failure: Option[RandomFailure] = None, attempt: Int = 0): RunReport = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val manifest = new Manifest(s"$outRoot/_manifest")
     val transform = Pipeline.compile(spec, spark)
     // batchprocessor send_batch_size analogue (manifest.yaml:86): output
@@ -237,10 +237,6 @@ object PipelineRunner {
     var rowsIn = 0L
     var rowsOut = 0L
     val sinkTotals = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
-    // the first group's inferred schema serves every later group: schema
-    // merging is off, so one file's schema is the table's, and a given
-    // schema skips the inference job
-    var schema: Option[org.apache.spark.sql.types.StructType] = None
 
     todo.grouped(groupSize).foreach { group =>
       // randomfailureprocessor injection point: per consume call (= per
@@ -248,19 +244,19 @@ object PipelineRunner {
       // with committed state intact, and the caller's retry re-draws
       failure.foreach(_.check(group.mkString(","), attempt))
       val t0 = System.nanoTime()
-      // one pruned scan for the whole group
+      // one pruned scan for the whole group, its schema read from one
+      // footer on the driver (no inference job)
       val paths = group.map(p => s"$inputPath/$p")
-      val reader = spark.read.option("basePath", inputPath)
-      val input = schema.fold(reader)(reader.schema).parquet(paths: _*)
-      schema = Some(input.schema)
+      val input = Parquet.read(spark, spark.read.option("basePath", inputPath), paths: _*)
       // true input volume per partition (filter/sample ops may drop rows
       // downstream, so rows_in ≠ rows written): footer row counts of the
       // files the scan's own file index listed, keyed by their
-      // year=/month=/day=/hour= parents — no Spark job
+      // year=/month=/day=/hour= parents — no Spark job; the reads are
+      // sequential, and `groupSize` bounds the files per group
       val inCounts: Map[String, Long] = input.inputFiles.toSeq
         .map { f =>
           val file = new HPath(new java.net.URI(f))
-          partitionKey(file) -> footerRows(
+          partitionKey(file) -> Parquet.footerRows(
             HadoopInputFile.fromPath(file, conf), footerOptions)
         }
         .groupMapReduce(_._1)(_._2)(_ + _)
@@ -273,7 +269,10 @@ object PipelineRunner {
       // alternating bench runs (sorted 2.51/2.84M tps vs unsorted
       // 2.73/2.37M) — the per-task sort CPU eats the writer-side gain, so
       // the simpler plan ships
+      // dynamic overwrite on this write only: a re-run replaces just the
+      // leaves it writes, and the caller's session keeps its own mode
       transform(input).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", recordCap)
         .options(WriterOptions)
         .partitionBy("route", "year", "month", "day", "hour")
@@ -283,8 +282,8 @@ object PipelineRunner {
       // whole leaf, so stale files of an earlier attempt are not counted)
       val outCounts: Map[String, Map[String, Long]] = group.map { p =>
         p -> spec.sinks.map { s =>
-          s -> dataFiles(outFs, new HPath(s"${sinkPath(outRoot, s)}/$p"))
-            .map(st => footerRows(HadoopInputFile.fromStatus(st, conf), footerOptions))
+          s -> Parquet.dataFiles(outFs, new HPath(s"${sinkPath(outRoot, s)}/$p"))
+            .map(st => Parquet.footerRows(HadoopInputFile.fromStatus(st, conf), footerOptions))
             .sum
         }.toMap
       }.toMap
@@ -301,27 +300,6 @@ object PipelineRunner {
     }
     RunReport(todo.size, all.size - todo.size, rowsIn, sinkTotals.toMap, rowsOut)
   }
-
-  /** Row count of one parquet file, summed over its footer's row groups and
-    * read on the driver. Measured over the 84 files of a 100k-turn table on
-    * local disk (4-core host, five passes): 0.55–1.5 ms per file with the
-    * shared `footerOptions`, 8–16 ms when every open builds its own options
-    * from the Hadoop conf. Reads are sequential: `groupSize` bounds the
-    * files per group.
-    */
-  private def footerRows(file: HadoopInputFile, footerOptions: ParquetReadOptions): Long = {
-    val reader = ParquetFileReader.open(file, footerOptions)
-    try reader.getRecordCount finally reader.close()
-  }
-
-  /** The data files of a leaf directory, skipping `_`/`.` names as Spark's
-    * file index does; a missing directory has none.
-    */
-  private def dataFiles(fs: FileSystem, dir: HPath): Seq[FileStatus] =
-    try fs.listStatus(dir).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    } catch { case _: java.io.FileNotFoundException => Seq.empty }
 
   /** `year=/month=/day=/hour=` key of a file: its four parent directories. */
   private def partitionKey(file: HPath): String =

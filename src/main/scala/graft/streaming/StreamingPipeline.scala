@@ -180,13 +180,13 @@ object StreamingPipeline {
       if (!manifest.isCommitted(key)) {
         val t0 = System.nanoTime()
         val spark = df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         val obs = new Observation(s"sinks_$batchId")
         val taps = spec.sinks.map(s => count_if(col("route") === s).as(s))
         graft.pipeline.Pipeline.compile(spec, spark)(df)
           .withColumn("batch_id", lit(batchId))
           .observe(obs, taps.head, taps.tail: _*)
           .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
           .options(graft.pipeline.PipelineRunner.WriterOptions)
           .partitionBy("route", "year", "month", "day", "hour", "batch_id")
           .parquet(s"$outRoot/sinks")

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
+import graft.io.Parquet
 import graft.model.Transcripts
 import graft.pipeline.Pipeline
 import org.apache.spark.sql.functions._
@@ -27,10 +28,10 @@ object Explain {
       Transcripts.generate(spark, 20000, 50), base)
     println("\n================ pipeline over partitioned table ================")
     val tagged = Pipeline.compile(Pipeline.Canonical, spark)(
-      spark.read.parquet(base))
+      Parquet.read(spark, base))
     tagged.filter(col("route") === "sink_errors").explain("formatted")
     println("\n================ partition-pruned scan (one hour) ================")
-    spark.read.parquet(base)
+    Parquet.read(spark, base)
       .filter(col("year") === 2024 && col("month") === 1 &&
         col("day") === 1 && col("hour") === 5)
       .groupBy(col("role")).count().explain("formatted")

@@ -97,10 +97,19 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("time-range scans prune to the requested hour partitions (rehydration parity)") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
     val base = java.nio.file.Files.createTempDirectory("prune").toString
     graft.model.Transcripts.writePartitioned(
       graft.model.Transcripts.generate(spark, nTurns = 10000, nConvs = 20), base)
-    val pruned = spark.read.parquet(base)
+    // files the executed scan read (its driver-side numFiles metric)
+    def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
+      df.collect()
+      val scans = df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+      assert(scans.size == 1)
+      scans.head.metrics("numFiles").value
+    }
+    val full = graft.io.Parquet.read(spark, base)
+    val pruned = full
       .filter(col("year") === 2024 && col("month") === 1 &&
         col("day") === 1 && col("hour") === 2)
     val plan = pruned.queryExecution.executedPlan.toString
@@ -108,8 +117,17 @@ class PipelineSpec extends SparkTestBase {
       "hour filter must be a partition filter, not a data filter")
     // pruned scan reads strictly fewer files than the full scan
     val totalParts = graft.pipeline.PipelineRunner.discoverPartitions(spark, base).size
-    assert(totalParts > 1)
+    assert(totalParts > 2)
+    val fullFiles = filesRead(full)
+    assert(fullFiles == full.inputFiles.length)
     assert(pruned.count() > 0)
+    assert(filesRead(pruned) < fullFiles)
+    // timeRangeScan over hours 1..2: both ends inclusive, the rest pruned
+    val ranged = Transcripts.timeRangeScan(spark, base,
+      "2024-01-01 01:00:00", "2024-01-01 02:00:00")
+    assert(ranged.select(hour(col("ts"))).distinct().collect().map(_.getInt(0)).sorted
+      .toSeq == Seq(1, 2))
+    assert(filesRead(ranged) < fullFiles)
     Bench.deleteRec(base)
   }
 
@@ -179,7 +197,7 @@ class PipelineSpec extends SparkTestBase {
     Transcripts.writePartitioned(
       Transcripts.generate(spark, nTurns = 4000, nConvs = 20), s"$base/in")
     val parts = PipelineRunner.discoverPartitions(spark, s"$base/in")
-    val input = spark.read.parquet(s"$base/in")
+    Transcripts.fromEvents(spark, sfDir) // warm the derived-table cache
     val jobs = new AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -193,21 +211,50 @@ class PipelineSpec extends SparkTestBase {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
+      // reads take their schema from a footer on the driver: no job
+      assert(jobsOf(Transcripts.readPartitioned(spark, s"$base/in")) == 0)
+      assert(jobsOf(Transcripts.fromEvents(spark, sfDir)) == 0)
+      assert(jobsOf(graft.data.TextAnalysis.documents(spark, sfDir)) == 0)
+      assert(jobsOf(Transcripts.timeRangeScan(spark, s"$base/in",
+        "2024-01-01 00:00:00", "2024-01-01 01:00:00")) == 0)
       // lookup dims are parsed on the driver: building the plan runs nothing
+      val input = graft.io.Parquet.read(spark, s"$base/in")
       assert(jobsOf(Pipeline.compile(Canonical, spark)(input)) == 0)
-      // measured 4: the input schema, one broadcast per lookup dim, and the
-      // write; the manifest counts are footer reads, not jobs
+      // measured 3: one broadcast per lookup dim and the write; the input
+      // schema and the manifest counts are footer reads, not jobs
       val n = jobsOf(PipelineRunner.run(spark, Canonical, s"$base/in", s"$base/out",
         groupSize = parts.size))
-      assert(n <= 4, s"one group ran $n jobs")
-      // later groups reuse the first group's schema: no inference job
+      assert(n <= 3, s"one group ran $n jobs")
+      // every group runs the same jobs
       assert(parts.size >= 3, s"need several groups, got ${parts.size} partitions")
       val groupSize = (parts.size + 2) / 3
       val g = (parts.size + groupSize - 1) / groupSize
       val multi = jobsOf(PipelineRunner.run(spark, Canonical, s"$base/in",
         s"$base/out_multi", groupSize = groupSize))
-      assert(multi == n + (g - 1) * (n - 1), s"$g groups ran $multi jobs, one group $n")
+      assert(multi == g * n, s"$g groups ran $multi jobs, one group $n")
     } finally spark.sparkContext.removeSparkListener(listener)
+    Bench.deleteRec(base)
+  }
+
+  test("pipeline writes leave the session's partition overwrite mode alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val mode = spark.conf.get(key)
+    val base = java.nio.file.Files.createTempDirectory("overwrite").toString
+    val table = s"$base/t"
+    // 4,000 turns over hours 0–3
+    Transcripts.writePartitioned(Transcripts.generate(spark, nTurns = 4000, nConvs = 20,
+      microsPerTurn = 3600000L), table)
+    PipelineRunner.run(spark, Canonical, table, s"$base/out")
+    graft.streaming.StreamingPipeline.manifestSink(Canonical, s"$base/stream")(
+      graft.io.Parquet.read(spark, table), 0L)
+    assert(spark.conf.get(key) == mode)
+    // a plain overwrite of 1,000 turns over hours 0–1 replaces the table:
+    // under a leaked dynamic mode hours 2–3 would survive (3,000 rows)
+    Transcripts.writePartitioned(Transcripts.generate(spark, nTurns = 1000, nConvs = 20,
+      microsPerTurn = 7200000L), table)
+    val back = spark.read.parquet(table)
+    assert(back.count() == 1000)
+    assert(back.select("hour").distinct().collect().map(_.getInt(0)).sorted.toSeq == Seq(0, 1))
     Bench.deleteRec(base)
   }
 
