@@ -9,6 +9,13 @@ import org.apache.spark.sql.SparkSession
   * receiver/awss3eventreceiver/receiver.go:154-176 fixed worker pools) as a
   * Spark local[N] session; on a real cluster the same code runs unchanged
   * under spark-submit with N executors.
+  *
+  * Local paths go through [[graft.io.LocalFs]] (`spark.hadoop.fs.file.impl`),
+  * which sets file and directory permissions through java.nio: without
+  * libhadoop, Hadoop's own local FS forks a `chmod` for every file and
+  * directory level a write creates. The setting reaches the session's
+  * Hadoop configuration, so a `file://` FileSystem cached before the first
+  * session was built keeps its old class for the life of the JVM.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
@@ -25,6 +32,7 @@ object GraftSession {
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      .config("spark.hadoop.fs.file.impl", "graft.io.LocalFs")
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

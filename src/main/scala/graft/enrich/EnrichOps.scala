@@ -14,12 +14,10 @@ object EnrichOps {
   // lookupprocessor — CSV-keyed enrichment via broadcast hash join
   // (processor/lookupprocessor/processor.go:293-312, csv.go:88-114)
   // -------------------------------------------------------------------
-  /** The reference reloads a small CSV into a map and merges the matched
-    * row's columns into the record's attributes; key-not-found is a silent
-    * no-op (csv.go:79-84). At 100 TB the only sane physical plan is a
-    * broadcast hash join on the dimension — never a shuffle of the fact side.
-    */
-  case class LookupTable(keyCol: String, rows: Seq[Map[String, String]])
+  // The reference reloads a small CSV into a map and merges the matched
+  // row's columns into the record's attributes; key-not-found is a silent
+  // no-op (csv.go:79-84). At 100 TB the only sane physical plan is a
+  // broadcast hash join on the dimension — never a shuffle of the fact side.
 
   /** FIXTURES.md §2 lookup fixtures. */
   val RoleLookup: Seq[(String, String, String)] = Seq(
@@ -149,23 +147,26 @@ object EnrichOps {
       StructType(header.map(StructField(_, StringType))))
   }
 
-  /** Deterministic on-disk CSV fixtures (written once, then read like any
-    * lookup CSV: parsed on the driver by [[lookupDim]] on every compile,
-    * so a rewrite is picked up by the next one).
+  /** Deterministic on-disk CSV fixtures, read like any lookup CSV: parsed
+    * on the driver by [[lookupDim]] on every compile, so a rewrite is picked
+    * up by the next one. The file is (re)written only when its bytes differ,
+    * so repeated calls with the same rows touch nothing.
     */
   def lookupFixture(name: String, header: String,
                     rows: Seq[(String, String, String)]): String = {
+    import java.nio.file.{Files, StandardCopyOption}
     val dir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), "graft_lookup_fixtures")
-    java.nio.file.Files.createDirectories(dir)
+    Files.createDirectories(dir)
     val f = dir.resolve(name)
     val body = (header +: rows.map(r => s"${r._1},${r._2},${r._3}")).mkString("\n")
-    // atomic publish: a concurrent reader must never see a truncated file
-    val tmp = dir.resolve(s".$name.${java.lang.ProcessHandle.current.pid}.tmp")
-    java.nio.file.Files.write(tmp, body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, f,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    if (!(Files.isRegularFile(f) && java.util.Arrays.equals(Files.readAllBytes(f), body))) {
+      // atomic publish: a concurrent reader must never see a truncated file
+      val tmp = dir.resolve(s".$name.${java.lang.ProcessHandle.current.pid}.tmp")
+      Files.write(tmp, body)
+      Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }
     f.toString
   }
 
