@@ -2,7 +2,6 @@ package graft.io
 
 import java.io.FileNotFoundException
 import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -34,23 +33,11 @@ class LocalFs extends LocalFileSystem(new LocalFs.Raw) {
 }
 
 object LocalFs {
-  /** The raw local FS with a java.nio `setPermission`. */
+  /** The raw local FS whose `setPermission` is one `chmod(2)` through the
+    * `unix` attribute view: the full mode, sticky bit included.
+    */
   class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit =
-      // java.nio has no sticky bit; no engine write sets one
-      if (permission.getStickyBit) super.setPermission(p, permission)
-      else Files.setPosixFilePermissions(pathToFile(p).toPath, posix(permission.toShort))
-  }
-
-  /** The 9 `rwxrwxrwx` bits of `mode` as java.nio permissions:
-    * `PosixFilePermission.values` runs owner read … others execute,
-    * i.e. from bit 8 down to bit 0.
-    */
-  private def posix(mode: Int): java.util.Set[PosixFilePermission] = {
-    val set = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-    PosixFilePermission.values.zipWithIndex.foreach { case (p, i) =>
-      if ((mode & (1 << (8 - i))) != 0) set.add(p)
-    }
-    set
+      Files.setAttribute(pathToFile(p).toPath, "unix:mode", Int.box(permission.toShort & 0x0fff))
   }
 }

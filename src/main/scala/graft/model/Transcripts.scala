@@ -401,32 +401,19 @@ object Transcripts {
 
   /** First-class time-bounded scan over the partitioned table:
     * starting_time <= entity_time <= ending_time (IsInTimeRange is
-    * INCLUSIVE on both ends, helpers.go:89-92). The hour leaves are found by
-    * walking the `year=/month=/day=/hour=` directories, the window is
-    * evaluated over their partition values as a local relation (no job),
-    * and only the selected leaves are handed to the reader (with
-    * `basePath`): unselected hours are neither listed nor read, the 100 TB
-    * rehydration path. The same predicate stays on the scan as a partition
-    * filter. An empty window reads no row of one leaf, so the frame keeps
-    * the table's schema.
+    * INCLUSIVE on both ends, helpers.go:89-92). The predicate references
+    * only partition columns, so it prunes at plan time — unselected hour
+    * directories are never read, the 100 TB rehydration path. They are
+    * still listed: Spark's file index lists every leaf of `path` when the
+    * DataFrame is built, and pruning only skips reading them.
     */
   def timeRangeScan(spark: SparkSession, path: String,
                     startingTime: String, endingTime: String): DataFrame = {
-    import spark.implicits._
     val et = make_timestamp(col("year"), col("month"), col("day"),
       col("hour"), lit(0), lit(0))
-    val inWindow = et >= lit(startingTime).cast("timestamp") &&
-      et <= lit(endingTime).cast("timestamp")
-    val leaves = graft.pipeline.PipelineRunner.discoverPartitions(spark, path)
-    val hours = leaves.map { leaf =>
-      val Seq(y, m, d, h) = leaf.split('/').toSeq.map(_.split('=')(1).toIntOption)
-      (y, m, d, h, leaf)
-    }.toDF("year", "month", "day", "hour", "leaf")
-      .filter(inWindow).select("leaf").as[String].collect().toSeq
-    val read = if (hours.nonEmpty) hours else leaves.take(1)
-    graft.io.Parquet.read(spark, spark.read.option("basePath", path),
-      read.map(leaf => s"$path/$leaf"): _*)
-      .filter(inWindow)
+    graft.io.Parquet.read(spark, path)
+      .filter(et >= lit(startingTime).cast("timestamp") &&
+        et <= lit(endingTime).cast("timestamp"))
       .select(Columns.map(col): _*)
   }
 }

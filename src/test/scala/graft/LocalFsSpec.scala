@@ -38,20 +38,26 @@ class LocalFsSpec extends SparkTestBase {
     val base = Files.createTempDirectory("nofork").toString
     Transcripts.writePartitioned(
       Transcripts.generate(spark, nTurns = 4000, nConvs = 20), s"$base/in")
+    // Spark's heartbeat forks `getconf PAGESIZE` once per JVM, when it first
+    // polls executor metrics 10-20 s after start (`ProcfsMetricsGetter`'s
+    // initializer): load that class now so its fork cannot land in the run
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
     // children live for a few ms; a 1 ms poll sees the forked chmods of the
     // Hadoop local FS hundreds of times over a run
-    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
     @volatile var polling = true
     val poller = new Thread(() =>
       while (polling) {
-        seen.addAndGet(ProcessHandle.current().children().count().toInt)
+        ProcessHandle.current().children().forEach(c =>
+          seen.add(c.info().commandLine().orElse(s"pid ${c.pid}")))
         Thread.sleep(1)
       })
     poller.setDaemon(true)
     poller.start()
     try PipelineRunner.run(spark, Pipeline.Canonical, s"$base/in", s"$base/out")
     finally { polling = false; poller.join() }
-    assert(seen.get == 0, s"saw ${seen.get} child processes during the run")
+    assert(seen.isEmpty, s"saw ${seen.size} child processes during the run, e.g. " +
+      seen.toArray.distinct.take(5).mkString("; "))
     Bench.deleteRec(base)
   }
 
@@ -107,7 +113,7 @@ class LocalFsSpec extends SparkTestBase {
       assert(fs.rename(new Path(s"$base/a"), new Path(s"$base/c")))
       assert(!Files.exists(Paths.get(s"$base/a")) && read(s"$base/c") == "a")
       assert(Files.exists(Paths.get(s"$base/.c.crc")))
-      // a sticky-bit mode, which java.nio cannot set, still lands
+      // the full mode lands, sticky bit included
       fs.setPermission(new Path(s"$base"), new FsPermission(Integer.parseInt("1755", 8).toShort))
       assert(mode(base) == Integer.parseInt("1755", 8))
     } finally fs.close()
