@@ -13,9 +13,12 @@ import org.apache.spark.sql.SparkSession
   * Local paths go through [[graft.io.LocalFs]] (`spark.hadoop.fs.file.impl`),
   * which sets file and directory permissions through java.nio: without
   * libhadoop, Hadoop's own local FS forks a `chmod` for every file and
-  * directory level a write creates. The setting reaches the session's
-  * Hadoop configuration, so a `file://` FileSystem cached before the first
-  * session was built keeps its old class for the life of the JVM.
+  * directory level a write creates. `spark.hadoop.fs.AbstractFileSystem.file.impl`
+  * maps Hadoop's `FileContext` API, which Spark's streaming checkpoints
+  * write through, to the same file system ([[graft.io.LocalFs.Afs]]).
+  * The settings reach the session's Hadoop configuration, so a `file://`
+  * FileSystem cached before the first session was built keeps its old
+  * class for the life of the JVM.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
@@ -33,6 +36,7 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.hadoop.fs.file.impl", "graft.io.LocalFs")
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.LocalFs.Afs].getName)
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

@@ -601,7 +601,7 @@ object SparkEntry {
           col("metric_type"))
         .agg(count(lit(1)).as("datapoint_count"))),
     // lookupprocessor over the datapoint plane: every shape's attributes
-    // enrich through the same broadcast dim (lookupprocessor/processor.go:
+    // enrich through the same hash-probed dim (lookupprocessor/processor.go:
     // 228-239 switches over all five types)
     "q_datapoint_lookup" -> ((s, d) =>
       EnrichOps.lookupCsv(s, AggOps.allDatapoints(t(s, d)),

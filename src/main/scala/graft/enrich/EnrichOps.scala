@@ -11,13 +11,14 @@ import graft.parse.ParseOps
 object EnrichOps {
 
   // -------------------------------------------------------------------
-  // lookupprocessor — CSV-keyed enrichment via broadcast hash join
+  // lookupprocessor — CSV-keyed enrichment through an in-row hash probe
   // (processor/lookupprocessor/processor.go:293-312, csv.go:88-114)
   // -------------------------------------------------------------------
   // The reference reloads a small CSV into a map and merges the matched
   // row's columns into the record's attributes; key-not-found is a silent
-  // no-op (csv.go:79-84). At 100 TB the only sane physical plan is a
-  // broadcast hash join on the dimension — never a shuffle of the fact side.
+  // no-op (csv.go:79-84). Here the map is built on the driver and probed in
+  // the projection the fact side already runs (graft.functions.DimLookup):
+  // no join, no exchange and no job of its own, for any dim size.
 
   /** FIXTURES.md §2 lookup fixtures. */
   val RoleLookup: Seq[(String, String, String)] = Seq(
@@ -31,9 +32,9 @@ object EnrichOps {
     ("code_exec", "acme", "gold"),
     ("browser", "other", "bronze"))
 
-  /** Enrich transcripts with both lookups. Left joins: unmatched keys keep
-    * null enrichment columns (the reference leaves the record untouched).
-    * Both dims are broadcast — zero shuffle of the transcript side.
+  /** Enrich transcripts with both lookups. Unmatched keys keep null
+    * enrichment columns (the reference leaves the record untouched). Both
+    * probes run in the fact side's own projection.
     */
   def lookupEnrich(spark: SparkSession, t: DataFrame): DataFrame =
     lookupCsv(spark, lookupCsv(spark, t,
@@ -62,14 +63,16 @@ object EnrichOps {
     }
   }
 
-  /** CSV-file lookup join. The dimension is (re)read from disk on every
-    * compile — the batch analogue of the reference's reload ticker
-    * (processor.go:72-91) — and built on the driver by [[lookupDim]].
+  /** CSV-file lookup. The dimension is (re)read from disk on every compile
+    * — the batch analogue of the reference's reload ticker
+    * (processor.go:72-91) — parsed on the driver by [[lookupDim]] and
+    * probed per row as a hash table ([[graft.functions.DimLookup]]).
     * Semantics parity with addLookupValues (processor.go:293-312): key read
     * from the selected context; a missing or NON-STRING key column is a
-    * silent no-op; unmatched keys keep null enrichment columns. Physical
-    * plan: a LocalTableScan dim under a broadcast hash join — the fact side
-    * never shuffles, and building the dim costs no Spark job.
+    * silent no-op; unmatched keys keep null enrichment columns; a dim
+    * column that the frame already has is overwritten in place on MATCHED
+    * rows only, the others are appended in header order. One `select`:
+    * the fact side never shuffles and the lookup runs no Spark job.
     */
   def lookupCsv(spark: SparkSession, df: DataFrame, spec: LookupSpec): DataFrame = {
     spec.validate()
@@ -88,39 +91,36 @@ object EnrichOps {
     keyCol match {
       case None => df // silent no-op, reference parity
       case Some(k) =>
-        val dimKeyed = dim.withColumnRenamed(spec.field, "__lookup_key")
-        // enrichment columns overwrite same-named attributes on MATCHED
-        // records only (processor.go sets attrs[col] per matched key);
-        // unmatched records keep their original value
-        val colliding = dimKeyed.columns.filter(c =>
-          c != "__lookup_key" && df.columns.contains(c))
-        val dimSafe = colliding.foldLeft(dimKeyed)(
-          (d, c) => d.withColumnRenamed(c, s"__new_$c"))
-        val joined = df.join(broadcast(dimSafe), k === col("__lookup_key"), "left")
-        val overwritten = colliding.foldLeft(joined)((d, c) =>
-          d.withColumn(c,
-              when(col("__lookup_key").isNotNull, col(s"__new_$c"))
-                .otherwise(col(c)))
-            .drop(s"__new_$c"))
-        overwritten.drop("__lookup_key")
+        val table = graft.functions.DimLookup.table(
+          dim.columns, dim.columns.indexOf(spec.field), dim.rows)
+        val row = graft.functions.DimLookup.of(k, table)
+        val names = table.fields
+        def ref(c: String): Column = col(s"`${c.replace("`", "``")}`")
+        df.select(df.columns.toIndexedSeq.map { c =>
+          if (names.contains(c)) when(row.isNotNull, row.getField(c)).otherwise(ref(c)).as(c)
+          else ref(c)
+        } ++ names.filterNot(df.columns.contains).map(c => row.getField(c).as(c)): _*)
     }
   }
 
-  /** The dimension of a lookup CSV file, parsed on the driver: one
-    * all-string column per header field, one row per `field` value.
-    * Duplicate-key parity with indexRecords (csv.go:88-114): the reference
-    * builds a map row by row, so a repeated key LAST-WINS in file order —
-    * without the fold the left join would duplicate fact rows. The dialect
-    * is the CSV source's own (its univocity settings, header naming and
-    * blank-line skipping; short rows pad with null, long rows truncate,
-    * empty and quoted-empty fields read as null), so the result equals
-    * `spark.read.option("header", "true").csv(csv)` after the same fold.
+  /** A lookup CSV file parsed on the driver: its header, and its rows after
+    * the last-wins fold, in file order, one all-string value per header
+    * field (null for an empty field).
     */
-  def lookupDim(spark: SparkSession, csv: String, field: String): DataFrame = {
-    import org.apache.spark.sql.Row
+  case class LookupDim(columns: IndexedSeq[String], rows: IndexedSeq[IndexedSeq[String]])
+
+  /** The dimension of a lookup CSV file, parsed on the driver.
+    * Duplicate-key parity with indexRecords (csv.go:88-114): the reference
+    * builds a map row by row, so a repeated key LAST-WINS in file order.
+    * The dialect is the CSV source's own (its univocity settings, header
+    * naming and blank-line skipping; short rows pad with null, long rows
+    * truncate, empty and quoted-empty fields read as null), so the rows
+    * equal `spark.read.option("header", "true").csv(csv)`'s after the same
+    * fold.
+    */
+  def lookupDim(spark: SparkSession, csv: String, field: String): LookupDim = {
     import org.apache.spark.sql.catalyst.csv.CSVOptions
     import org.apache.spark.sql.execution.datasources.csv.CSVUtils
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     import scala.jdk.CollectionConverters._
     val opts = new CSVOptions(Map("header" -> "true"), false,
       spark.conf.get("spark.sql.session.timeZone"))
@@ -139,12 +139,10 @@ object EnrichOps {
     val key = header.indexOf(field)
     val rows = lines.drop(1).map { l =>
       val tokens = parser.parseLine(l)
-      Row.fromSeq(header.indices.map(i =>
-        if (i < tokens.length && tokens(i) != opts.nullValue) tokens(i) else null))
+      header.indices.map(i =>
+        if (i < tokens.length && tokens(i) != opts.nullValue) tokens(i) else null)
     }
-    val lastWins = rows.reverse.distinctBy(_.get(key)).reverse
-    spark.createDataFrame(lastWins.asJava,
-      StructType(header.map(StructField(_, StringType))))
+    LookupDim(header.toIndexedSeq, rows.reverse.distinctBy(_(key)).reverse)
   }
 
   /** Deterministic on-disk CSV fixtures, read like any lookup CSV: parsed

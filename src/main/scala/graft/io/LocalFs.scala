@@ -1,9 +1,13 @@
 package graft.io
 
 import java.io.FileNotFoundException
+import java.net.URI
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** The engine's `file://` FileSystem: Hadoop's checksummed local FS whose
@@ -22,7 +26,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * otherwise resolves to on Spark's classpath, does).
   *
   * Registered for every engine session by `GraftSession.builder`
-  * (`spark.hadoop.fs.file.impl`).
+  * (`spark.hadoop.fs.file.impl`); [[LocalFs.Afs]] is the same file system
+  * for Hadoop's `FileContext` API.
   */
 class LocalFs extends LocalFileSystem(new LocalFs.Raw) {
   override def rename(src: Path, dst: Path): Boolean = {
@@ -39,5 +44,30 @@ object LocalFs {
   class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit =
       Files.setAttribute(pathToFile(p).toPath, "unix:mode", Int.box(permission.toShort & 0x0fff))
+
+    /** Hadoop's method forks `readlink` to tell a symlink from a file; for
+      * anything but a symlink its answer is the path's own status, which
+      * the `lstat` of `Files.isSymbolicLink` tells without a process.
+      */
+    override def getFileLinkStatus(f: Path): FileStatus =
+      if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+      else getFileStatus(f)
+  }
+
+  /** The `file` AbstractFileSystem (`fs.AbstractFileSystem.file.impl`) that
+    * Hadoop's `FileContext` resolves local paths to, such as Spark's
+    * streaming checkpoints: Hadoop's own `local.LocalFs` with [[Raw]] in
+    * place of the stock raw FS, so checkpoint files are written, renamed
+    * and listed without a forked `chmod` or `readlink`.
+    */
+  class Afs(uri: URI, conf: Configuration) extends ChecksumFs(new RawAfs(uri, conf))
+
+  /** Hadoop's `local.RawLocalFs` over [[Raw]]. */
+  class RawAfs(uri: URI, conf: Configuration) extends DelegateToFileSystem(
+      uri, new Raw, conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
+    override def getUriDefaultPort: Int = -1
+    override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults()
+    override def getServerDefaults(): FsServerDefaults = LocalConfigKeys.getServerDefaults()
+    override def isValidName(src: String): Boolean = true
   }
 }

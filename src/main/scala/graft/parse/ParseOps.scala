@@ -345,8 +345,19 @@ object ParseOps {
     * expr/record.go:67-68). */
   val SevInfo = 9; val SevWarn = 13; val SevError = 17
 
+  // The severity mappings evaluate their input once and look the class up in
+  // a literal table: a nested `when(x >= 500, ..).when(x >= 400, ..)` would
+  // evaluate `x` twice for every row that is not an error, and subexpression
+  // elimination does not hoist `x` (a regex or JSON extraction, in
+  // Router.rowSeverity) out of the conditional branch the chain sits in.
+
+  /** ERROR from 500 up, WARN from 400, else INFO (a null `status` too): the
+    * class is the int `status`'s `width_bucket` over [400, 500) — 0 below,
+    * 1 inside, 2 from 500 up.
+    */
   def severityFromStatus(status: Column): Column =
-    when(status >= 500, SevError).when(status >= 400, SevWarn).otherwise(SevInfo)
+    coalesce(typedLit(Map(1L -> SevWarn, 2L -> SevError))
+      .apply(width_bucket(status, lit(400), lit(500), lit(1))), lit(SevInfo))
 
   def severityText(sevNum: Column): Column =
     when(sevNum >= 21, "FATAL").when(sevNum >= 17, "ERROR")
@@ -354,7 +365,7 @@ object ParseOps {
       .when(sevNum >= 5, "DEBUG").otherwise("TRACE")
 
   def severityFromLevel(level: Column): Column =
-    when(level === "error", SevError).when(level === "warn", SevWarn).otherwise(SevInfo)
+    coalesce(typedLit(Map("error" -> SevError, "warn" -> SevWarn)).apply(level), lit(SevInfo))
 
   /** Numeric range mapping (plugins/common_event_format_logs.yaml:74-82:
     * `severity: mapping: error: - min: N max: M`): ordered (min,max,sev)

@@ -161,10 +161,10 @@ object Pipeline {
   * is cached), and each hour partition commits to the manifest
   * independently, so a killed run loses at most the in-flight group and
   * re-runs idempotently (dynamic partition overwrite, set on the write, not
-  * on the caller's session). The write is the only job of a group that
-  * moves rows: the input schema and the manifest's rows in and rows per sink all come from
-  * parquet footers read on the driver (see [[graft.io.Parquet]]), so every
-  * group runs the same jobs — the write and one broadcast per lookup dim.
+  * on the caller's session). The write is the only job of a group: the
+  * input schema and the manifest's rows in and rows per sink all come from
+  * parquet footers read on the driver (see [[graft.io.Parquet]]), and the
+  * lookups are hash probes inside the write's projection.
   */
 object PipelineRunner {
   import org.apache.hadoop.fs.{Path => HPath}

@@ -40,7 +40,9 @@ object Router {
 
   /** Severity for ANY transcript row, derived from its payload scenario
     * (status class for access/json/csv/kv/syslog lines; default INFO).
-    * This is the whole-pipeline severity resolution used by routing.
+    * This is the whole-pipeline severity resolution used by routing. Each
+    * branch extracts its field once and maps it through a literal table
+    * (see [[ParseOps.severityFromStatus]]).
     */
   def rowSeverity(): Column = {
     val nginxStatus = regexp_extract(col("text"), """" (\d{3}) """, 1)
@@ -53,10 +55,9 @@ object Router {
       .when(ParseOps.isJson, ParseOps.severityFromLevel(jsonLevel))
       .when(ParseOps.isCsv, ParseOps.severityFromLevel(csvLevel))
       .when(ParseOps.isKv, ParseOps.severityFromLevel(kvLevel))
-      .when(ParseOps.isSyslog,
-        when(syslogSev <= 3, ParseOps.SevError)
-          .when(syslogSev === 4, ParseOps.SevWarn)
-          .otherwise(ParseOps.SevInfo))
+      .when(ParseOps.isSyslog, coalesce(typedLit(Map(0 -> ParseOps.SevError,
+          1 -> ParseOps.SevError, 2 -> ParseOps.SevError, 3 -> ParseOps.SevError,
+          4 -> ParseOps.SevWarn)).apply(syslogSev), lit(ParseOps.SevInfo)))
       .otherwise(ParseOps.SevInfo)
   }
 

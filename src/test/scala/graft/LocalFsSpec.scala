@@ -34,10 +34,10 @@ class LocalFsSpec extends SparkTestBase {
     assert(fs.getClass == classOf[LocalFs])
   }
 
-  test("a pipeline run forks no process") {
-    val base = Files.createTempDirectory("nofork").toString
-    Transcripts.writePartitioned(
-      Transcripts.generate(spark, nTurns = 4000, nConvs = 20), s"$base/in")
+  /** The command lines of the child processes this JVM started while
+    * `body` ran.
+    */
+  private def childrenDuring(body: => Unit): Seq[String] = {
     // Spark's heartbeat forks `getconf PAGESIZE` once per JVM, when it first
     // polls executor metrics 10-20 s after start (`ProcfsMetricsGetter`'s
     // initializer): load that class now so its fork cannot land in the run
@@ -54,10 +54,43 @@ class LocalFsSpec extends SparkTestBase {
       })
     poller.setDaemon(true)
     poller.start()
-    try PipelineRunner.run(spark, Pipeline.Canonical, s"$base/in", s"$base/out")
+    try body
     finally { polling = false; poller.join() }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  private def assertNoChildren(seen: Seq[String]): Unit =
     assert(seen.isEmpty, s"saw ${seen.size} child processes during the run, e.g. " +
-      seen.toArray.distinct.take(5).mkString("; "))
+      seen.distinct.take(5).mkString("; "))
+
+  test("a pipeline run forks no process") {
+    val base = Files.createTempDirectory("nofork").toString
+    Transcripts.writePartitioned(
+      Transcripts.generate(spark, nTurns = 4000, nConvs = 20), s"$base/in")
+    assertNoChildren(childrenDuring(
+      PipelineRunner.run(spark, Pipeline.Canonical, s"$base/in", s"$base/out")))
+    Bench.deleteRec(base)
+  }
+
+  test("a streaming run forks no process: checkpoints go through the same local FS") {
+    val base = Files.createTempDirectory("nofork_stream").toString
+    Transcripts.writePartitioned(
+      Transcripts.generate(spark, nTurns = 6000, nConvs = 20), s"$base/in")
+    val seen = childrenDuring {
+      val q = spark.readStream.schema(graft.streaming.StreamingPipeline.TranscriptSchema)
+        .option("maxFilesPerTrigger", "2").parquet(s"$base/in")
+        .writeStream
+        .foreachBatch(graft.streaming.StreamingPipeline.manifestSink(
+          Pipeline.Canonical, s"$base/out"))
+        .option("checkpointLocation", s"$base/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    // the stream really went through the checkpoint: several micro-batches
+    val offsets = new java.io.File(s"$base/ckpt/offsets").list().filterNot(_.startsWith("."))
+    assert(offsets.length > 1, s"offsets: ${offsets.mkString(",")}")
+    assertNoChildren(seen)
     Bench.deleteRec(base)
   }
 

@@ -220,11 +220,12 @@ class PipelineSpec extends SparkTestBase {
       // lookup dims are parsed on the driver: building the plan runs nothing
       val input = graft.io.Parquet.read(spark, s"$base/in")
       assert(jobsOf(Pipeline.compile(Canonical, spark)(input)) == 0)
-      // measured 3: one broadcast per lookup dim and the write; the input
-      // schema and the manifest counts are footer reads, not jobs
+      // one job, the write: the lookup dims are hash probes inside its
+      // projection, and the input schema and the manifest counts are
+      // footer reads
       val n = jobsOf(PipelineRunner.run(spark, Canonical, s"$base/in", s"$base/out",
         groupSize = parts.size))
-      assert(n <= 3, s"one group ran $n jobs")
+      assert(n == 1, s"one group ran $n jobs")
       // every group runs the same jobs
       assert(parts.size >= 3, s"need several groups, got ${parts.size} partitions")
       val groupSize = (parts.size + 2) / 3

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.model.Transcripts
 import graft.parse.ParseOps
@@ -124,5 +125,95 @@ class RouterSpec extends SparkTestBase {
     // the synthetic oversized entries exist in the fixture → the drop
     // path is actually exercised
     assert(batches.exists(_._3))
+  }
+
+  /** `rowSeverity` as nested `when` chains, each extraction written out
+    * per comparison: the formulation the single-extraction one replaced,
+    * kept as its reference.
+    */
+  private def chainSeverity: Column = {
+    val nginxStatus = regexp_extract(col("text"), """" (\d{3}) """, 1)
+    val jsonLevel = get_json_object(col("text"), "$.level")
+    val csvLevel = element_at(split(col("text"), ","), 2)
+    val kvLevel = regexp_extract(col("text"), """level=(\w+)""", 1)
+    val syslogSev = regexp_extract(col("text"), """^<(\d+)>""", 1).cast("int") % 8
+    def fromStatus(status: Column): Column =
+      when(status >= 500, ParseOps.SevError).when(status >= 400, ParseOps.SevWarn)
+        .otherwise(ParseOps.SevInfo)
+    def fromLevel(level: Column): Column =
+      when(level === "error", ParseOps.SevError).when(level === "warn", ParseOps.SevWarn)
+        .otherwise(ParseOps.SevInfo)
+    when(ParseOps.isNginx, fromStatus(nginxStatus.cast("int")))
+      .when(ParseOps.isJson, fromLevel(jsonLevel))
+      .when(ParseOps.isCsv, fromLevel(csvLevel))
+      .when(ParseOps.isKv, fromLevel(kvLevel))
+      .when(ParseOps.isSyslog,
+        when(syslogSev <= 3, ParseOps.SevError)
+          .when(syslogSev === 4, ParseOps.SevWarn)
+          .otherwise(ParseOps.SevInfo))
+      .otherwise(ParseOps.SevInfo)
+  }
+
+  private def withAnsi[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, on.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** (text, chain, single extraction) for every line, evaluated both on
+    * the driver (a local relation folds the projection) and in generated
+    * code (after a shuffle).
+    */
+  private def severities(lines: DataFrame): Seq[(String, Integer, Integer)] =
+    Seq(lines, lines.repartition(2)).flatMap(_.select(col("text"),
+        chainSeverity.as("chain"), Router.rowSeverity().as("single"))
+      .as[(String, Integer, Integer)].collect())
+
+  private def nginx(status: String): String =
+    s"""10.1.2.3 - user1 [01/Jan/2024:00:00:00 +0000] "GET /a HTTP/1.1" $status 12 "-" "agent/1""""
+
+  /** Lines on which the chain fails under ANSI: no status, no syslog
+    * priority, an int overflow, a CSV line without a second field.
+    */
+  private val ansiFailing = Seq(nginx("1000"), "10.no status here", "<>no priority",
+    "<99999999999>overflow", "01/Jan/2024 no comma")
+
+  private val edgeLines: Seq[String] =
+    Seq("399", "400", "499", "500", "999", "000").map(nginx) ++
+      Seq("ERROR", "", "error", "warn", "info").flatMap(l => Seq(
+        s"""{"level":"$l","status":500}""", s"01/Jan/2024,$l,ev,500,1",
+        s"level=$l component=gen")) ++
+      Seq("""{"level":17}""", """{"level":{"a":"error"}}""", """{"level":null}""",
+        """{"status":500}""", "{not json", "level= no word", "level=", "01/Jan/2024,") ++
+      (0 to 191).map(p => s"<$p>Jan 01 00:00:00 host1 gen[1]: GET /a completed status=200") ++
+      Seq("", "plain text", "P|chunk contact user1@example.com", "F|chunk")
+
+  test("single-extraction severity == the nested when chain on every input") {
+    val generated = Transcripts.generate(spark, nTurns = 6000, nConvs = 20).select(col("text"))
+    val gen = severities(generated)
+    assert(gen.forall { case (_, a, b) => a == b },
+      gen.filter { case (_, a, b) => a != b }.take(3).mkString("; "))
+    // all six scenarios and all three severities are exercised
+    assert(gen.map(_._1.take(2)).map {
+      case p if p.startsWith("10") => "nginx"; case p if p.startsWith("{") => "json"
+      case p if p.head.isDigit => "csv"; case "le" => "kv"; case p if p.startsWith("<") => "syslog"
+      case _ => "multiline" }.distinct.size == 6)
+    assert(gen.map(_._2).toSet == Set[Integer](9, 13, 17))
+    for (ansi <- Seq(true, false)) withAnsi(ansi) {
+      val lines = if (ansi) edgeLines else edgeLines ++ ansiFailing
+      val got = severities((lines.map(Some(_)) :+ None).toDF("text"))
+      assert(got.size == 2 * (lines.size + 1))
+      val bad = got.filter { case (_, a, b) => a != b }
+      assert(bad.isEmpty, s"ansi=$ansi: ${bad.take(5).mkString("; ")}")
+    }
+    // where the chain fails under ANSI, the single extraction fails too,
+    // and it fails nowhere else (the edge lines above ran clean)
+    withAnsi(true) {
+      for (line <- ansiFailing; sev <- Seq(chainSeverity, Router.rowSeverity())) {
+        val r = scala.util.Try(Seq(line).toDF("text").repartition(1).select(sev).collect())
+        assert(r.isFailure, s"expected an ANSI error on '$line'")
+      }
+    }
   }
 }
