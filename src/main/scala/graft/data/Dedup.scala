@@ -10,11 +10,9 @@ import org.apache.spark.sql.functions._
   * key) followed by within-bucket verification — never an all-pairs join,
   * and never an unbounded within-bucket pair blowup (see [[candidatePairs]]).
   *
-  * Two hash families:
-  *  - fast path (default): xxhash64 — cheapest per-row, Spark-only.
-  *  - portable (`portable = true`): md5-derived 60-bit hashes that DuckDB
-  *    reproduces bit-for-bit (`CAST('0x' || substr(md5(x),1,15) AS BIGINT)`),
-  *    making the LSH pipeline END-TO-END oracle-checkable, not rows-only.
+  * Every hash is md5-derived ([[md5Hash64]]): 60-bit values DuckDB
+  * reproduces bit-for-bit (`CAST('0x' || substr(md5(x),1,15) AS BIGINT)`),
+  * so the LSH pipelines are END-TO-END oracle-checkable, not rows-only.
   */
 object Dedup {
 
@@ -100,8 +98,8 @@ object Dedup {
     * < 2^47 — ANSI-safe. Missing trailing words (docs shorter than n) hash
     * as 0 on both engines — via `get()` (0-based, null past the end), NOT
     * `element_at`, which THROWS out-of-bounds under Spark 4's default ANSI
-    * mode before coalesce ever sees a null. portable=true uses the md5
-    * word-hash family the DuckDB oracle reproduces bit-for-bit.
+    * mode before coalesce ever sees a null. Word hashes are md5-derived,
+    * which the DuckDB oracle reproduces bit-for-bit.
     */
   val ShingleA = 104729L
 
@@ -111,9 +109,8 @@ object Dedup {
     * the ENTIRE word-hash transform per element (n× per shingle position:
     * quadratic md5 work; measured 2.5 s → 50 s at sf0.1).
     */
-  def wordHashes(text: Column, portable: Boolean = false): Column =
-    transform(split(text, " "),
-      w => pmod(if (portable) md5Hash64(w) else xxhash64(w), lit(P)))
+  def wordHashes(text: Column): Column =
+    transform(split(text, " "), w => pmod(md5Hash64(w), lit(P)))
 
   /** Bounded-Horner n-gram hashes over a MATERIALIZED word-hash column —
     * the codegen NGramHash loop; element-identical to
@@ -124,7 +121,7 @@ object Dedup {
   def shingleHashesFromWords(wh: Column, n: Int = 3): Column =
     graft.functions.NGramHash.of(wh, n, ShingleA, P)
 
-  /** DuckDB mirror of [[shingleHashesFromWords]] (portable family) given a
+  /** DuckDB mirror of [[shingleHashesFromWords]] given a
     * word-hash list column named `wh`.
     */
   def shingleHashesSql(n: Int = 3): String = {
@@ -218,18 +215,18 @@ object Dedup {
     * n-grams.
     */
   def contamination(docs: DataFrame, evalDocs: DataFrame, n: Int = 3,
-                    minShared: Int = 2, portable: Boolean = false): DataFrame = {
+                    minShared: Int = 2): DataFrame = {
     // join on hashed n-grams ([[shingleHashes]]): the corpus probe side
     // carries 8 bytes/row instead of n-gram text, the broadcast table
     // hashes longs, and no shingle string is ever built. The hash IS the
     // n-gram identity here (mod-P collisions conflate a pair's grams with
-    // probability ~|grams|²/P per pair) — the portable family makes the
-    // oracle replicate the identical hash math, so the check is exact.
+    // probability ~|grams|²/P per pair) — the oracle replicates the
+    // identical md5 hash math, so the check is exact.
     val corpus = docs
-      .select(col("doc_id"), wordHashes(col("text"), portable).as("wh"))
+      .select(col("doc_id"), wordHashes(col("text")).as("wh"))
       .select(col("doc_id"), explode(shingleHashesFromWords(col("wh"), n)).as("sh"))
     val eval = evalDocs
-      .select(col("doc_id").as("eval_id"), wordHashes(col("text"), portable).as("wh"))
+      .select(col("doc_id").as("eval_id"), wordHashes(col("text")).as("wh"))
       .select(col("eval_id"), explode(shingleHashesFromWords(col("wh"), n)).as("sh"))
     // broadcast gate: eval sets are benchmark-sized BY CONTRACT, but the
     // hint must not be unconditional — a caller handing a corpus-
@@ -282,30 +279,22 @@ object Dedup {
     * explode(b) + window over (band,bucket) — linear in corpus size, never
     * all-pairs. (Standard MinHash-LSH; Broder '97.)
     */
-  def minHashSignature(text: Column, k: Int, portable: Boolean = false): Column =
-    if (portable) {
-      // ONE md5 per shingle; the k-minima fold is the codegen MinHashSig
-      // expression (the HOF fold rebuilt a k-element accumulator array per
-      // shingle, interpreted) — identical affine-family math, oracle-locked
-      val hs = transform(shingles(text), s => pmod(md5Hash64(s), lit(P)))
-      graft.functions.MinHashSig.of(hs, hashA(k), hashB(k), P)
-    } else {
-      // ONE fold over the shingle array maintaining all k minima — shingling
-      // runs once per row (k separate aggregates would re-shingle k times)
-      aggregate(shingles(text), array_repeat(lit(Long.MaxValue), k),
-        (acc, s) => transform(sequence(lit(0), lit(k - 1)),
-          i => least(element_at(acc, i + 1), xxhash64(i, s))))
-    }
+  def minHashSignature(text: Column, k: Int): Column = {
+    // ONE md5 per shingle; the k-minima fold is the codegen MinHashSig
+    // expression (the HOF fold rebuilt a k-element accumulator array per
+    // shingle, interpreted) — identical affine-family math, oracle-locked
+    val hs = transform(shingles(text), s => pmod(md5Hash64(s), lit(P)))
+    graft.functions.MinHashSig.of(hs, hashA(k), hashB(k), P)
+  }
 
   /** Banded rows `(doc_id, band, bucket)`; the bucket key is the band's
     * signature slice rendered as a string (no second hash — keeps the
-    * portable path engine-identical; the shuffle key is ≤ r·20 chars).
+    * buckets engine-identical; the shuffle key is ≤ r·20 chars).
     */
-  def minHashBanded(docs: DataFrame, k: Int = 16, bands: Int = 4,
-                    portable: Boolean = false): DataFrame = {
+  def minHashBanded(docs: DataFrame, k: Int = 16, bands: Int = 4): DataFrame = {
     val r = k / bands
     withPlantedDups(docs)
-      .select(col("doc_id"), minHashSignature(col("text"), k, portable).as("sig"))
+      .select(col("doc_id"), minHashSignature(col("text"), k).as("sig"))
       .select(col("doc_id"),
         explode(transform(sequence(lit(0), lit(bands - 1)),
           b => struct(b.as("band"),
@@ -315,11 +304,10 @@ object Dedup {
   }
 
   def minHashLshCandidates(docs: DataFrame, k: Int = 16, bands: Int = 4,
-                           portable: Boolean = false,
                            maxBucket: Int = 64): DataFrame =
     candidatePairs(
       // self-join inside candidatePairs would otherwise recompute signatures
-      minHashBanded(docs, k, bands, portable)
+      minHashBanded(docs, k, bands)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       maxBucket)
 
@@ -332,9 +320,8 @@ object Dedup {
     * largest allocation in the pipeline; candidates are linear and capped
     * by maxBucket).
     */
-  def minHashDedupPairs(docs: DataFrame, threshold: Double = 0.8,
-                        portable: Boolean = false): DataFrame = {
-    val cands = minHashLshCandidates(docs, portable = portable)
+  def minHashDedupPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
+    val cands = minHashLshCandidates(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ids = cands.select(col("a_id").as("doc_id"))
       .union(cands.select(col("b_id").as("doc_id"))).distinct()
@@ -353,7 +340,7 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 
-  /** Full DuckDB replication of the portable MinHash-LSH dedup pipeline —
+  /** Full DuckDB replication of the MinHash-LSH dedup pipeline —
     * the oracle for `q_doc_minhash_pairs`.
     */
   def minHashOracleSql(k: Int = 16, bands: Int = 4, threshold: Double = 0.8,
@@ -361,7 +348,7 @@ object Dedup {
     s"""WITH ${minHashPairCtes(k, bands, threshold, maxBucket)}
        SELECT a_id, b_id, jaccard FROM dup_pairs"""
 
-  /** The CTE list reproducing the portable pipeline up to a `dup_pairs`
+  /** The CTE list reproducing the pipeline up to a `dup_pairs`
     * relation (verified pairs at `threshold`) — shared by the pair oracle
     * and the cluster oracles, so all three check the SAME pair graph.
     */
@@ -507,9 +494,8 @@ object Dedup {
     * degrades to a (skew-splittable) shuffle join when it does not,
     * instead of OOMing the driver on a hint it can never override.
     */
-  def clusterDedupKeep(docs: DataFrame, threshold: Double = 0.8,
-                       portable: Boolean = false): DataFrame = {
-    val clusters = dupClusters(minHashDedupPairs(docs, threshold, portable))
+  def clusterDedupKeep(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
+    val clusters = dupClusters(minHashDedupPairs(docs, threshold))
     withPlantedDups(docs)
       .join(clusters, Seq("doc_id"), "left")
       .filter(col("cluster_id").isNull || col("cluster_id") === col("doc_id"))
@@ -532,7 +518,7 @@ object Dedup {
        comp AS (SELECT src AS doc_id, MIN(dst) AS cluster_id
                 FROM closure GROUP BY src)"""
 
-  /** Full DuckDB replication of [[dupClusters]] over the portable MinHash
+  /** Full DuckDB replication of [[dupClusters]] over the MinHash
     * pair graph — the oracle for `q_doc_dup_clusters`.
     */
   def dupClustersOracleSql(k: Int = 16, bands: Int = 4, threshold: Double = 0.8,
@@ -568,27 +554,22 @@ object Dedup {
     * 64-element sign fold) was interpreted and allocated per element;
     * identical bit math (shiftRightUnsigned votes, >0 sign), oracle-locked.
     */
-  private def simHashSig(text: Column, portable: Boolean): Column = {
-    val hashes =
-      if (portable) transform(split(text, " "), tok => md5Hash64(tok))
-      else transform(split(text, " "), tok => xxhash64(tok))
-    graft.functions.SimHashBits.of(hashes)
-  }
+  private def simHashSig(text: Column): Column =
+    graft.functions.SimHashBits.of(transform(split(text, " "), tok => md5Hash64(tok)))
 
-  def simHashes(docs: DataFrame, portable: Boolean = false): DataFrame =
+  def simHashes(docs: DataFrame): DataFrame =
     withPlantedDups(docs)
-      .select(col("doc_id"), simHashSig(col("text"), portable).as("simhash"))
+      .select(col("doc_id"), simHashSig(col("text")).as("simhash"))
 
   /** Candidate pairs by 16-bit chunk bucketing (hamming ≤ 3 pairs must share
     * at least one of 4 chunks), verified by bit_count(xor). Bucket pair
     * emission is bounded via [[candidatePairs]].
     */
   def simHashNearDups(docs: DataFrame, maxHamming: Int = 8,
-                      portable: Boolean = false,
                       maxBucket: Int = 64): DataFrame = {
     // signatures computed ONCE and cached; every downstream use (bucketing,
     // the candidate self-join, both verify joins) is narrow off the cache
-    val h = simHashes(docs, portable)
+    val h = simHashes(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val chunked = h.select(col("doc_id"),
       explode(transform(sequence(lit(0), lit(3)),
@@ -605,7 +586,7 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Full DuckDB replication of the portable SimHash near-dup pipeline —
+  /** Full DuckDB replication of the SimHash near-dup pipeline —
     * the oracle for `q_doc_simhash_neardups`.
     */
   def simHashOracleSql(maxHamming: Int = 8, maxBucket: Int = 64): String =

@@ -69,31 +69,37 @@ object Transcripts {
     val path = materialized.getOrElseUpdate(key, {
       val out = java.nio.file.Paths.get(
         System.getProperty("java.io.tmpdir"), s"graft_transcripts_$key")
-      if (!java.nio.file.Files.exists(out.resolve("_SUCCESS"))) {
-        // cross-process safety: stage under a unique name, then one atomic
-        // rename publishes the cache (a concurrent writer's rename losing
-        // the race just discards its staging copy)
-        val stage = out.resolveSibling(
-          s"${out.getFileName}.stage-${java.lang.ProcessHandle.current.pid}")
+      publishOnce(out, "_SUCCESS") { stage =>
         fromEventsDerived(spark, sfDir).write.mode("overwrite")
           .parquet(stage.toString)
-        try java.nio.file.Files.move(stage, out,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException |
-               _: java.nio.file.FileSystemException =>
-            deleteRec(stage.toFile) // lost the race; the cache already exists
-        }
       }
       out.toString
     })
     graft.io.Parquet.read(spark, path)
   }
 
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    f.delete()
-  }
+  // JVM-unique part of a staging name: two builders in the same JVM must
+  // never share a staging directory
+  private val stageNonce = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Builds the cache directory `dir` unless `dir/marker` exists, safely
+    * across processes and threads: `build` writes into a staging sibling
+    * named with the pid and a JVM-unique nonce, and one atomic rename
+    * publishes it. A builder whose rename loses the race discards its
+    * staging copy; the winner's directory stands.
+    */
+  private[graft] def publishOnce(dir: java.nio.file.Path, marker: String)(
+      build: java.nio.file.Path => Unit): Unit =
+    if (!java.nio.file.Files.exists(dir.resolve(marker))) {
+      val stage = dir.resolveSibling(s"${dir.getFileName}.stage-" +
+        s"${java.lang.ProcessHandle.current.pid}-${stageNonce.incrementAndGet()}")
+      build(stage)
+      try java.nio.file.Files.move(stage, dir,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.nio.file.FileSystemException => // lost the race
+        graft.Bench.deleteRec(stage.toString)
+      }
+    }
 
   /** The raw (unmaterialized) derivation. Keep in lockstep with [[oracleCte]]. */
   def fromEventsDerived(spark: SparkSession, sfDir: String): DataFrame = {

@@ -52,17 +52,6 @@ class DedupSpec extends SparkTestBase {
       s"verify-join shingles not candidate-gated:\n$plan")
   }
 
-  test("portable (md5) minhash finds planted near-dups too") {
-    val pairs = Dedup.minHashDedupPairs(docs, portable = true)
-      .select($"a_id", $"b_id").as[(Long, Long)].collect().toSet
-    val plantedNear = docs.filter($"doc_id" % 10 === 1)
-      .select($"doc_id").as[Long].collect()
-      .map(id => (id, id + 200000)).toSet
-    val found = plantedNear.intersect(pairs)
-    assert(found.size >= (plantedNear.size * 8) / 10,
-      s"found only ${found.size}/${plantedNear.size} planted near-dups")
-  }
-
   test("degenerate corpus: candidate pair count stays LINEAR, not B^2") {
     // 1000 identical docs — a single LSH bucket; uncapped enumeration
     // would emit ~500k pairs, the star fallback emits exactly n-1
@@ -84,8 +73,8 @@ class DedupSpec extends SparkTestBase {
   test("dedup candidate generation never plans an all-pairs join") {
     val emb = Similarity.embeddings(spark, sfDir)
     Seq(
-      "minhash" -> Dedup.minHashDedupPairs(docs, portable = true),
-      "simhash" -> Dedup.simHashNearDups(docs, portable = true),
+      "minhash" -> Dedup.minHashDedupPairs(docs),
+      "simhash" -> Dedup.simHashNearDups(docs),
       "cosine" -> Similarity.cosineNearDups(emb)).foreach { case (name, df) =>
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), s"$name plans a cartesian")
@@ -149,9 +138,9 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("clusterDedupKeep: one survivor per cluster, n_merged partitions the corpus") {
-    val kept = Dedup.clusterDedupKeep(docs, portable = true).cache()
+    val kept = Dedup.clusterDedupKeep(docs).cache()
     val clusters = Dedup.dupClusters(
-      Dedup.minHashDedupPairs(docs, portable = true)).cache()
+      Dedup.minHashDedupPairs(docs)).cache()
     val planted = Dedup.withPlantedDups(docs).count()
     // every cluster member except its representative was dropped
     assert(kept.count() == planted - clusters.filter($"doc_id" =!= $"cluster_id").count())
@@ -184,7 +173,7 @@ class DedupSpec extends SparkTestBase {
       ($"id" + 500000).as("doc_id"),
       lit("giant boilerplate body repeated across the corpus verbatim").as("text"),
       lit("en").as("lang"), lit("synthetic").as("source"), lit(59).as("n_chars"))
-    val kept = Dedup.clusterDedupKeep(giant, portable = true)
+    val kept = Dedup.clusterDedupKeep(giant)
     assert(!kept.queryExecution.analyzed.toString.contains("ResolvedHint"),
       "cluster map join carries a forced hint")
     val rows = kept.as[(Long, Long)].collect()
@@ -219,7 +208,7 @@ class DedupSpec extends SparkTestBase {
   test("shingle hashes: docs shorter than n hash without error (ANSI get() path)") {
     val tiny = Seq((1L, "solo"), (2L, "two words"), (3L, "three word doc"))
       .toDF("doc_id", "text")
-      .select($"doc_id", Dedup.wordHashes($"text", portable = true).as("wh"))
+      .select($"doc_id", Dedup.wordHashes($"text").as("wh"))
       .select($"doc_id", Dedup.shingleHashesFromWords($"wh").as("sh"))
     val got = tiny.as[(Long, Seq[Long])].collect().toMap
     assert(got.keySet == Set(1L, 2L, 3L))
@@ -264,7 +253,7 @@ class DedupSpec extends SparkTestBase {
         i => (0 until n).foldLeft(lit(0L): org.apache.spark.sql.Column)((acc, k) =>
           pmod(acc * Dedup.ShingleA + coalesce(get(wh, i + k), lit(0L)),
             lit(Dedup.P)))))
-    val whCol = Dedup.wordHashes($"text", portable = true)
+    val whCol = Dedup.wordHashes($"text")
     val mismatched = Dedup.withPlantedDups(docs)
       .select(whCol.as("wh"))
       .select(Dedup.shingleHashesFromWords($"wh").as("got"),
@@ -272,7 +261,7 @@ class DedupSpec extends SparkTestBase {
       .filter(not($"got" <=> $"want"))
     assert(mismatched.count() == 0)
     val tiny = Seq("solo", "two words", "a b c d", "x x x x x").toDF("text")
-      .select(Dedup.wordHashes($"text", portable = true).as("wh"))
+      .select(Dedup.wordHashes($"text").as("wh"))
       .select(Dedup.shingleHashesFromWords($"wh").as("got"),
         ref($"wh", 3).as("want"))
       .filter(not($"got" <=> $"want"))
@@ -287,8 +276,8 @@ class DedupSpec extends SparkTestBase {
     // cross-query cache share the bench's related queries rely on
     // (measured: the minhash family re-derived its persisted banded
     // relation per query, ~3x the family's cost)
-    val b1 = Dedup.minHashBanded(docs, portable = true)
-    val b2 = Dedup.minHashBanded(docs, portable = true)
+    val b1 = Dedup.minHashBanded(docs)
+    val b2 = Dedup.minHashBanded(docs)
     assert(b1.queryExecution.analyzed.sameResult(b2.queryExecution.analyzed),
       "MinHashSig constructions do not canonicalize equal")
     val e = Similarity.embeddings(spark, sfDir)
