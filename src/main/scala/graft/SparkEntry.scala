@@ -39,8 +39,8 @@ object SparkEntry {
   /** Row severity over the transcripts CTE `t` — mirrors Router.rowSeverity. */
   private val sevSql: String = """CASE
       WHEN regexp_matches(text, '^10\.') THEN
-        CASE WHEN CAST(regexp_extract(text, '" (\d{3}) ', 1) AS INT) >= 500 THEN 17
-             WHEN CAST(regexp_extract(text, '" (\d{3}) ', 1) AS INT) >= 400 THEN 13
+        CASE WHEN TRY_CAST(regexp_extract(text, '" (\d{3}) ', 1) AS INT) >= 500 THEN 17
+             WHEN TRY_CAST(regexp_extract(text, '" (\d{3}) ', 1) AS INT) >= 400 THEN 13
              ELSE 9 END
       WHEN starts_with(text, '{') THEN
         CASE json_extract_string(text, '$.level')
@@ -52,8 +52,8 @@ object SparkEntry {
         CASE regexp_extract(text, 'level=(\w+)', 1)
              WHEN 'error' THEN 17 WHEN 'warn' THEN 13 ELSE 9 END
       WHEN starts_with(text, '<') THEN
-        CASE WHEN CAST(regexp_extract(text, '^<(\d+)>', 1) AS INT) % 8 <= 3 THEN 17
-             WHEN CAST(regexp_extract(text, '^<(\d+)>', 1) AS INT) % 8 = 4 THEN 13
+        CASE WHEN TRY_CAST(regexp_extract(text, '^<(\d+)>', 1) AS INT) % 8 <= 3 THEN 17
+             WHEN TRY_CAST(regexp_extract(text, '^<(\d+)>', 1) AS INT) % 8 = 4 THEN 13
              ELSE 9 END
       ELSE 9 END"""
 
@@ -384,11 +384,12 @@ object SparkEntry {
             lit("opt"), lit("null")),
           lit("drop_me"), map(lit("x"), lit("-"))).as("m"),
         array(col("level"), lit(""), lit("-"), lit("x")).as("arr"))
-      val mType = nested.schema("m").dataType
-      val aType = nested.schema("arr").dataType
+      val cfg = EnrichOps.RemoveEmptyConfig(removeEmptyLists = true,
+        removeEmptyMaps = true, emptyStringValues = EnrichOps.EmptySentinels)
+      def clean(c: String) = EnrichOps.cleanDeepConfigured(col(c), nested.schema(c).dataType, cfg)
       nested.select(col("conv_id"), col("turn_idx"),
-        to_json(EnrichOps.cleanDeep(col("m"), mType)).as("m_json"),
-        array_join(EnrichOps.cleanDeep(col("arr"), aType), ",").as("arr_joined"))
+        to_json(clean("m")).as("m_json"),
+        array_join(clean("arr"), ",").as("arr_joined"))
     },
       Transcripts.withT(
         """SELECT conv_id, turn_idx,

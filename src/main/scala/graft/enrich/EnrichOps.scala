@@ -291,40 +291,6 @@ object EnrichOps {
   def isEmptyValue(v: Column): Column =
     v.isNull || lower(v).isin(EmptySentinels: _*)
 
-  /** Map-typed variant: clean a MapType attribute column with higher-order
-    * `map_filter`, honoring prefix-scoped excludes (the reference's dotted
-    * exclude paths trimmed to the map's prefix, processor.go:225-239).
-    */
-  def cleanAttrMap(m: Column, excludeKeys: Set[String] = Set.empty): Column = {
-    val keep = map_filter(m, (k, v) =>
-      excludeKeys.foldLeft(!isEmptyValue(v)) { (acc, ex) => acc || k === ex })
-    keep
-  }
-
-  /** RECURSIVE removal (processor.go:194-221, 293-313): empty values are
-    * removed at every nesting level, and a map/array whose cleaned form is
-    * itself empty is removed from its parent — `{"a": {"x": ""}}` collapses
-    * to `{}`.
-    */
-  def cleanDeep(c: Column, dt: org.apache.spark.sql.types.DataType): Column = {
-    import org.apache.spark.sql.types._
-    def emptyAfterClean(v: Column, vt: DataType): Column = vt match {
-      case StringType => isEmptyValue(v)
-      case ArrayType(_, _) | MapType(_, _, _) => v.isNull || size(v) === 0
-      case _ => v.isNull
-    }
-    dt match {
-      case MapType(_, vt, _) =>
-        // the outer filter sees the ALREADY-cleaned value
-        map_filter(transform_values(c, (_, v) => cleanDeep(v, vt)),
-          (_, v) => !emptyAfterClean(v, vt))
-      case ArrayType(et, _) =>
-        filter(transform(c, v => cleanDeep(v, et)),
-          v => !emptyAfterClean(v, et))
-      case _ => c
-    }
-  }
-
   /** Full removeemptyvaluesprocessor config surface (config.go:77-83,
     * factory.go:50-57 defaults): remove_nulls defaults TRUE, empty
     * lists/maps default FALSE, strings filter ONLY against the configured
@@ -339,6 +305,11 @@ object EnrichOps {
       emptyStringValues: Seq[String] = Seq.empty,
       excludeKeys: Set[String] = Set.empty)
 
+  /** RECURSIVE removal under `cfg` (processor.go:194-221, 293-313): empty
+    * values are removed at every nesting level, and with empty lists/maps
+    * removed a container whose cleaned form is itself empty is removed from
+    * its parent — with "" configured, `{"a": {"x": ""}}` collapses to `{}`.
+    */
   def cleanDeepConfigured(c: Column,
                           dt: org.apache.spark.sql.types.DataType,
                           cfg: RemoveEmptyConfig,
@@ -517,26 +488,6 @@ object EnrichOps {
                           fields: Seq[FieldMapping],
                           required: Seq[String] = Seq.empty)
 
-  /** Versioned OCSF schema tables — required fields, enum constraints, and
-    * at-least-one groups for EVERY event class of EVERY version the
-    * reference ships (v1.0.0..v1.7.0), loaded from the generated
-    * `graft/ocsf_schema.tsv` via [[OcsfTables]] (extracted mechanically
-    * from ocsf/v1_x_y/schema.go's validators and requirement tables — the
-    * same per-class dispatch surface as ValidateClass).
-    */
-  object OcsfSchema {
-    /** `anyOf`: the generated "at least one of [...] must be set"
-      * constraints (e.g. authentication requires dst_endpoint OR service).
-      */
-    case class ClassSchema(required: Seq[String], enums: Map[String, Seq[Long]],
-                           anyOf: Seq[Seq[String]] = Seq.empty)
-
-    def forVersion(v: String): Map[Int, ClassSchema] =
-      OcsfTables.forVersion(v).map(_.classes.map { case (uid, r) =>
-        uid -> ClassSchema(r.required, r.enums, r.atLeastOne)
-      }).getOrElse(Map.empty)
-  }
-
   /** The full set of `to` paths a mapping populates: its configured fields
     * plus the engine-computed entries (class_uid, category_uid,
     * metadata.version, and type_uid when activity_id is mapped). The ONE
@@ -640,7 +591,8 @@ object EnrichOps {
         // out-of-enum value — is dropped, not emitted malformed. The schema
         // table (required + enums) comes from the versioned OCSF tables;
         // config-declared `required` is honored for classes outside them.
-        val schemaTable = OcsfSchema.forVersion(version)
+        val schemaTable = OcsfTables.forVersion(version).map(_.classes)
+          .getOrElse(Map.empty)
         mappings.zipWithIndex
           .foldRight(lit(true): Column) { case ((m, i), acc) =>
             // PER-MAPPING values, not the cross-mapping when-chains in
@@ -684,7 +636,7 @@ object EnrichOps {
                 }
               }.foldLeft(lit(true): Column)(_ && _)
             // "at least one of [...] must be set" constraint groups
-            val anyOfOk = cls.map(_.anyOf).getOrElse(Seq.empty)
+            val anyOfOk = cls.map(_.atLeastOne).getOrElse(Seq.empty)
               .map(_.map(p => pathValue(p).map(_.isNotNull)
                   .getOrElse(lit(false)))
                 .foldLeft(lit(false): Column)(_ || _))

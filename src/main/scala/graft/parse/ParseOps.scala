@@ -367,16 +367,6 @@ object ParseOps {
   def severityFromLevel(level: Column): Column =
     coalesce(typedLit(Map("error" -> SevError, "warn" -> SevWarn)).apply(level), lit(SevInfo))
 
-  /** Numeric range mapping (plugins/common_event_format_logs.yaml:74-82:
-    * `severity: mapping: error: - min: N max: M`): ordered (min,max,sev)
-    * ranges compiled into one when-chain; no match → default.
-    */
-  def severityFromRanges(value: Column, ranges: Seq[(Int, Int, Int)],
-                         default: Int = SevInfo): Column =
-    ranges.foldRight(lit(default): Column) { case ((lo, hi, sev), acc) =>
-      when(value >= lo && value <= hi, sev).otherwise(acc)
-    }
-
   // -------------------------------------------------------------------
   // Generic severity mapping compiler (stanza severity_parser `mapping:`):
   // each severity maps to a LIST of match rules — exact strings

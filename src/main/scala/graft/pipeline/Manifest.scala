@@ -8,7 +8,7 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectM
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-/** Run manifest: per-partition commit log with lineage + metrics, the
+/** Run manifest: per-partition commit log with metrics, the
   * engine's durable state for checkpointed resume.
   *
   * Semantics mirror the reference's rehydration checkpoint
@@ -20,7 +20,6 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   * Layout: `<manifestDir>/<stem>.json`, written atomically (tmp + rename),
   * where the stem is the partition name with every character outside
   * `[A-Za-z0-9=_-]` replaced by `_`; the entry body keeps the raw name.
-  * Every commit also appends `_snapshots/<seq>.json`, the lineage log.
   */
 final class Manifest(manifestDir: String) {
   import Manifest._
@@ -59,76 +58,10 @@ final class Manifest(manifestDir: String) {
     putStrings(e, "input_files", inputFiles)
     e.put("wall_ms", wallMs)
     writeAtomically(dir.resolve(s"${stem(partition)}.json"), e)
-    appendSnapshot(partition, rowsOut, inputFiles)
   }
 
-  // -------------------------------------------------------------------
-  // Snapshot log: every commit also appends a sequence-numbered snapshot
-  // entry with a parent pointer — the lineage chain an Iceberg catalog
-  // keeps per table commit. As-of reads reconstruct the committed
-  // partition set at any earlier snapshot.
-  // -------------------------------------------------------------------
-  private val snapDir: Path = dir.resolve("_snapshots")
-
-  // cached head sequence: one directory listing at construction, O(1) per
-  // commit after (a per-commit full listing would be O(N²) over a run)
-  private var lastSeq: Long = -1L
-
-  private def snapshotSeqs(): Seq[Long] =
-    if (!Files.isDirectory(snapDir)) Seq.empty
-    else jsonStems(snapDir).map(_.toLong).sorted
-
-  private def appendSnapshot(partition: String, rowsOut: Long,
-                             inputFiles: Seq[String]): Unit = {
-    Files.createDirectories(snapDir)
-    if (lastSeq < 0) lastSeq = snapshotSeqs().lastOption.getOrElse(0L)
-    val seq = lastSeq + 1
-    val s = Json.createObjectNode()
-      .put("sequence_number", seq).put("parent_id", seq - 1)
-      .put("partition", partition).put("rows_out", rowsOut)
-    putStrings(s, "input_files", inputFiles)
-    writeAtomically(snapDir.resolve(s"$seq.json"), s)
-    lastSeq = seq
-  }
-
-  /** The raw partition name a snapshot entry records. */
-  private def snapshotPartition(seq: Long): String =
-    field(readJson(snapDir.resolve(s"$seq.json")), "partition").asText
-
-  // Crash reconciliation: commit() writes the partition entry, then the
-  // snapshot entry — a kill between the two leaves a committed partition
-  // with no lineage row (isCommitted() then skips it on resume, so the
-  // lineage would disagree with committedPartitions() forever). Heal at
-  // construction: re-append a snapshot entry for every committed partition
-  // the lineage is missing, reconstructed from the partition file itself.
-  locally {
-    val inLineage = snapshotSeqs().map(n => stem(snapshotPartition(n))).toSet
-    (committedPartitions() -- inLineage).toSeq.sorted.foreach { st =>
-      val e = readJson(dir.resolve(s"$st.json"))
-      appendSnapshot(field(e, "partition").asText, field(e, "rows_out").asLong,
-        strings(field(e, "input_files")))
-    }
-  }
-
-  /** Current snapshot id (0 = empty table). */
-  def currentSnapshot(): Long = snapshotSeqs().lastOption.getOrElse(0L)
-
-  /** Time travel: stems of the partitions committed as of snapshot `seq`,
-    * the same form as [[committedPartitions]].
-    */
-  def committedPartitionsAsOf(seq: Long): Set[String] =
-    snapshotSeqs().filter(_ <= seq).map(n => stem(snapshotPartition(n))).toSet
-
-  def clear(): Unit = {
-    // the snapshot lineage must clear WITH the partition state, else
-    // time travel would claim cleared partitions are still committed
-    Seq(dir, snapDir).filter(Files.isDirectory(_)).foreach { d =>
-      val s = Files.list(d)
-      try s.iterator().asScala.filter(_.toString.endsWith(".json")).foreach(Files.delete)
-      finally s.close()
-    }
-    lastSeq = 0L
-  }
+  def clear(): Unit =
+    jsonStems(dir).foreach(st => Files.delete(dir.resolve(s"$st.json")))
 }
 
 object Manifest {

@@ -42,16 +42,19 @@ object Router {
     * (status class for access/json/csv/kv/syslog lines; default INFO).
     * This is the whole-pipeline severity resolution used by routing. Each
     * branch extracts its field once and maps it through a literal table
-    * (see [[ParseOps.severityFromStatus]]).
+    * (see [[ParseOps.severityFromStatus]]). A malformed line (an access line
+    * without a status, a syslog line without a numeric priority or with one
+    * past `Int.MaxValue`, a CSV line without a second field) is INFO, with
+    * ANSI mode on or off: the extractions use `try_cast`/`try_element_at`.
     */
   def rowSeverity(): Column = {
     val nginxStatus = regexp_extract(col("text"), """" (\d{3}) """, 1)
     val jsonLevel = get_json_object(col("text"), "$.level")
-    val csvLevel = element_at(split(col("text"), ","), 2)
+    val csvLevel = try_element_at(split(col("text"), ","), lit(2))
     val kvLevel = regexp_extract(col("text"), """level=(\w+)""", 1)
-    val syslogSev = regexp_extract(col("text"), """^<(\d+)>""", 1).cast("int") % 8
+    val syslogSev = regexp_extract(col("text"), """^<(\d+)>""", 1).try_cast("int") % 8
     when(ParseOps.isNginx,
-        ParseOps.severityFromStatus(nginxStatus.cast("int")))
+        ParseOps.severityFromStatus(nginxStatus.try_cast("int")))
       .when(ParseOps.isJson, ParseOps.severityFromLevel(jsonLevel))
       .when(ParseOps.isCsv, ParseOps.severityFromLevel(csvLevel))
       .when(ParseOps.isKv, ParseOps.severityFromLevel(kvLevel))

@@ -167,9 +167,6 @@ object StreamingPipeline {
     *     micro-batch (NOT the batch runner's written-files count: re-listing
     *     the sinks tree every micro-batch would be O(total partitions) per
     *     batch, superlinear over a run).
-    *
-    * The manifest is opened once per sink, not per micro-batch: opening it
-    * reads every lineage entry.
     */
   def manifestSink(spec: graft.pipeline.Pipeline.PipelineSpec,
                    outRoot: String): (DataFrame, Long) => Unit = {

@@ -18,8 +18,10 @@ class EnrichEdgeSpec extends SparkTestBase {
     val df = Seq(1).toDF("x").select(
       map(lit("a"), lit("v"), lit("b"), lit(""), lit("keep_me"), lit("-"),
         lit("c"), lit("null")).as("attrs"))
-    val cleaned = df.select(
-      EnrichOps.cleanAttrMap(col("attrs"), excludeKeys = Set("keep_me")).as("m"))
+    val cfg = EnrichOps.RemoveEmptyConfig(emptyStringValues = EnrichOps.EmptySentinels,
+      excludeKeys = Set("keep_me"))
+    val cleaned = df.select(EnrichOps.cleanDeepConfigured(col("attrs"),
+        df.schema("attrs").dataType, cfg).as("m"))
       .select(map_keys(col("m")).as("ks")).collect().head.getSeq[String](0).sorted
     assert(cleaned == Seq("a", "keep_me"))
   }

@@ -264,8 +264,9 @@ class ExprLangSpec extends SparkTestBase {
 
   test("severity range mapping (common_event_format parity)") {
     val df = Seq(3, 7, 11).toDF("v")
-    val sev = graft.parse.ParseOps.severityFromRanges(col("v"),
-      Seq((0, 5, 17), (6, 9, 13)))
+    import graft.parse.ParseOps.{RangeRule, compileSeverityMapping}
+    val sev = compileSeverityMapping(col("v"),
+      Seq(17 -> Seq(RangeRule(0, 5)), 13 -> Seq(RangeRule(6, 9))))
     val got = df.select(sev.as("s")).collect().map(_.getInt(0)).toSeq
     assert(got == Seq(17, 13, 9))
   }

@@ -25,14 +25,14 @@ class OcsfTablesSpec extends SparkTestBase {
   }
 
   test("generated v1.1.0 tables match the hand-verified round-4 values") {
-    val t = EnrichOps.OcsfSchema.forVersion("1.1.0")
+    val t = OcsfTables.forVersion("1.1.0").get.classes
     // File System Activity (v1_1_0/schema.go validateFileActivity)
     assert(t(1001).required == Seq("activity_id", "actor", "category_uid",
       "class_uid", "device", "file", "metadata", "severity_id", "time", "type_uid"))
     assert(t(1001).enums("activity_id") == ((0L to 14L) :+ 99L))
     assert(t(1001).enums("type_uid") == ((100100L to 100114L) :+ 100199L))
     // Authentication incl. the anyOf constraint
-    assert(t(3002).anyOf == Seq(Seq("dst_endpoint", "service")))
+    assert(t(3002).atLeastOne == Seq(Seq("dst_endpoint", "service")))
     assert(t(3002).enums("logon_type_id") ==
       (Seq(0L, 2L, 3L, 4L, 5L) ++ (7L to 13L) :+ 99L))
     assert(t(3002).enums("auth_protocol_id") == ((0L to 10L) :+ 99L))
@@ -54,7 +54,7 @@ class OcsfTablesSpec extends SparkTestBase {
   }
 
   test("generated v1.7.0 tables keep the version-dimension differences") {
-    val t = EnrichOps.OcsfSchema.forVersion("1.7.0")
+    val t = OcsfTables.forVersion("1.7.0").get.classes
     // 1.7 WIDENS authentication enums vs 1.1
     assert(t(3002).enums("activity_id") == ((0L to 7L) :+ 99L))
     assert(t(3002).enums("auth_protocol_id") == ((0L to 12L) :+ 99L))
@@ -63,7 +63,7 @@ class OcsfTablesSpec extends SparkTestBase {
       ((0L to 5L) ++ (7L to 13L) :+ 99L))
     // and RELAXES http requirements into an any-of constraint
     assert(!t(4002).required.contains("http_request"))
-    assert(t(4002).anyOf == Seq(Seq("http_request", "http_response")))
+    assert(t(4002).atLeastOne == Seq(Seq("http_request", "http_response")))
     assert(t(4002).enums("activity_id") == ((0L to 9L) :+ 99L))
     assert(t(4002).enums("observation_point_id") == ((0L to 4L) :+ 99L))
   }

@@ -154,6 +154,25 @@ class PipelineSpec extends SparkTestBase {
     Bench.deleteRec(base)
   }
 
+  test("malformed lines under ANSI route as INFO instead of aborting the run") {
+    import scala.jdk.CollectionConverters._
+    val base = java.nio.file.Files.createTempDirectory("ansi").toString
+    val gen = Transcripts.generate(spark, nTurns = 4000, nConvs = 20)
+    // copies of generated rows, each with one malformed line as its text
+    val textAt = gen.schema.fieldIndex("text")
+    val bad = gen.limit(RouterSpec.ansiFailing.size).collect().toSeq
+      .zip(RouterSpec.ansiFailing)
+      .map { case (r, line) => org.apache.spark.sql.Row.fromSeq(r.toSeq.updated(textAt, line)) }
+    Transcripts.writePartitioned(
+      gen.union(spark.createDataFrame(bad.asJava, gen.schema)), s"$base/in")
+    val r = withAnsi(true) {
+      PipelineRunner.run(spark, Canonical, s"$base/in", s"$base/out")
+    }
+    assert(r.rowsIn == 4000 + RouterSpec.ansiFailing.size)
+    assert(r.sinkCounts.values.sum == r.rowsIn)
+    Bench.deleteRec(base)
+  }
+
   test("footer counts equal Spark counts when an operator drops rows") {
     val base = java.nio.file.Files.createTempDirectory("footers").toString
     Transcripts.writePartitioned(
@@ -294,6 +313,9 @@ class ResumeSpec extends SparkTestBase {
     // full run → baseline counts
     val full = PipelineRunner.run(spark, Pipeline.Canonical, input, out)
     assert(full.partitionsProcessed == parts.size)
+    // the manifest is one entry per partition, nothing else
+    assert(new java.io.File(s"$out/_manifest").list().toSet ==
+      parts.map(p => p.replace('/', '_') + ".json").toSet)
     val fullCounts = full.sinkCounts
 
     // simulate a kill: wipe outputs, pre-commit HALF the partitions
@@ -476,47 +498,31 @@ class ResumeSpec extends SparkTestBase {
       s"per-record window not bucket-partitioned:\n$plan")
   }
 
-  test("manifest snapshot log: lineage sequence + as-of time travel") {
-    val base = java.nio.file.Files.createTempDirectory("snap").toString
+  test("manifest: isCommitted, re-commit keeps one entry, clear() empties") {
+    val base = java.nio.file.Files.createTempDirectory("manifest").toString
     val m = new Manifest(base)
     Seq("p1", "p2", "p3").foreach { p =>
       m.commit(p, 1L, Map("out" -> 1L), Seq(p), 0L)
     }
-    assert(m.currentSnapshot() == 3L)
-    assert(m.committedPartitionsAsOf(1L) == Set("p1"))
-    assert(m.committedPartitionsAsOf(2L) == Set("p1", "p2"))
-    assert(m.committedPartitionsAsOf(m.currentSnapshot()) == Set("p1", "p2", "p3"))
-    // as-of matches the live view at head
-    assert(m.committedPartitionsAsOf(3L) == m.committedPartitions())
+    assert(m.committedPartitions() == Set("p1", "p2", "p3"))
     assert(m.isCommitted("p1") && !m.isCommitted("p4"))
     // re-committing a partition does not duplicate the listing
     m.commit("p1", 1L, Map("out" -> 1L), Seq("p1"), 0L)
     assert(m.committedPartitions() == Set("p1", "p2", "p3"))
-    // clear() resets the snapshot lineage WITH the partition state
     m.clear()
-    assert(m.currentSnapshot() == 0L && m.committedPartitions().isEmpty)
-    m.commit("p9", 1L, Map("out" -> 1L), Seq("p9"), 0L)
-    assert(m.currentSnapshot() == 1L)
-    assert(m.committedPartitionsAsOf(1L) == Set("p9"))
+    assert(m.committedPartitions().isEmpty && !m.isCommitted("p1"))
     Bench.deleteRec(base)
   }
 
-  test("manifest heals a commit/snapshot split: partition committed, lineage missing") {
-    val base = java.nio.file.Files.createTempDirectory("snapheal").toString
+  test("opening a manifest parses no entry: a corrupt entry still counts as committed") {
+    val base = java.nio.file.Files.createTempDirectory("manifestopen").toString
+    val p = "year=2024/month=1/day=1/hour=0"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(base,
+      "year=2024_month=1_day=1_hour=0.json"), "{not json")
     val m = new Manifest(base)
-    m.commit("p1", 1L, Map("out" -> 1L), Seq("f1"), 0L)
-    m.commit("p2", 2L, Map("out" -> 2L), Seq("f2"), 0L)
-    // simulate a kill between the partition write and appendSnapshot():
-    // delete p2's lineage entry, keep its partition file
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$base/_snapshots/2.json"))
-    // a fresh Manifest reconciles: p2 re-enters the lineage
-    val m2 = new Manifest(base)
-    assert(m2.committedPartitions() == m.committedPartitions())
-    assert(m2.committedPartitionsAsOf(m2.currentSnapshot()) == Set("p1", "p2"))
-    assert(m2.currentSnapshot() == 2L) // healed entry fills the lineage head
-    // idempotent: constructing again appends nothing
-    val m3 = new Manifest(base)
-    assert(m3.currentSnapshot() == 2L)
+    assert(m.isCommitted(p))
+    assert(m.uncommitted(Seq(p, "year=2024/month=1/day=1/hour=1")) ==
+      Seq("year=2024/month=1/day=1/hour=1"))
     Bench.deleteRec(base)
   }
 

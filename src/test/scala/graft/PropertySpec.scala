@@ -52,7 +52,7 @@ class PropertySpec extends AnyFunSuite {
         val files = try walk.iterator().asScala
           .filter(java.nio.file.Files.isRegularFile(_)).toList
         finally walk.close()
-        files.size == 2 &&
+        files.size == 1 &&
           files.forall(f => mapper.readTree(f.toFile).get("partition").asText == s) &&
           m.isCommitted(s)
       }

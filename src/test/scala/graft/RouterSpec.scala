@@ -15,6 +15,7 @@ case class Turn(conv_id: String, turn_idx: Int, role: String, text: String,
   */
 class RouterSpec extends SparkTestBase {
   import spark.implicits._
+  import RouterSpec._
 
   lazy val turns: Seq[Turn] =
     Transcripts.fromEvents(spark, sfDir)
@@ -154,13 +155,6 @@ class RouterSpec extends SparkTestBase {
       .otherwise(ParseOps.SevInfo)
   }
 
-  private def withAnsi[T](on: Boolean)(body: => T): T = {
-    val key = "spark.sql.ansi.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, on.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
   /** (text, chain, single extraction) for every line, evaluated both on
     * the driver (a local relation folds the projection) and in generated
     * code (after a shuffle).
@@ -169,15 +163,6 @@ class RouterSpec extends SparkTestBase {
     Seq(lines, lines.repartition(2)).flatMap(_.select(col("text"),
         chainSeverity.as("chain"), Router.rowSeverity().as("single"))
       .as[(String, Integer, Integer)].collect())
-
-  private def nginx(status: String): String =
-    s"""10.1.2.3 - user1 [01/Jan/2024:00:00:00 +0000] "GET /a HTTP/1.1" $status 12 "-" "agent/1""""
-
-  /** Lines on which the chain fails under ANSI: no status, no syslog
-    * priority, an int overflow, a CSV line without a second field.
-    */
-  private val ansiFailing = Seq(nginx("1000"), "10.no status here", "<>no priority",
-    "<99999999999>overflow", "01/Jan/2024 no comma")
 
   private val edgeLines: Seq[String] =
     Seq("399", "400", "499", "500", "999", "000").map(nginx) ++
@@ -207,13 +192,29 @@ class RouterSpec extends SparkTestBase {
       val bad = got.filter { case (_, a, b) => a != b }
       assert(bad.isEmpty, s"ansi=$ansi: ${bad.take(5).mkString("; ")}")
     }
-    // where the chain fails under ANSI, the single extraction fails too,
-    // and it fails nowhere else (the edge lines above ran clean)
+    // where the chain fails under ANSI, the single extraction does not:
+    // a malformed line gets the ANSI-off chain's value (INFO)
+    val ansiOff = withAnsi(false) {
+      ansiFailing.map(line => Seq(line).toDF("text").select(chainSeverity).head().getInt(0))
+    }
+    assert(ansiOff.forall(_ == ParseOps.SevInfo))
     withAnsi(true) {
-      for (line <- ansiFailing; sev <- Seq(chainSeverity, Router.rowSeverity())) {
-        val r = scala.util.Try(Seq(line).toDF("text").repartition(1).select(sev).collect())
-        assert(r.isFailure, s"expected an ANSI error on '$line'")
+      for ((line, want) <- ansiFailing.zip(ansiOff)) {
+        val r = scala.util.Try(Seq(line).toDF("text").repartition(1)
+          .select(Router.rowSeverity()).head().getInt(0))
+        assert(r == scala.util.Success(want), s"'$line': $r")
       }
     }
   }
+}
+
+object RouterSpec {
+  private def nginx(status: String): String =
+    s"""10.1.2.3 - user1 [01/Jan/2024:00:00:00 +0000] "GET /a HTTP/1.1" $status 12 "-" "agent/1""""
+
+  /** Lines on which a plain cast fails under ANSI: no status, no syslog
+    * priority, an int overflow, a CSV line without a second field.
+    */
+  val ansiFailing: Seq[String] = Seq(nginx("1000"), "10.no status here", "<>no priority",
+    "<99999999999>overflow", "01/Jan/2024 no comma")
 }

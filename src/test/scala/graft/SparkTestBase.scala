@@ -17,4 +17,12 @@ object SparkTestSession {
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   def sfDir: String = SparkTestSession.SfDir
+
+  /** Run `body` with `spark.sql.ansi.enabled` set to `on`, then restore it. */
+  def withAnsi[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, on.toString)
+    try body finally spark.conf.set(key, prev)
+  }
 }
