@@ -2131,11 +2131,12 @@ object SparkEntry {
       val tt = t(s, d).select(col("conv_id"), col("turn_idx"), col("role"))
       // the two-snapshot table builds ONCE per input CONTENT (the cache key
       // is the source-file fingerprint, so a regenerated table at the same
-      // path rebuilds; the m4 suffix versions the METADATA FORMAT — the
-      // manifest-chain layout rejects old-format caches, so a format bump
-      // must miss) and publishes atomically (Transcripts.publishOnce) —
-      // repeated invocations time the PINNED SCAN only
-      val key = Transcripts.sourceFingerprint(d) + "_m4"
+      // path rebuilds; the m5 suffix versions the METADATA FORMAT — a
+      // table of an older layout fails its reads as corrupt metadata, so a
+      // format bump must miss) and publishes atomically
+      // (Transcripts.publishOnce) — repeated invocations time the PINNED
+      // SCAN only
+      val key = Transcripts.sourceFingerprint(d) + "_m5"
       val root = s"${System.getProperty("java.io.tmpdir")}/graft_icb_cache_$key"
       // the staging dir is built whole and renamed onto root (constructing a
       // table at root would create metadata/ and block that rename)

@@ -66,14 +66,6 @@ object Dedup {
       .groupBy(md5(col("text")).as("content_md5"))
       .agg(count(lit(1)).as("n_copies"), min(col("doc_id")).as("keep_doc_id"))
 
-  /** The deduplicated corpus itself (keep min doc_id per digest). */
-  def exactDedupKeep(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-    withPlantedDups(docs)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-  }
-
   // -------------------------------------------------------------------
   // n-gram Jaccard: 3-word shingles, set intersection/union
   // -------------------------------------------------------------------

@@ -65,7 +65,11 @@ object Ottl {
     (s.take(open).trim, s.substring(open + 1, close), cond)
   }
 
-  private[graft] def splitArgs(s: String): Seq[String] = {
+  /** Split `s` on every `sep` outside quotes and parens/brackets, trimming
+    * each piece; a trailing empty piece is dropped — a plain split corrupts
+    * `replace_pattern(body, 'a;b', 'x')` and `f(g(a, b), c)`.
+    */
+  private[graft] def splitTopLevel(s: String, sep: Char): Seq[String] = {
     val out = scala.collection.mutable.ListBuffer[String]()
     var depth = 0; var quote: Char = 0; val cur = new StringBuilder
     s.foreach { c =>
@@ -74,7 +78,7 @@ object Ottl {
         case '\'' | '"' => quote = c; cur += c
         case '(' | '[' => depth += 1; cur += c
         case ')' | ']' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.result().trim; cur.clear()
+        case `sep` if depth == 0 => out += cur.result().trim; cur.clear()
         case _ => cur += c
       }
     }
@@ -110,7 +114,7 @@ object Ottl {
   /** Compile ONE statement to a DataFrame transform. */
   def statement(src: String, columns: Set[String]): DataFrame => DataFrame = {
     val (fn, argSrc, whereSrc) = splitStatement(src)
-    val rawArgs = splitArgs(argSrc)
+    val rawArgs = splitTopLevel(argSrc, ',')
     val cond: Option[Column] = whereSrc.map(w => ExprLang.boolExpr(w, columns))
     // false-on-error: only a definite `true` condition applies the edit
     def guarded(old: Column, edited: Column): Column = cond match {
@@ -282,26 +286,9 @@ object Ottl {
     }
   }
 
-  /** Split a ';'-separated statement LIST respecting quotes and parens —
-    * a plain split corrupts `replace_pattern(body, 'a;b', 'x')`.
-    */
-  def splitStatements(src: String): Seq[String] = {
-    val out = scala.collection.mutable.ListBuffer[String]()
-    var depth = 0; var quote: Char = 0; val cur = new StringBuilder
-    src.foreach { c =>
-      if (quote != 0) { cur += c; if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c; cur += c
-        case '(' | '[' => depth += 1; cur += c
-        case ')' | ']' => depth -= 1; cur += c
-        case ';' if depth == 0 => out += cur.result().trim; cur.clear()
-        case _ => cur += c
-      }
-    }
-    val last = cur.result().trim
-    if (last.nonEmpty) out += last
-    out.toSeq.filter(_.nonEmpty)
-  }
+  /** The statements of a ';'-separated statement LIST; empty ones drop. */
+  def splitStatements(src: String): Seq[String] =
+    splitTopLevel(src, ';').filter(_.nonEmpty)
 
   /** A statement LIST folds into one plan, applied in order (OTTL statement
     * sequencing semantics — later statements see earlier edits).

@@ -15,20 +15,16 @@ import scala.jdk.CollectionConverters._
   * time-travel contract against plain files; `q_snapshot_read` is its
   * caller. Every record is JSON through [[Manifest]]'s codec.
   *
-  * Metadata I/O follows the spec's shape:
-  *  - each `vN.metadata.json` embeds the CUMULATIVE committed-partition
-  *    set (the analog of the spec's snapshot list, which metadata.json
-  *    also carries in full — real tables bound its growth with snapshot
-  *    expiry; same maintenance story here), so `commitPartition` and
-  *    `committedAsOf` read exactly ONE metadata file regardless of how
-  *    many versions exist;
-  *  - each commit's DATA FILE list lives in its own manifest file
-  *    (`snap-<v>-<nonce>.manifest`: `{"parent": .., "files": [..]}`, a
-  *    delta — never rewritten), chained by a parent pointer like a
-  *    manifest list. The metadata files stay O(#partitions) bytes
-  *    instead of O(#data-files), and time travel
-  *    (`dataFilesAsOf`) walks the chain: O(v) small delta reads, the same
-  *    cost as real Iceberg reading a snapshot's manifest list + manifests.
+  * Metadata I/O follows the spec's shape: each `vN.metadata.json` carries
+  * the WHOLE snapshot — `partitions`, an object from every committed
+  * partition name to its data-file list, in commit order (the analog of
+  * the spec's snapshot list, which metadata.json also carries in full —
+  * real tables bound its growth with snapshot expiry; same maintenance
+  * story here). So `commitPartition`, `committedAsOf` and `dataFilesAsOf`
+  * each read exactly ONE metadata file, however many versions exist.
+  * Callers commit one path per partition (`q_snapshot_read` commits one
+  * directory per batch), so a version file stays O(#partitions) bytes, the
+  * same order as the partition set alone.
   */
 class IcebergLikeTable(root: String) {
   import Manifest.{Json, field, putStrings, readJson, strings}
@@ -57,7 +53,7 @@ class IcebergLikeTable(root: String) {
   }
 
   protected case class Entry(snapshot: Long, partition: String, rows: Long,
-                             manifest: String, allPartitions: Seq[String])
+                             partitions: Seq[(String, Seq[String])])
 
   // overridable (protected) so tests can COUNT metadata reads and assert
   // the O(1)-reads-per-commit contract mechanically
@@ -66,16 +62,10 @@ class IcebergLikeTable(root: String) {
     if (!Files.exists(f)) None
     else {
       val n = readJson(f)
-      // old generations inlined the file list ("files":[...]), which the
-      // manifest layout dropped — that key is the discriminator, so real
-      // corruption of NEW-format files still reports as corruption
-      if (n.has("files"))
-        throw new IllegalStateException(
-          s"metadata $f was written by an older format generation " +
-            "(pre-manifest inline-file layout); rebuild the table or clear() it")
       Some(Entry(field(n, "snapshot").asLong, field(n, "partition").asText,
-        field(n, "rows").asLong, field(n, "manifest").asText,
-        strings(field(n, "all_partitions"))))
+        field(n, "rows").asLong,
+        field(n, "partitions").properties().iterator().asScala
+          .map(e => e.getKey -> strings(e.getValue)).toSeq))
     }
   }
 
@@ -89,35 +79,6 @@ class IcebergLikeTable(root: String) {
       val head = currentSnapshot()
       if (snapshot > head && head > 0) readEntry(head) else None
     }
-
-  // a manifest file: {"parent": <parent manifest name, null at the chain
-  // root>, "files": [<this commit's data-file paths>]}
-  private def writeManifest(name: String, parent: Option[String],
-                            files: Seq[String]): Unit = {
-    val m = Json.createObjectNode()
-    parent.fold(m.putNull("parent"))(m.put("parent", _))
-    putStrings(m, "files", files)
-    Files.write(metaDir.resolve(name), Json.writeValueAsBytes(m))
-  }
-
-  private def readManifestChain(name: String): Seq[String] = {
-    // walk child -> root, then restore commit order (root first).
-    // Cycle guard: a corrupted manifest whose parent pointer loops would
-    // otherwise hang this walk forever — corrupt metadata must FAIL LOUDLY
-    // (readEntry's contract), never spin
-    val rev = scala.collection.mutable.ArrayBuffer[Seq[String]]()
-    val visited = scala.collection.mutable.HashSet[String]()
-    var cur: Option[String] = Some(name)
-    while (cur.isDefined) {
-      if (!visited.add(cur.get))
-        throw new IllegalStateException(
-          s"corrupt manifest chain: cycle at '${cur.get}'")
-      val m = readJson(metaDir.resolve(cur.get))
-      rev += strings(field(m, "files"))
-      cur = Option(field(m, "parent").textValue)
-    }
-    rev.reverse.flatten.toSeq
-  }
 
   /** Optimistic commit: stage the metadata, then claim version v with an
     * exclusive hard link (atomic on POSIX — exactly one committer wins a
@@ -138,21 +99,16 @@ class IcebergLikeTable(root: String) {
       // reads and we'd claim head'+1 with a duplicate.
       val head = currentSnapshot()
       val headEntry = if (head > 0) readEntry(head) else None
-      val priorPartitions = headEntry.map(_.allPartitions).getOrElse(Seq.empty)
-      if (priorPartitions.toSet.contains(partition)) return
+      val prior = headEntry.map(_.partitions).getOrElse(Seq.empty)
+      if (prior.exists(_._1 == partition)) return
       val v = head + 1
-      // the manifest carries this commit's DELTA only and is written before
-      // the claim under a COMMITTER-UNIQUE name — a UUID, because racers in
-      // the same JVM commonly hold separate table instances (so an
-      // instance-local counter would collide, letting a loser overwrite and
-      // then delete the manifest the winner's metadata references); readers
-      // only follow pointers from CLAIMED metadata
-      val mfName = s"snap-$v-${java.util.UUID.randomUUID()}.manifest"
-      writeManifest(mfName, headEntry.map(_.manifest), inputFiles)
       val meta = Json.createObjectNode()
         .put("snapshot", v).put("parent", head).put("partition", partition)
-        .put("rows", rowsOut).put("manifest", mfName)
-      putStrings(meta, "all_partitions", priorPartitions :+ partition)
+        .put("rows", rowsOut)
+      val parts = meta.putObject("partitions")
+      (prior :+ (partition -> inputFiles)).foreach { case (p, files) =>
+        putStrings(parts, p, files)
+      }
       var tmp: Path = null
       try {
         tmp = Files.createTempFile(metaDir, s".v$v-", ".tmp")
@@ -165,35 +121,27 @@ class IcebergLikeTable(root: String) {
       } catch {
         case _: java.nio.file.FileAlreadyExistsException => // lost the race
       } finally {
-        // ANY non-win — lost race, staging/claim I/O error — cleans up both
-        // staging artifacts (tmp creation and write sit INSIDE the try so
-        // their failures reach this cleanup too). Only a process crash can
-        // leak a staged manifest — unreferenced, harmless to readers,
-        // reclaimed by clear()
+        // ANY non-win — lost race, staging/claim I/O error — deletes the
+        // staged file (tmp creation and write sit INSIDE the try so their
+        // failures reach this cleanup too)
         if (tmp != null) Files.deleteIfExists(tmp)
-        if (!committed) Files.deleteIfExists(metaDir.resolve(mfName))
       }
     }
   }
-
-  def isPartitionCommitted(partition: String): Boolean =
-    committed().contains(partition)
 
   def committed(): Set[String] =
     committedAsOf(currentSnapshot())
 
   /** ONE metadata read: the cumulative set embedded at `snapshot`. */
   def committedAsOf(snapshot: Long): Set[String] =
-    entryAt(snapshot).map(_.allPartitions.toSet).getOrElse(Set.empty)
+    entryAt(snapshot).map(_.partitions.map(_._1).toSet).getOrElse(Set.empty)
 
   /** Time travel over the DATA: every data file visible at `snapshot` —
-    * the file list a scan pinned to that snapshot would read. One metadata
-    * read plus the manifest chain (O(v) delta files, manifest-list
-    * parity); duplicates — within a commit or across commits — collapse.
+    * the file list a scan pinned to that snapshot would read. ONE metadata
+    * read; duplicates — within a commit or across commits — collapse.
     */
   def dataFilesAsOf(snapshot: Long): Seq[String] =
-    entryAt(snapshot)
-      .map(e => readManifestChain(e.manifest).distinct)
+    entryAt(snapshot).map(_.partitions.flatMap(_._2).distinct)
       .getOrElse(Seq.empty)
 
   def clear(): Unit = {

@@ -59,6 +59,16 @@ object Pipeline {
     // maxRecordsPerFile caps file size; coalesce bounds task counts)
     "batch" -> Seq(ParamSpec("max_records", default = Some("5000000"))))
 
+  /** batchprocessor send_batch_size analogue (manifest.yaml:86): output
+    * batches are bounded by capping records per written file. The cap is
+    * pipeline config (the spec's `batch` operator), not a writer flag;
+    * every sink writer passes it as `maxRecordsPerFile`.
+    */
+  def maxRecordsPerFile(spec: PipelineSpec): Long =
+    spec.operators.find(_.opType == "batch")
+      .flatMap(_.params.get("max_records"))
+      .getOrElse(OperatorParams("batch").head.default.get).toLong
+
   /** CheckParameters parity: unknown op, missing required, unsupported value
     * are all plan-time validation errors; defaults are applied here.
     */
@@ -221,12 +231,6 @@ object PipelineRunner {
           failure: Option[RandomFailure] = None, attempt: Int = 0): RunReport = {
     val manifest = new Manifest(s"$outRoot/_manifest")
     val transform = Pipeline.compile(spec, spark)
-    // batchprocessor send_batch_size analogue (manifest.yaml:86): output
-    // batches are bounded by capping records per written file; the cap is
-    // pipeline config (the spec's `batch` operator), not a runner flag
-    val recordCap = spec.operators.find(_.opType == "batch")
-      .flatMap(_.params.get("max_records"))
-      .getOrElse(Pipeline.OperatorParams("batch").head.default.get).toLong
     val conf = spark.sparkContext.hadoopConfiguration
     // one read-options object for every footer of the run: building it
     // copies the Hadoop conf, which per file would cost more than the read
@@ -273,7 +277,7 @@ object PipelineRunner {
       // leaves it writes, and the caller's session keeps its own mode
       transform(input).write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", recordCap)
+        .option("maxRecordsPerFile", Pipeline.maxRecordsPerFile(spec))
         .options(WriterOptions)
         .partitionBy("route", "year", "month", "day", "hour")
         .parquet(s"$outRoot/sinks")

@@ -184,6 +184,7 @@ object StreamingPipeline {
           .observe(obs, taps.head, taps.tail: _*)
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
+          .option("maxRecordsPerFile", graft.pipeline.Pipeline.maxRecordsPerFile(spec))
           .options(graft.pipeline.PipelineRunner.WriterOptions)
           .partitionBy("route", "year", "month", "day", "hour", "batch_id")
           .parquet(s"$outRoot/sinks")

@@ -17,13 +17,6 @@ class DedupSpec extends SparkTestBase {
     assert(dups.filter($"keep_doc_id" >= 100000).count() == 0)
   }
 
-  test("exactDedupKeep removes one row per planted duplicate") {
-    val all = Dedup.withPlantedDups(docs).count()
-    val kept = Dedup.exactDedupKeep(docs).count()
-    val planted = docs.filter($"doc_id" % 10 === 0).count()
-    assert(all - kept == planted)
-  }
-
   test("minhash-LSH candidates contain every planted exact pair") {
     val cands = Dedup.minHashLshCandidates(docs)
       .select($"a_id", $"b_id").as[(Long, Long)].collect().toSet

@@ -25,8 +25,8 @@ class IcebergLikeTableSpec extends SparkTestBase {
     val f = newTable()
     f.commitPartition("hour=2024-01-01-00", 10L, Seq("a.parquet"))
     f.commitPartition("hour=2024-01-01-01", 20L, Seq("b.parquet"))
-    assert(f.isPartitionCommitted("hour=2024-01-01-00"))
-    assert(!f.isPartitionCommitted("hour=2024-01-01-02"))
+    assert(f.committed().contains("hour=2024-01-01-00"))
+    assert(!f.committed().contains("hour=2024-01-01-02"))
     assert(f.committed().size == 2)
     val head = f.currentSnapshot()
     assert(head >= 2L) // one snapshot per commit, monotone
@@ -53,7 +53,7 @@ class IcebergLikeTableSpec extends SparkTestBase {
     val g = new IcebergLikeTable(root)
     assert(g.committed() == f.committed())
     assert(g.currentSnapshot() == f.currentSnapshot())
-    assert(g.isPartitionCommitted("p1"))
+    assert(g.committed().contains("p1"))
   }
 
   test("clear resets partitions AND lineage together") {
@@ -96,31 +96,16 @@ class IcebergLikeTableSpec extends SparkTestBase {
     assert(new IcebergLikeTable(root).currentSnapshot() == 2L)
   }
 
-  test("corrupt manifest-chain cycle fails loudly instead of hanging") {
-    val root = java.nio.file.Files.createTempDirectory("icb_cycle").toString
-    val t = new IcebergLikeTable(root)
-    t.commitPartition("p1", 1L, Seq("f1"))
-    t.commitPartition("p2", 1L, Seq("f2"))
-    val metaDir = java.nio.file.Paths.get(root, "metadata")
-    def manifestOf(prefix: String): java.nio.file.Path = {
-      val s = java.nio.file.Files.list(metaDir)
-      try s.iterator().asScala.find(
-        _.getFileName.toString.startsWith(prefix)).get
-      finally s.close()
-    }
-    val m1 = manifestOf("snap-1-"); val m2 = manifestOf("snap-2-")
-    // corrupt snap-1's parent pointer to point at its own child: the
-    // child->root walk becomes snap-2 -> snap-1 -> snap-2 -> ...
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val delta = mapper.readTree(m1.toFile)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    delta.put("parent", m2.getFileName.toString)
-    mapper.writeValue(m1.toFile, delta)
-    val fresh = new IcebergLikeTable(root)
-    val ex = intercept[IllegalStateException] {
-      fresh.dataFilesAsOf(fresh.currentSnapshot())
-    }
-    assert(ex.getMessage.contains("cycle"))
+  test("a version file without a partitions object is corrupt metadata") {
+    // the retired layout: partition set inline, file lists in side files
+    val root = java.nio.file.Files.createTempDirectory("icb_old").toString
+    val meta = java.nio.file.Paths.get(root, "metadata")
+    java.nio.file.Files.createDirectories(meta)
+    java.nio.file.Files.writeString(meta.resolve("v00001.metadata.json"),
+      """{"snapshot":1,"parent":0,"partition":"p","rows":1,""" +
+        """"manifest":"snap-1-x.manifest","all_partitions":["p"]}""")
+    val ex = intercept[IllegalStateException](new IcebergLikeTable(root).committed())
+    assert(ex.getMessage.contains("corrupt metadata"))
   }
 
   test("partition names and file paths with quotes/backslashes/newlines round-trip") {
@@ -130,7 +115,7 @@ class IcebergLikeTableSpec extends SparkTestBase {
     val oddName = "hour=\"00\"\\back\nslash"
     val oddFile = "/data/file \"v1\"\\part\n2.parquet"
     t.commitPartition(oddName, 1L, Seq(oddFile, "/plain.parquet"))
-    assert(t.isPartitionCommitted(oddName)) // no duplicate re-commit loop
+    assert(t.committed().contains(oddName)) // no duplicate re-commit loop
     val g = new IcebergLikeTable(root)
     assert(g.committed() == Set(oddName))
     assert(g.dataFilesAsOf(g.currentSnapshot()) ==
@@ -179,12 +164,10 @@ class IcebergLikeTableSpec extends SparkTestBase {
   }
 
   test("commit cost is O(1) metadata reads, independent of version count") {
-    // the cumulative-state layout: every vN.metadata.json embeds the full
-    // committed-partition set (the spec's snapshot-list analog), so a
-    // commit at version 300 reads the HEAD file only — not 300 files (the
-    // superlinear shape round-5's verdict flagged). Data-file lists live
-    // in per-snapshot manifest DELTAS: metadata stays O(#partitions)
-    // bytes, and only time travel walks the manifest chain.
+    // the cumulative-state layout: every vN.metadata.json embeds the whole
+    // snapshot (each committed partition with its data files, the spec's
+    // snapshot-list analog), so a commit at version 300 reads the HEAD file
+    // only — not 300 files — and so does time travel at any version.
     val root = java.nio.file.Files.createTempDirectory("icb_o1").toString
     class Counting(r: String) extends IcebergLikeTable(r) {
       val reads = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -194,6 +177,22 @@ class IcebergLikeTableSpec extends SparkTestBase {
     }
     val t = new Counting(root)
     (1 to 300).foreach(i => t.commitPartition(s"p$i", i.toLong, Seq(s"f$i")))
+    // N commits leave N version files plus the hint: no side files
+    val metaFiles = {
+      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(root, "metadata"))
+      try ls.iterator().asScala.map(_.getFileName.toString).toSet
+      finally ls.close()
+    }
+    assert(metaFiles == (1 to 300).map(v => f"v$v%05d.metadata.json").toSet +
+      "version-hint.text")
+    // time travel reads one metadata file at any version
+    def readsOf(v: Long): Int = {
+      t.reads.set(0); assert(t.dataFilesAsOf(v) == (1 to v.toInt).map(i => s"f$i"))
+      t.reads.get()
+    }
+    val (at10, at300) = (readsOf(10L), readsOf(300L))
+    assert(at10 == at300 && at300 <= 2,
+      s"dataFilesAsOf read $at10 metadata files at v10, $at300 at v300")
     t.reads.set(0)
     t.commitPartition("p301", 301L, Seq("f301"))
     assert(t.reads.get() <= 2,
@@ -202,7 +201,7 @@ class IcebergLikeTableSpec extends SparkTestBase {
     assert(t.committedAsOf(150L) == (1 to 150).map(i => s"p$i").toSet)
     assert(t.reads.get() <= 2,
       s"as-of read took ${t.reads.get()} metadata reads")
-    // time travel: exact file set at the pinned snapshot (manifest chain)
+    // time travel: exact file set at the pinned snapshot
     assert(t.dataFilesAsOf(150L) == (1 to 150).map(i => s"f$i"))
     assert(t.committed() == (1 to 301).map(i => s"p$i").toSet)
     // duplicate paths WITHIN one commit collapse in the visible file list

@@ -55,13 +55,17 @@ class PipelineSpec extends SparkTestBase {
     val spec = Canonical.copy(operators = Canonical.operators :+
       OperatorSpec("batch", Map("max_records" -> "500")))
     PipelineRunner.run(spark, spec, base + "/in", base + "/out")
-    val files = spark.read.option("basePath", base + "/out/sinks")
-      .parquet(base + "/out/sinks")
-      .select(input_file_name().as("f")).groupBy(col("f")).count()
-      .select(col("count")).collect().map(_.getLong(0))
-    assert(files.nonEmpty && files.max <= 500L,
-      s"file over cap: ${files.max}")
-    assert(files.length > 6000 / 500, "cap must split large partitions")
+    // the streaming sink reads the same cap from the same spec
+    graft.streaming.StreamingPipeline.manifestSink(spec, s"$base/stream")(
+      graft.io.Parquet.read(spark, base + "/in"), 0L)
+    Seq(base + "/out/sinks", base + "/stream/sinks").foreach { sinks =>
+      val files = spark.read.option("basePath", sinks).parquet(sinks)
+        .select(input_file_name().as("f")).groupBy(col("f")).count()
+        .select(col("count")).collect().map(_.getLong(0))
+      assert(files.nonEmpty && files.max <= 500L,
+        s"file over cap in $sinks: ${files.max}")
+      assert(files.length > 6000 / 500, s"cap must split large partitions in $sinks")
+    }
     Bench.deleteRec(base)
   }
 

@@ -95,7 +95,7 @@ class PropertySpec extends AnyFunSuite {
   test("splitArgs inverts a ',' join for any quote/paren nesting") {
     check("splitArgs", Prop.forAll(
       Gen.nonEmptyListOf(segment(','))) { args =>
-      Ottl.splitArgs(args.mkString(",")) == args
+      Ottl.splitTopLevel(args.mkString(","), ',') == args
     })
   }
 
