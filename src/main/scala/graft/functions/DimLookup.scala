@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A lookup dimension probed in place: `key` → the dim row of that key, as a
@@ -14,38 +12,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * The reference's lookupprocessor loads the CSV into a map and probes it
   * once per record (processor/lookupprocessor/csv.go:88-114,
   * processor.go:293-312); this is the same map. It is built on the driver
-  * and reaches the tasks as a codegen reference object inside the stage's
-  * task binary, so a lookup adds no job and no exchange. The probe is one
-  * hash of the key's bytes, O(1) for any dim size (a literal `map` would
-  * be a linear key scan per row, `GetMapValueUtil.getValueEval`).
+  * and reaches the tasks as the kernel's state, a codegen reference object
+  * inside the stage's task binary, so a lookup adds no job and no
+  * exchange. The probe is one hash of the key's bytes, O(1) for any dim
+  * size (a literal `map` would be a linear key scan per row,
+  * `GetMapValueUtil.getValueEval`).
   */
-case class DimLookup(child: Expression, table: DimLookup.Table) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  // a miss on a non-null key is null too
-  override def nullable: Boolean = true
-
-  override def dataType: DataType = table.schema
-
-  override def prettyName: String = "dim_lookup"
-
-  override protected def nullSafeEval(input: Any): Any =
-    table.get(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tableRef = ctx.addReferenceObj("dim", table, classOf[DimLookup.Table].getName)
-    nullSafeCodeGen(ctx, ev, key =>
-      s"""
-        ${ev.value} = $tableRef.get($key);
-        ${ev.isNull} = ${ev.value} == null;
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object DimLookup {
 
   /** An immutable key → row hash table over all-string rows. Equality is
@@ -75,7 +47,9 @@ object DimLookup {
     new Table(values.map(columns), m)
   }
 
-  /** Column-facing API: the dim row of `key` as a struct, null on a miss. */
+  /** Column-facing API: the dim row of `key` as a struct, null on a miss
+    * (so nullable whatever the key's nullability).
+    */
   def of(key: Column, table: Table): Column =
-    GraftBridge.column(DimLookup(GraftBridge.expression(key), table))
+    Kernel.invoke(table, "get", table.schema, Seq(key), returnNullable = true)
 }

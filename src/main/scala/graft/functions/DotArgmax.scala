@@ -1,95 +1,55 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Argmax-dot-product against a baked-in centroid table: the IVF coarse
-  * quantizer's cell assignment as ONE codegen expression — a tight
+  * quantizer's cell assignment as ONE kernel call — a tight
   * long[]-on-long[] double loop with zero per-row allocation, vs the
   * interpreted higher-order-function fold (which allocates a struct array
   * per centroid per row and pays lambda dispatch per element; measured ~10×
   * slower at |centroids|≈200).
   *
-  * The centroid table is expression state (like a trained FAISS coarse
+  * The centroid table is kernel state (like a trained FAISS coarse
   * quantizer): bounded broadcast data, shipped once per plan, not a join
   * side. Ties break to the SMALLEST centroid id (ids are sorted ascending
   * and replacement requires a strictly better score).
   */
-case class DotArgmax(child: Expression,
-                     centroidIds: Seq[Long],
-                     centroidVecs: Seq[Seq[Long]])
-    extends UnaryExpression {
-
-  require(centroidIds.length == centroidVecs.length && centroidIds.nonEmpty,
-    "DotArgmax needs a non-empty id-aligned centroid table")
-
-  // Seq fields, not Array: Array's reference equality breaks canonicalized
-  // plan equality between two constructions of the same query (and with it
-  // cache/exchange reuse); eval and codegen use the lazy Array mirrors
-  @transient private lazy val idArr: Array[Long] = centroidIds.toArray
-  @transient private lazy val vecArr: Array[Array[Long]] =
-    centroidVecs.map(_.toArray).toArray
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dot_argmax"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData].toLongArray()
-    var bestScore = Long.MinValue
-    var bestId = -1L
-    var c = 0
-    while (c < vecArr.length) {
-      val cv = vecArr(c)
-      val n = math.min(v.length, cv.length)
-      var dot = 0L
-      var i = 0
-      while (i < n) { dot += v(i) * cv(i); i += 1 }
-      if (dot > bestScore) { bestScore = dot; bestId = idArr(c) }
-      c += 1
-    }
-    bestId
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val idsRef = ctx.addReferenceObj("centroidIds", idArr, "long[]")
-    val vecsRef = ctx.addReferenceObj("centroidVecs", vecArr, "long[][]")
-    nullSafeCodeGen(ctx, ev, input => {
-      val v = ctx.freshName("vec")
-      val best = ctx.freshName("best")
-      val bestId = ctx.freshName("bestId")
-      val c = ctx.freshName("c")
-      val cv = ctx.freshName("cv")
-      val dot = ctx.freshName("dot")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-        long[] $v = $input.toLongArray();
-        long $best = Long.MIN_VALUE;
-        long $bestId = -1L;
-        for (int $c = 0; $c < $vecsRef.length; $c++) {
-          long[] $cv = $vecsRef[$c];
-          int $n = Math.min($v.length, $cv.length);
-          long $dot = 0L;
-          for (int $i = 0; $i < $n; $i++) { $dot += $v[$i] * $cv[$i]; }
-          if ($dot > $best) { $best = $dot; $bestId = $idsRef[$c]; }
-        }
-        ${ev.value} = $bestId;
-      """
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object DotArgmax {
+
+  /** The centroid table. `Seq` fields, not Array, so two constructions of
+    * the same query canonicalize equal (see VecOps.scala); the loop reads
+    * the Array mirrors.
+    */
+  final case class Centroids(ids: Seq[Long], vecs: Seq[Seq[Long]]) {
+    require(ids.length == vecs.length && ids.nonEmpty,
+      "DotArgmax needs a non-empty id-aligned centroid table")
+    private val idArr: Array[Long] = ids.toArray
+    private val vecArr: Array[Array[Long]] = vecs.map(_.toArray).toArray
+
+    def argmax(vec: ArrayData): Long = {
+      val v = vec.toLongArray()
+      var bestScore = Long.MinValue
+      var bestId = -1L
+      var c = 0
+      while (c < vecArr.length) {
+        val cv = vecArr(c)
+        val n = math.min(v.length, cv.length)
+        var dot = 0L
+        var i = 0
+        while (i < n) { dot += v(i) * cv(i); i += 1 }
+        if (dot > bestScore) { bestScore = dot; bestId = idArr(c) }
+        c += 1
+      }
+      bestId
+    }
+
+    override def toString: String = s"centroids[${ids.size}]"
+  }
+
   /** Column API: cell id of the best-matching centroid for each vector. */
   def of(vec: Column, ids: Seq[Long], vecs: Seq[Seq[Long]]): Column =
-    GraftBridge.column(DotArgmax(GraftBridge.expression(vec),
-      ids.toVector, vecs.map(_.toVector).toVector))
+    Kernel.invoke(Centroids(ids.toVector, vecs.map(_.toVector).toVector),
+      "argmax", LongType, Seq(vec))
 }

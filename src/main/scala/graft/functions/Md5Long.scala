@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine's portable 60-bit hash — `CAST(CONV(SUBSTRING(MD5(x), 1,
@@ -18,23 +15,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * token, per shingle, per word), so the per-call allocations were the
   * tier's floor.
   */
-case class Md5Long(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def prettyName: String = "md5_long"
-
-  override protected def nullSafeEval(input: Any): Any =
-    Md5Long.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""${ev.value} = graft.functions.Md5Long.hash($input);""")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Md5Long {
   private val digestTL = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -53,6 +33,5 @@ object Md5Long {
       ((d(6) & 0xFFL) << 4) | ((d(7) & 0xF0L) >>> 4)
   }
 
-  def of(c: Column): Column =
-    GraftBridge.column(Md5Long(GraftBridge.expression(c)))
+  def of(c: Column): Column = Kernel.static(this, "hash", LongType, Seq(c))
 }

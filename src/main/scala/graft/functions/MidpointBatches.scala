@@ -1,14 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** The chronicle request-split midpoint descent over one chunk's sorted
-  * entry list, as a single codegen loop — replaces a per-entry interpreted
+  * entry list, as one kernel loop — replaces a per-entry interpreted
   * `aggregate(sequence(1, levels), state-struct, step)` fold (levels
   * struct rebuilds per entry, boxed arithmetic).
   *
@@ -26,32 +25,12 @@ import org.apache.spark.sql.types._
   * the first i+1 sizes). Output: array<struct<batch_lo int,
   * dropped boolean, sz long>>, positionally aligned with the input.
   */
-case class MidpointBatches(child: Expression, capBytes: Long, levels: Int)
-    extends UnaryExpression {
-
-  require(levels >= 1, "MidpointBatches needs levels >= 1")
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(StructType(Seq(
+object MidpointBatches {
+  private val OutType = ArrayType(StructType(Seq(
     StructField("batch_lo", IntegerType, nullable = false),
     StructField("dropped", BooleanType, nullable = false),
     StructField("sz", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "midpoint_batches"
 
-  override protected def nullSafeEval(input: Any): Any =
-    MidpointBatches.build(input.asInstanceOf[ArrayData], capBytes, levels)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""${ev.value} = graft.functions.MidpointBatches.build(
-         |  $input, ${capBytes}L, $levels);""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object MidpointBatches {
-  /** Shared by interpreted eval and generated code. */
   def build(entries: ArrayData, capBytes: Long, levels: Int): GenericArrayData = {
     val n = entries.numElements()
     // 1-indexed prefix sums: pfx(i) = cum of entry i-1; pfx(0) = 0
@@ -86,7 +65,8 @@ object MidpointBatches {
     new GenericArrayData(out)
   }
 
-  def of(entries: Column, capBytes: Long, levels: Int): Column =
-    GraftBridge.column(MidpointBatches(GraftBridge.expression(entries),
-      capBytes, levels))
+  def of(entries: Column, capBytes: Long, levels: Int): Column = {
+    require(levels >= 1, "MidpointBatches needs levels >= 1")
+    Kernel.static(this, "build", OutType, Seq(entries, lit(capBytes), lit(levels)))
+  }
 }

@@ -2,10 +2,8 @@ package graft.functions
 
 import com.google.common.hash.Hashing
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Canonical MurmurHash3 (Appleby's public-domain spec) over the UTF-8
@@ -20,29 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * the published reference vectors in ExprStreamSpec ("murmur3 reference
   * vectors").
   */
-case class Murmur3Hex(child: Expression, bits128: Boolean)
-    extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def prettyName: String =
-    if (bits128) "murmur3_hex_128" else "murmur3_hex_32"
-
-  override protected def nullSafeEval(input: Any): Any =
-    Murmur3Hex.hex(input.asInstanceOf[UTF8String], bits128)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, input =>
-      s"${ev.value} = graft.functions.Murmur3Hex.hex($input, $bits128);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Murmur3Hex {
   private val HexDigits = "0123456789abcdef".toCharArray
 
-  /** Static entry shared by interpreted eval and generated code. */
   def hex(s: UTF8String, bits128: Boolean): UTF8String = {
     val hf = if (bits128) Hashing.murmur3_128() else Hashing.murmur3_32_fixed()
     val b = hf.hashBytes(s.getBytes).asBytes()
@@ -58,6 +36,5 @@ object Murmur3Hex {
 
   /** Column API (input is cast to string; null-propagating). */
   def of(c: Column, bits128: Boolean): Column =
-    GraftBridge.column(Murmur3Hex(GraftBridge.expression(c.cast("string")),
-      bits128))
+    Kernel.static(this, "hex", StringType, Seq(c.cast("string"), lit(bits128)))
 }

@@ -1,15 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct space-joined word n-grams — the shingling primitive of the
-  * dedup tier, as one codegen loop. Replaces the interpreted HOF chain
+  * dedup tier, as one kernel loop. Replaces the interpreted HOF chain
   * `array_distinct(transform(sequence(0, greatest(size(w)-n, 0)),
   * i => array_join(slice(w, i+1, n), " ")))`, which paid per POSITION a
   * lambda dispatch, a slice allocation, and a join over boxed elements —
@@ -20,56 +18,42 @@ import org.apache.spark.unsafe.types.UTF8String
   * first occurrence in order (array_distinct contract). The DuckDB oracle
   * replicates the same list; values are oracle-locked.
   */
-case class NGramJoin(child: Expression, n: Int) extends UnaryExpression {
+object NGramJoin {
+  private val Sep = UTF8String.fromString(" ")
 
-  require(n >= 1, "NGramJoin needs n >= 1")
+  def build(words: ArrayData, n: Int): GenericArrayData = {
+    val len = words.numElements()
+    val positions = math.max(len - n, 0) + 1
+    val seen = new java.util.LinkedHashSet[UTF8String](positions * 2)
+    var i = 0
+    while (i < positions) {
+      val end = math.min(i + n, len)
+      val parts = new Array[UTF8String](end - i)
+      var j = i
+      while (j < end) { parts(j - i) = words.getUTF8String(j); j += 1 }
+      seen.add(UTF8String.concatWs(Sep, parts: _*))
+      i += 1
+    }
+    new GenericArrayData(seen.toArray.asInstanceOf[Array[AnyRef]])
+  }
 
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "ngram_join"
-
-  override protected def nullSafeEval(input: Any): Any =
-    NGramJoin.build(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""${ev.value} = graft.functions.NGramJoin.build($input, $n);""")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def of(words: Column, n: Int): Column = {
+    require(n >= 1, "NGramJoin needs n >= 1")
+    Kernel.static(this, "build", ArrayType(StringType, containsNull = false),
+      Seq(words, lit(n)))
+  }
 }
 
 /** Distinct bounded-Horner n-gram hashes over a pre-hashed word array —
   * the string-free shingling primitive (contamination path), as one
-  * codegen loop. Replaces `array_distinct(transform(sequence(0,
+  * kernel loop. Replaces `array_distinct(transform(sequence(0,
   * greatest(size(wh)-n, 0)), i => fold of (acc*A + coalesce(get(wh, i+k),
   * 0)) % P))` — per position the HOF paid lambda dispatch and boxed
   * arithmetic. Identical math: positions 0..max(len-n,0), words past the
   * end hash as 0 (the `get()` null → coalesce 0 contract), first-
   * occurrence distinct. All operands < P < 2^30 so products < 2^47.
   */
-case class NGramHash(child: Expression, n: Int, a: Long, p: Long)
-    extends UnaryExpression {
-
-  require(n >= 1, "NGramHash needs n >= 1")
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "ngram_hash"
-
-  override protected def nullSafeEval(input: Any): Any =
-    NGramHash.build(input.asInstanceOf[ArrayData], n, a, p)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""${ev.value} = graft.functions.NGramHash.build($input, $n, ${a}L, ${p}L);""")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object NGramHash {
-  /** Shared by interpreted eval and generated code. */
   def build(wh: ArrayData, n: Int, a: Long, p: Long): GenericArrayData = {
     val len = wh.numElements()
     val positions = math.max(len - n, 0) + 1
@@ -93,30 +77,9 @@ object NGramHash {
     new GenericArrayData(out)
   }
 
-  def of(wordHashes: Column, n: Int, a: Long, p: Long): Column =
-    GraftBridge.column(NGramHash(GraftBridge.expression(wordHashes), n, a, p))
-}
-
-object NGramJoin {
-  private val Sep = UTF8String.fromString(" ")
-
-  /** Shared by interpreted eval and generated code. */
-  def build(words: ArrayData, n: Int): GenericArrayData = {
-    val len = words.numElements()
-    val positions = math.max(len - n, 0) + 1
-    val seen = new java.util.LinkedHashSet[UTF8String](positions * 2)
-    var i = 0
-    while (i < positions) {
-      val end = math.min(i + n, len)
-      val parts = new Array[UTF8String](end - i)
-      var j = i
-      while (j < end) { parts(j - i) = words.getUTF8String(j); j += 1 }
-      seen.add(UTF8String.concatWs(Sep, parts: _*))
-      i += 1
-    }
-    new GenericArrayData(seen.toArray.asInstanceOf[Array[AnyRef]])
+  def of(wordHashes: Column, n: Int, a: Long, p: Long): Column = {
+    require(n >= 1, "NGramHash needs n >= 1")
+    Kernel.static(this, "build", ArrayType(LongType, containsNull = false),
+      Seq(wordHashes, lit(n), lit(a), lit(p)))
   }
-
-  def of(words: Column, n: Int): Column =
-    GraftBridge.column(NGramJoin(GraftBridge.expression(words), n))
 }

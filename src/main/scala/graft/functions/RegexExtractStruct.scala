@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass regex struct extraction: evaluates `pattern` ONCE per row and
@@ -16,75 +14,41 @@ import org.apache.spark.unsafe.types.UTF8String
   * `regex_parser` operator's named-capture-groups-to-attributes semantics
   * (used 125× across the reference's plugins, e.g.
   * plugins/nginx_logs.yaml:95-106: one regex application produces every
-  * attribute of the record). Codegen-friendly: the compiled
-  * `java.util.regex.Pattern` is a per-plan reference object, the match runs
-  * inside whole-stage codegen with no virtual dispatch per group.
+  * attribute of the record). The compiled `java.util.regex.Pattern` is
+  * kernel state, a per-plan reference object, so the match runs inside
+  * whole-stage codegen with no virtual dispatch per group.
   *
   * No-match ⇒ null struct (caller maps that to stanza `on_error: drop|send`).
   */
-case class RegexExtractStruct(child: Expression, pattern: String, fieldNames: Seq[String])
-    extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  // a non-matching (non-null) input still yields a null struct, so this
-  // expression is nullable regardless of the child's nullability — without
-  // this override the optimizer folds IsNotNull(this) to true
-  override def nullable: Boolean = true
-
-  @transient private lazy val compiled = java.util.regex.Pattern.compile(pattern)
-
-  override def dataType: DataType =
-    StructType(fieldNames.map(StructField(_, StringType, nullable = true)))
-
-  override def prettyName: String = "regex_extract_struct"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val m = compiled.matcher(input.asInstanceOf[UTF8String].toString)
-    if (m.find()) {
-      val arr = new Array[Any](fieldNames.length)
-      var i = 0
-      while (i < fieldNames.length) {
-        val g = m.group(i + 1)
-        arr(i) = if (g == null) null else UTF8String.fromString(g)
-        i += 1
-      }
-      new GenericInternalRow(arr)
-    } else null
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val patternRef = ctx.addReferenceObj("pattern", compiled, classOf[java.util.regex.Pattern].getName)
-    val n = fieldNames.length
-    nullSafeCodeGen(ctx, ev, input => {
-      val m = ctx.freshName("matcher")
-      val arr = ctx.freshName("arr")
-      val i = ctx.freshName("i")
-      val g = ctx.freshName("g")
-      s"""
-        java.util.regex.Matcher $m = $patternRef.matcher($input.toString());
-        if ($m.find()) {
-          Object[] $arr = new Object[$n];
-          for (int $i = 0; $i < $n; $i++) {
-            String $g = $m.group($i + 1);
-            $arr[$i] = $g == null ? null :
-              org.apache.spark.unsafe.types.UTF8String.fromString($g);
-          }
-          ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow($arr);
-        } else {
-          ${ev.isNull} = true;
-        }
-      """
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object RegexExtractStruct {
-  /** Column-facing API: `regexExtractStruct($"text", pat, Seq("ip", ...))`. */
+
+  /** The compiled pattern; compares by pattern text and field names. */
+  final case class Grok(pattern: String, fieldNames: Seq[String]) {
+    private val compiled = java.util.regex.Pattern.compile(pattern)
+
+    def extract(s: UTF8String): InternalRow = {
+      val m = compiled.matcher(s.toString)
+      if (m.find()) {
+        val arr = new Array[Any](fieldNames.length)
+        var i = 0
+        while (i < fieldNames.length) {
+          val g = m.group(i + 1)
+          arr(i) = if (g == null) null else UTF8String.fromString(g)
+          i += 1
+        }
+        new GenericInternalRow(arr)
+      } else null
+    }
+
+    override def toString: String = s"grok[${fieldNames.mkString(",")}]"
+  }
+
+  /** Column-facing API: `regexExtractStruct($"text", pat, Seq("ip", ...))`.
+    * A non-matching (non-null) input still yields a null struct, so the
+    * result is nullable whatever the input's nullability.
+    */
   def of(c: Column, pattern: String, fieldNames: Seq[String]): Column =
-    GraftBridge.column(
-      RegexExtractStruct(GraftBridge.expression(c), pattern, fieldNames))
+    Kernel.invoke(Grok(pattern, fieldNames.toVector), "extract",
+      StructType(fieldNames.map(StructField(_, StringType, nullable = true))),
+      Seq(c), returnNullable = true)
 }

@@ -32,8 +32,8 @@ object ParseOps {
   // regex_parser (plugins/nginx_logs.yaml:95-106) — nginx combined format
   // -------------------------------------------------------------------
   /** One-pass grok over the access-log line; group names follow the plugin's
-    * named capture groups. Uses the custom codegen expression so the pattern
-    * runs once per row for all 10 fields.
+    * named capture groups. Uses the `RegexExtractStruct` kernel so the
+    * pattern runs once per row for all 10 fields.
     */
   val NginxFields = Seq("remote_addr", "remote_user", "time_local", "method",
     "path", "protocol", "status", "body_bytes_sent", "http_referer", "http_user_agent")

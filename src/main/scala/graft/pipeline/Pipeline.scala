@@ -62,15 +62,17 @@ object Pipeline {
   /** batchprocessor send_batch_size analogue (manifest.yaml:86): output
     * batches are bounded by capping records per written file. The cap is
     * pipeline config (the spec's `batch` operator), not a writer flag;
-    * every sink writer passes it as `maxRecordsPerFile`.
+    * the sink writer ([[PipelineRunner.writeSinks]]) passes it as
+    * `maxRecordsPerFile`.
     */
   def maxRecordsPerFile(spec: PipelineSpec): Long =
     spec.operators.find(_.opType == "batch")
       .flatMap(_.params.get("max_records"))
       .getOrElse(OperatorParams("batch").head.default.get).toLong
 
-  /** CheckParameters parity: unknown op, missing required, unsupported value
-    * are all plan-time validation errors; defaults are applied here.
+  /** CheckParameters parity: unknown op, unknown parameter, missing
+    * required, unsupported value are all plan-time validation errors;
+    * defaults are applied here.
     */
   def validate(spec: PipelineSpec): Either[Seq[String], PipelineSpec] = {
     val errs = scala.collection.mutable.ListBuffer[String]()
@@ -80,6 +82,9 @@ object Pipeline {
           errs += s"unknown operator type '${op.opType}'"
           op
         case Some(params) =>
+          op.params.keys.filterNot(k => params.exists(_.name == k)).foreach { k =>
+            errs += s"${op.opType}: unknown parameter '$k'"
+          }
           params.foreach { p =>
             if (p.required && !op.params.contains(p.name))
               errs += s"${op.opType}: missing required parameter '${p.name}'"
@@ -221,6 +226,21 @@ object PipelineRunner {
     Seq("text", "conv_id", "ts", "attrs_json")
       .map(c => s"parquet.enable.dictionary#$c" -> "false")
 
+  /** The sink write of one pass: every row lands in its route's table,
+    * partitioned by route, hour and then `extraPartitions` (the streaming
+    * sink adds `batch_id`), with files capped at the spec's batch size.
+    * Dynamic overwrite on this write only: a re-run replaces just the
+    * leaves it writes, and the caller's session keeps its own mode.
+    */
+  def writeSinks(df: DataFrame, spec: Pipeline.PipelineSpec, outRoot: String,
+                 extraPartitions: String*): Unit =
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .option("maxRecordsPerFile", Pipeline.maxRecordsPerFile(spec))
+      .options(WriterOptions)
+      .partitionBy(Seq("route", "year", "month", "day", "hour") ++ extraPartitions: _*)
+      .parquet(s"$outRoot/sinks")
+
   /** Run `spec` over every hour partition of `inputPath` not yet in the
     * manifest, `groupSize` partitions per scan; the sink tables land under
     * `outRoot/sinks` (see [[sinkPath]]).
@@ -273,14 +293,7 @@ object PipelineRunner {
       // alternating bench runs (sorted 2.51/2.84M tps vs unsorted
       // 2.73/2.37M) — the per-task sort CPU eats the writer-side gain, so
       // the simpler plan ships
-      // dynamic overwrite on this write only: a re-run replaces just the
-      // leaves it writes, and the caller's session keeps its own mode
-      transform(input).write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", Pipeline.maxRecordsPerFile(spec))
-        .options(WriterOptions)
-        .partitionBy("route", "year", "month", "day", "hour")
-        .parquet(s"$outRoot/sinks")
+      writeSinks(transform(input), spec, outRoot)
       // manifest metrics: count the WRITTEN rows — footer row counts of the
       // files now in each sink's leaf directory (the write replaced the
       // whole leaf, so stale files of an earlier attempt are not counted)

@@ -36,8 +36,11 @@ object PipelineConfig {
           case "operator" =>
             val parts = value.split("\\s+").toSeq
             val params = parts.tail.map { kv =>
-              val Array(k, v) = kv.split("=", 2)
-              k -> v
+              kv.split("=", 2) match {
+                case Array(k, v) => k -> v
+                case _ => throw new IllegalArgumentException(
+                  s"operator '${parts.head}': parameter '$kv' is not key=value")
+              }
             }.toMap
             ops += Pipeline.OperatorSpec(parts.head, params)
           case "route" =>

@@ -126,7 +126,7 @@ object Router {
     * window, modeling the upstream payload boundary); the chunk's entry
     * list is collected ONCE PER CHUNK (bounded ≤ chunkEntries — never a
     * group-scale collect) and every entry descends the fixed tree to the
-    * first ancestor segment under the cap inside ONE codegen expression
+    * first ancestor segment under the cap inside ONE kernel call
     * (MidpointBatches — a Scala-side unrolled when-tree would grow
     * ≈6^levels nodes and OOM the optimizer; the earlier runtime HOF fold
     * avoided that but paid interpreted struct rebuilds per level per

@@ -179,15 +179,11 @@ object StreamingPipeline {
         val spark = df.sparkSession
         val obs = new Observation(s"sinks_$batchId")
         val taps = spec.sinks.map(s => count_if(col("route") === s).as(s))
-        graft.pipeline.Pipeline.compile(spec, spark)(df)
-          .withColumn("batch_id", lit(batchId))
-          .observe(obs, taps.head, taps.tail: _*)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .option("maxRecordsPerFile", graft.pipeline.Pipeline.maxRecordsPerFile(spec))
-          .options(graft.pipeline.PipelineRunner.WriterOptions)
-          .partitionBy("route", "year", "month", "day", "hour", "batch_id")
-          .parquet(s"$outRoot/sinks")
+        graft.pipeline.PipelineRunner.writeSinks(
+          graft.pipeline.Pipeline.compile(spec, spark)(df)
+            .withColumn("batch_id", lit(batchId))
+            .observe(obs, taps.head, taps.tail: _*),
+          spec, outRoot, "batch_id")
         val bySink = spec.sinks.map(s => s -> obs.get(s).asInstanceOf[Long]).toMap
         manifest.commit(key, bySink.values.sum, bySink, Seq.empty,
           (System.nanoTime() - t0) / 1000000)

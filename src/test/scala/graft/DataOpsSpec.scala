@@ -284,6 +284,56 @@ class DedupSpec extends SparkTestBase {
       "DotArgmax constructions do not canonicalize equal")
   }
 
+  test("every graft.functions kernel gives the same rows generated and interpreted") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.functions._
+    import graft.parse.ParseOps
+    val nginx = """10.1.2.3 - u [05/Feb/2024:10:11:12 +0000] "GET /a HTTP/1.1" 404 12 "-" "ag/3""""
+    val schema = StructType(Seq(
+      StructField("s", StringType),
+      StructField("words", ArrayType(StringType, containsNull = false)),
+      StructField("wh", ArrayType(LongType, containsNull = false)),
+      StructField("entries", ArrayType(StructType(Seq(
+        StructField("cidx", IntegerType, nullable = false),
+        StructField("cum", LongType, nullable = false),
+        StructField("sz", LongType, nullable = false))), containsNull = false))))
+    // a logical RDD, not a local relation: the optimizer would evaluate a
+    // projection over local rows itself, interpreted, in both modes
+    val input = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(nginx, Seq("a", "b", "c", "d", "a", "b", "c"), Seq(1L, 2L, 3L, 1L, 2L),
+        Seq(Row(0, 10L, 10L), Row(1, 30L, 20L), Row(2, 60L, 30L))),
+      Row("a", Seq.empty[String], Seq.empty[Long], Seq.empty[Row]),
+      Row("b", Seq("x"), Seq(-5L), Seq(Row(0, 40L, 40L))),
+      Row(null, null, null, null)), 2), schema)
+    val dim = DimLookup.table(Seq("k", "v", "w"), 0,
+      Seq(Seq("a", "x", null), Seq("b", "y", "z")))
+    val kernels = Seq(
+      Md5Long.of($"s"),
+      Murmur3Hex.of($"s", bits128 = false),
+      Murmur3Hex.of($"s", bits128 = true),
+      RegexExtractStruct.of($"s", ParseOps.NginxPattern, ParseOps.NginxFields),
+      DimLookup.of($"s", dim),
+      NGramJoin.of($"words", 3),
+      NGramHash.of($"wh", 2, Dedup.ShingleA, Dedup.P),
+      MidpointBatches.of($"entries", 25L, 3),
+      DotProduct.of($"wh", $"wh"),
+      PlaneSignBits.of($"wh", Seq(Seq(1L, -1L, 2L), Seq(-3L, 1L, 1L))),
+      DotArgmax.of($"wh", Seq(7L, 9L), Seq(Seq(1L, 0L, 0L), Seq(0L, 0L, 1L))),
+      MinHashSig.of($"wh", Seq(3L, 5L), Seq(7L, 11L), Dedup.P),
+      SimHashBits.of($"wh"),
+      OptBarrier.of(Md5Long.of($"s")))
+    val (generated, interpreted) = inCodegenModes {
+      input.select(kernels.zipWithIndex.map { case (k, i) => k.as(s"k$i") }: _*)
+        .collect().toSeq.sortBy(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+    }
+    assert(generated == interpreted)
+    // null in, null out for every kernel; a dim hit, a regex hit and miss
+    assert(generated.head.toSeq.forall(_ == null))
+    assert(generated.exists(r => r.getStruct(4) == Row("x", null)))
+    assert(generated.count(r => r.getStruct(3) != null) == 1)
+  }
+
   test("assignSplits: deterministic, exhaustive, and stable under subsetting") {
     import graft.data.TextAnalysis
     val s1 = TextAnalysis.assignSplits(docs)

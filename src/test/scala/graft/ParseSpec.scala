@@ -24,13 +24,17 @@ class ParseSpec extends SparkTestBase {
 
   test("RegexExtractStruct codegen and interpreted paths agree") {
     val lines = t.filter(ParseOps.isNginx).select($"text").limit(200)
-    val viaStruct = lines.select(
-      RegexExtractStruct.of($"text", ParseOps.NginxPattern, ParseOps.NginxFields)
-        .getField("status").as("s")).collect().map(_.getString(0))
-    val viaBuiltin = lines.select(
-      regexp_extract($"text", ParseOps.NginxPattern, 7).as("s"))
-      .collect().map(_.getString(0))
-    assert(viaStruct.toSeq == viaBuiltin.toSeq)
+    val (generated, interpreted) = inCodegenModes {
+      val viaStruct = lines.select(
+        RegexExtractStruct.of($"text", ParseOps.NginxPattern, ParseOps.NginxFields)
+          .getField("status").as("s")).collect().map(_.getString(0)).toSeq
+      val viaBuiltin = lines.select(
+        regexp_extract($"text", ParseOps.NginxPattern, 7).as("s"))
+        .collect().map(_.getString(0)).toSeq
+      assert(viaStruct.nonEmpty && viaStruct == viaBuiltin)
+      viaStruct
+    }
+    assert(generated == interpreted)
   }
 
   test("RegexExtractStruct returns null struct on no-match (on_error drop parity)") {

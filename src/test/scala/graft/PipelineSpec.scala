@@ -10,6 +10,10 @@ class PipelineSpec extends SparkTestBase {
   test("validation: unknown operator is a plan-time error") {
     val bad = Canonical.copy(operators = Seq(OperatorSpec("no_such_op")))
     assert(validate(bad).left.exists(_.exists(_.contains("unknown operator"))))
+    // a misspelt parameter is an error too, not a silently applied default
+    val typo = Canonical.copy(operators = Seq(
+      OperatorSpec("batch", Map("max_record" -> "10"))))
+    assert(validate(typo).left.exists(_.exists(_.contains("unknown parameter 'max_record'"))))
   }
 
   test("validation: missing required parameter is rejected (CheckParameters parity)") {
@@ -97,6 +101,9 @@ class PipelineSpec extends SparkTestBase {
     // bad configs fail at plan time
     intercept[IllegalArgumentException] {
       graft.pipeline.PipelineConfig.load("operator: bogus\nroute: r true\nsink: r")
+    }
+    intercept[IllegalArgumentException] { // a parameter without '='
+      graft.pipeline.PipelineConfig.load("operator: sample drop_ratio\nroute: r true\nsink: r")
     }
   }
 

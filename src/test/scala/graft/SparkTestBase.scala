@@ -25,4 +25,18 @@ abstract class SparkTestBase extends AnyFunSuite {
     spark.conf.set(key, on.toString)
     try body finally spark.conf.set(key, prev)
   }
+
+  /** `body` run twice: first through generated code only (whole-stage
+    * codegen on, `factoryMode=CODEGEN_ONLY`), then interpreted only
+    * (whole-stage codegen off, `NO_CODEGEN`). Both settings are restored.
+    */
+  def inCodegenModes[T](body: => T): (T, T) = {
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    def run(values: Seq[String]): T = {
+      val prev = keys.map(spark.conf.get)
+      keys.zip(values).foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally keys.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+    (run(Seq("true", "CODEGEN_ONLY")), run(Seq("false", "NO_CODEGEN")))
+  }
 }
