@@ -450,16 +450,6 @@ object AggOps {
         count(lit(1)).as("log_count"),
         sum(octet_length(col("text"))).as("log_raw_bytes"))
 
-  /** Zero-cost observability tap on any stage — the `observe` variant: the
-    * counters ride the existing action, no extra job, no row mutation
-    * (throughputmeasurementprocessor semantics). Read back via
-    * `df.queryExecution.observedMetrics` after an action.
-    */
-  def withThroughputTap(df: DataFrame, name: String = "throughput"): DataFrame =
-    df.observe(name,
-      count(lit(1)).as("log_count"),
-      sum(octet_length(col("text"))).as("log_raw_bytes"))
-
   /** Full throughputmeasurement config surface (config.go:28-43): enabled
     * gate, sampling_ratio over PAYLOADS (rand <= ratio per payload,
     * processor.go:94-99 — here the deterministic hash-gate stand-in over

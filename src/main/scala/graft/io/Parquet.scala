@@ -1,18 +1,17 @@
 package graft.io
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.ParquetReadOptions
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
-/** Driver-side parquet footers: the table schema and per-file row counts,
-  * read without a Spark job.
+/** The table schema of a parquet read, from one footer read on the driver
+  * without a Spark job.
   */
 object Parquet {
 
@@ -63,22 +62,6 @@ object Parquet {
       }.nextOption()
     first(roots.map(p => p.getFileSystem(conf).getFileStatus(p)))
   }
-
-  /** Row count of one parquet file, summed over its footer's row groups and
-    * read on the driver. Measured over the 84 files of a 100k-turn table on
-    * local disk (4-core host, five passes): 0.55–1.5 ms per file with one
-    * shared `ParquetReadOptions`, 8–16 ms when every open builds its own
-    * options from the Hadoop conf (building them copies the conf).
-    */
-  def footerRows(file: HadoopInputFile, options: ParquetReadOptions): Long = {
-    val reader = ParquetFileReader.open(file, options)
-    try reader.getRecordCount finally reader.close()
-  }
-
-  /** The data files of a leaf directory; a missing directory has none. */
-  def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
-    try fs.listStatus(dir).toSeq.filter(st => st.isFile && isDataName(st.getPath.getName))
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
 
   /** Data names skip `_`/`.` prefixes (`_SUCCESS`, `.crc` files), as
     * Spark's file index does.

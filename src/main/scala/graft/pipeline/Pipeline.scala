@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.enrich.EnrichOps
@@ -62,7 +62,7 @@ object Pipeline {
   /** batchprocessor send_batch_size analogue (manifest.yaml:86): output
     * batches are bounded by capping records per written file. The cap is
     * pipeline config (the spec's `batch` operator), not a writer flag;
-    * the sink writer ([[PipelineRunner.writeSinks]]) passes it as
+    * the sink writer ([[PipelineRunner.writeCounted]]) passes it as
     * `maxRecordsPerFile`.
     */
   def maxRecordsPerFile(spec: PipelineSpec): Long =
@@ -177,19 +177,23 @@ object Pipeline {
   * independently, so a killed run loses at most the in-flight group and
   * re-runs idempotently (dynamic partition overwrite, set on the write, not
   * on the caller's session). The write is the only job of a group: the
-  * input schema and the manifest's rows in and rows per sink all come from
-  * parquet footers read on the driver (see [[graft.io.Parquet]]), and the
+  * input schema is read from one footer on the driver, the manifest's rows
+  * in and rows per sink are counted by two `observe` taps riding that write
+  * ([[writeCounted]], the one counted write of batch and stream), and the
   * lookups are hash probes inside the write's projection.
   */
 object PipelineRunner {
   import org.apache.hadoop.fs.{Path => HPath}
-  import org.apache.parquet.HadoopReadOptions
-  import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.spark.sql.{Column, Observation}
   import graft.io.Parquet
 
   case class RunReport(partitionsProcessed: Int, partitionsSkipped: Int,
                        rowsIn: Long, sinkCounts: Map[String, Long],
                        rowsOut: Long)
+
+  /** What one write read and committed for one manifest key: `rowsIn` rows
+    * entered the spec's operators, and `sinkCounts` rows went to each sink. */
+  case class KeyCounts(rowsIn: Long, sinkCounts: Map[String, Long])
 
   /** Discover hour partitions of a `year=/month=/day=/hour=` table. */
   def discoverPartitions(spark: SparkSession, inputPath: String): Seq[String] = {
@@ -226,20 +230,59 @@ object PipelineRunner {
     Seq("text", "conv_id", "ts", "attrs_json")
       .map(c => s"parquet.enable.dictionary#$c" -> "false")
 
-  /** The sink write of one pass: every row lands in its route's table,
-    * partitioned by route, hour and then `extraPartitions` (the streaming
-    * sink adds `batch_id`), with files capped at the spec's batch size.
-    * Dynamic overwrite on this write only: a re-run replaces just the
-    * leaves it writes, and the caller's session keeps its own mode.
+  /** A row's batch manifest key: its hour partition as the number
+    * yyyymmddhh, arithmetic on the partition values (no string per row). */
+  private[graft] val HourKey: Column =
+    Seq("month", "day", "hour").foldLeft(col("year").cast("long"))((k, c) => k * 100 + col(c))
+
+  /** The [[HourKey]] of the rows of partition `p`; the reference exporter's
+    * zero-padded `month=01` reads as 1, as Spark reads it. */
+  private def hourKey(p: String): Long =
+    p.split('/').map(_.split("=", 2)(1).toLong).reduce(_ * 100 + _)
+
+  /** The write input of [[writeCounted]]: `input` through the spec, with
+    * two [[RowsPerKey]] taps: `in` below the operators (a `filter` drops rows
+    * only after it), counting rows per (`key`, ""); `out` on the routed rows,
+    * counting rows per (`key`, route). */
+  private[graft] def tapped(input: DataFrame, spec: Pipeline.PipelineSpec,
+                            key: Column): (DataFrame, Observation, Observation) = {
+    val (in, out) = (new Observation(), new Observation())
+    val routed = Pipeline.compile(spec, input.sparkSession)(
+      input.observe(in, RowsPerKey.of(key, lit("")).as("rows")))
+    (routed.observe(out, RowsPerKey.of(key, col("route")).as("rows")), in, out)
+  }
+
+  /** Rows per (key, route) of a tap of [[tapped]], once its query has run. */
+  private[graft] def tapCounts(o: Observation): Map[(Long, String), Long] =
+    o.get("rows").asInstanceOf[scala.collection.Map[Row, Long]]
+      .map { case (k, n) => (k.getLong(0), k.getString(1)) -> n }.toMap
+
+  /** The one counted sink write, of a batch group and of a micro-batch
+    * alike: every row lands in its route's table, partitioned by route, hour
+    * and then `extraPartitions` (the streaming sink adds `batch_id`), files
+    * capped at the spec's batch size, counted by the write's own two taps
+    * ([[tapped]]). Dynamic overwrite on this write only: a re-run replaces
+    * just the leaves it writes; the caller's session keeps its own mode.
+    *
+    * `key` gives each input row its manifest key and must give it again on
+    * the routed row. Returns the counts of every key of `keys`, 0 for a key
+    * no row carried; the caller commits one manifest entry per key.
     */
-  def writeSinks(df: DataFrame, spec: Pipeline.PipelineSpec, outRoot: String,
-                 extraPartitions: String*): Unit =
-    df.write.mode("overwrite")
+  def writeCounted(input: DataFrame, spec: Pipeline.PipelineSpec, outRoot: String,
+                   keys: Seq[Long], key: Column,
+                   extraPartitions: (String, Column)*): Map[Long, KeyCounts] = {
+    val (routed, in, out) = tapped(input, spec, key)
+    routed.withColumns(extraPartitions.toMap)
+      .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .option("maxRecordsPerFile", Pipeline.maxRecordsPerFile(spec))
       .options(WriterOptions)
-      .partitionBy(Seq("route", "year", "month", "day", "hour") ++ extraPartitions: _*)
+      .partitionBy(Seq("route", "year", "month", "day", "hour") ++ extraPartitions.map(_._1): _*)
       .parquet(s"$outRoot/sinks")
+    val (rowsIn, rowsOut) = (tapCounts(in), tapCounts(out))
+    keys.map(k => k -> KeyCounts(rowsIn.getOrElse((k, ""), 0L),
+      spec.sinks.map(s => s -> rowsOut.getOrElse((k, s), 0L)).toMap)).toMap
+  }
 
   /** Run `spec` over every hour partition of `inputPath` not yet in the
     * manifest, `groupSize` partitions per scan; the sink tables land under
@@ -250,12 +293,6 @@ object PipelineRunner {
           groupSize: Int = 24,
           failure: Option[RandomFailure] = None, attempt: Int = 0): RunReport = {
     val manifest = new Manifest(s"$outRoot/_manifest")
-    val transform = Pipeline.compile(spec, spark)
-    val conf = spark.sparkContext.hadoopConfiguration
-    // one read-options object for every footer of the run: building it
-    // copies the Hadoop conf, which per file would cost more than the read
-    val footerOptions = HadoopReadOptions.builder(conf).build()
-    val outFs = new HPath(outRoot).getFileSystem(conf)
     val all = discoverPartitions(spark, inputPath)
     val todo = manifest.uncommitted(all)
     var rowsIn = 0L
@@ -272,19 +309,6 @@ object PipelineRunner {
       // footer on the driver (no inference job)
       val paths = group.map(p => s"$inputPath/$p")
       val input = Parquet.read(spark, spark.read.option("basePath", inputPath), paths: _*)
-      // true input volume per partition (filter/sample ops may drop rows
-      // downstream, so rows_in ≠ rows written): footer row counts of the
-      // files the scan's own file index listed, keyed by their
-      // year=/month=/day=/hour= parents — no Spark job; the reads are
-      // sequential, and `groupSize` bounds the files per group
-      val inCounts: Map[String, Long] = input.inputFiles.toSeq
-        .map { f =>
-          val file = new HPath(new java.net.URI(f))
-          partitionKey(file) -> Parquet.footerRows(
-            HadoopInputFile.fromPath(file, conf), footerOptions)
-        }
-        .groupMapReduce(_._1)(_._2)(_ + _)
-
       // single pass: route is the leading output partition column — every
       // row lands in its sink table in the same job that parsed it.
       // Tested and rejected (BASELINE.md "Write-phase experiment matrix"):
@@ -293,33 +317,17 @@ object PipelineRunner {
       // alternating bench runs (sorted 2.51/2.84M tps vs unsorted
       // 2.73/2.37M) — the per-task sort CPU eats the writer-side gain, so
       // the simpler plan ships
-      writeSinks(transform(input), spec, outRoot)
-      // manifest metrics: count the WRITTEN rows — footer row counts of the
-      // files now in each sink's leaf directory (the write replaced the
-      // whole leaf, so stale files of an earlier attempt are not counted)
-      val outCounts: Map[String, Map[String, Long]] = group.map { p =>
-        p -> spec.sinks.map { s =>
-          s -> Parquet.dataFiles(outFs, new HPath(s"${sinkPath(outRoot, s)}/$p"))
-            .map(st => Parquet.footerRows(HadoopInputFile.fromStatus(st, conf), footerOptions))
-            .sum
-        }.toMap
-      }.toMap
-
+      val keys = group.map(hourKey)
+      val counts = writeCounted(input, spec, outRoot, keys, HourKey)
       val wallMs = (System.nanoTime() - t0) / 1000000
-      group.foreach { p =>
-        val sinkCounts = outCounts(p)
-        val pIn = inCounts.getOrElse(p, 0L)
-        rowsIn += pIn
-        rowsOut += sinkCounts.values.sum
-        sinkCounts.foreach { case (k, v) => sinkTotals(k) += v }
-        manifest.commit(p, pIn, sinkCounts, Seq(s"$inputPath/$p"), wallMs)
+      group.zip(keys).foreach { case (p, k) =>
+        val c = counts(k)
+        rowsIn += c.rowsIn
+        rowsOut += c.sinkCounts.values.sum
+        c.sinkCounts.foreach { case (k, v) => sinkTotals(k) += v }
+        manifest.commit(p, c.rowsIn, c.sinkCounts, Seq(s"$inputPath/$p"), wallMs)
       }
     }
     RunReport(todo.size, all.size - todo.size, rowsIn, sinkTotals.toMap, rowsOut)
   }
-
-  /** `year=/month=/day=/hour=` key of a file: its four parent directories. */
-  private def partitionKey(file: HPath): String =
-    Iterator.iterate(file.getParent)(_.getParent).take(4)
-      .map(_.getName).toSeq.reverse.mkString("/")
 }

@@ -1047,25 +1047,6 @@ object Plugins {
     RegexTemplates.map(new RegexPlugin(_)) ++
     MetricTemplates.map(new MetricScanPlugin(_)))
     .map(p => p.name -> p).toMap
-
-  /** Minimal valid params per plugin — the registry-wide "renders with
-    * defaults and analyzes" gate (supplied_plugins_test.go:46-147 parity)
-    * feeds these to every registered plugin.
-    */
-  val smokeParams: Map[String, Map[String, String]] = Map(
-    "csv" -> Map("header" -> "time_local,level,component,code,latency_ms"),
-    "w3c" -> Map("header" -> "date time s_ip cs_method", "delimiter" -> " "),
-    "tcp" -> Map("listen_port" -> "514"),
-    "udp" -> Map("listen_port" -> "514"),
-    "file" -> Map("log_paths" -> "/var/log/app.log")
-  ).withDefaultValue(Map.empty)
-
-  /** Input column required by plugins that parse a framed `line` instead of
-    * the transcript `text` (postgresql, w3c, cef, kafka, redis, mysql); the
-    * smoke gate frames one.
-    */
-  val needsLine: Set[String] = Set("postgresql", "w3c", "common_event_format",
-    "kafka", "redis", "mysql", "iis", "sql_server") ++ RegexTemplates.map(_.name)
 }
 
 /** snapshotprocessor ad-hoc search (SURVEY §2B): substring query over body +

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.GroupStateTimeout
 
 import graft.parse.ParseOps
 import graft.route.Router
@@ -20,13 +19,6 @@ import graft.route.Router
   * watermark instead of unbounded counters).
   */
 object StreamingPipeline {
-
-  val TranscriptSchema: StructType = StructType(Seq(
-    StructField("conv_id", StringType), StructField("turn_idx", IntegerType),
-    StructField("role", StringType), StructField("text", StringType),
-    StructField("tool", StringType), StructField("ts", TimestampNTZType),
-    StructField("year", IntegerType), StructField("month", IntegerType),
-    StructField("day", IntegerType), StructField("hour", IntegerType)))
 
   /** The tagging + watermarked windowed count transform, over ANY streaming
     * (or batch) transcript frame — extracted so tests can drive it from a
@@ -161,57 +153,22 @@ object StreamingPipeline {
     *     sharing an hour (or hours sharing a batch) never clobber each
     *     other, the hazard a plain (route, hour) overwrite would have;
     *   - the manifest entry commits AFTER the write (all-sinks-succeeded,
-    *     same contract as the batch runner), with per-sink counts from an
-    *     `observe` tap on the write itself — one `count_if` per sink, so a
-    *     sink the batch sent nothing counts 0 — and no second pass over the
-    *     micro-batch (NOT the batch runner's written-files count: re-listing
-    *     the sinks tree every micro-batch would be O(total partitions) per
-    *     batch, superlinear over a run).
+    *     same contract as the batch runner), with the counts of the batch
+    *     runner's own counted write (`PipelineRunner.writeCounted`, keyed
+    *     by the micro-batch): rows in as read and per sink the rows this
+    *     commit wrote, from `observe` taps on the write itself.
     */
   def manifestSink(spec: graft.pipeline.Pipeline.PipelineSpec,
                    outRoot: String): (DataFrame, Long) => Unit = {
-    require(spec.sinks.nonEmpty, s"pipeline '${spec.name}' has no sink to count")
     val manifest = new graft.pipeline.Manifest(s"$outRoot/_manifest")
     (df, batchId) =>
       val key = f"batch=$batchId%019d"
       if (!manifest.isCommitted(key)) {
         val t0 = System.nanoTime()
-        val spark = df.sparkSession
-        val obs = new Observation(s"sinks_$batchId")
-        val taps = spec.sinks.map(s => count_if(col("route") === s).as(s))
-        graft.pipeline.PipelineRunner.writeSinks(
-          graft.pipeline.Pipeline.compile(spec, spark)(df)
-            .withColumn("batch_id", lit(batchId))
-            .observe(obs, taps.head, taps.tail: _*),
-          spec, outRoot, "batch_id")
-        val bySink = spec.sinks.map(s => s -> obs.get(s).asInstanceOf[Long]).toMap
-        manifest.commit(key, bySink.values.sum, bySink, Seq.empty,
+        val c = graft.pipeline.PipelineRunner.writeCounted(df, spec, outRoot,
+          Seq(batchId), lit(batchId), "batch_id" -> lit(batchId))(batchId)
+        manifest.commit(key, c.rowsIn, c.sinkCounts, Seq.empty,
           (System.nanoTime() - t0) / 1000000)
       }
-  }
-
-  /** readStream → severity/route tagging → watermarked windowed per-route
-    * counts. One file per micro-batch keeps the demo deterministic.
-    */
-  def routedCounts(spark: SparkSession, inputPath: String): DataFrame =
-    windowedRouteCounts(spark.readStream
-      .schema(TranscriptSchema)
-      .option("maxFilesPerTrigger", "8")
-      .parquet(inputPath))
-
-  /** Drive the stream to completion against a static directory (batch parity
-    * harness: processAllAvailable consumes every file, then the result table
-    * must equal the batch pipeline's counts).
-    */
-  def runToCompletion(spark: SparkSession, inputPath: String,
-                      queryName: String = "routed_counts"): StreamingQuery = {
-    val q = routedCounts(spark, inputPath).writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.ProcessingTime("0 seconds"))
-      .start()
-    q.processAllAvailable()
-    q
   }
 }

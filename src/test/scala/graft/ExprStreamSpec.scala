@@ -548,8 +548,8 @@ class PluginsSpec extends SparkTestBase {
     val t = Transcripts.fromEvents(spark, sfDir)
     val framed = t.select(col("conv_id"), col("turn_idx"), col("text").as("line"))
     Plugins.registry.foreach { case (name, plugin) =>
-      val input = if (Plugins.needsLine(name)) framed else t
-      val out = plugin(spark, Plugins.smokeParams(name))(input)
+      val input = if (Fixtures.needsLine(name)) framed else t
+      val out = plugin(spark, Fixtures.smokeParams(name))(input)
       out.queryExecution.assertAnalyzed()
       assert(out.columns.nonEmpty, s"plugin $name produced no columns")
     }
@@ -688,7 +688,7 @@ class StreamingSpec extends SparkTestBase {
     Transcripts.writePartitioned(
       Transcripts.generate(spark, nTurns = 5000, nConvs = 20), base + "/in")
 
-    val q = StreamingPipeline.runToCompletion(spark, base + "/in", "sp_counts")
+    val q = Fixtures.runToCompletion(spark, base + "/in", "sp_counts")
     try {
       val streamed = spark.table("sp_counts")
         .as[(java.sql.Timestamp, String, Long)].collect().toSet
@@ -732,7 +732,7 @@ class StreamingSpec extends SparkTestBase {
           col("ocsf.service.name").as("svc"))
     }
     val q = enrich(spark.readStream
-        .schema(StreamingPipeline.TranscriptSchema)
+        .schema(Fixtures.TranscriptSchema)
         .option("maxFilesPerTrigger", "8").parquet(base + "/in"))
       .writeStream.outputMode("append").format("memory")
       .queryName("sp_ocsf").trigger(Trigger.ProcessingTime("0 seconds")).start()
@@ -1081,7 +1081,7 @@ class StreamingSpec extends SparkTestBase {
     // (maxFilesPerTrigger forces several), and the result matches the batch
     // fan-out's route counts on the same input
     val out = s"$base/out"
-    val q = spark.readStream.schema(StreamingPipeline.TranscriptSchema)
+    val q = spark.readStream.schema(Fixtures.TranscriptSchema)
       .option("maxFilesPerTrigger", "2").parquet(input)
       .writeStream
       .foreachBatch(StreamingPipeline.manifestSink(Pipeline.Canonical, out))
@@ -1137,5 +1137,26 @@ class StreamingSpec extends SparkTestBase {
     val extraN = extra.count()
     sink(extra, 1L)
     assert(extraN > 0 && routeCounts(out2).values.sum == c0.values.sum + extraN)
+  }
+
+  test("streaming sink: rows_in is the micro-batch as read, before a filter drops rows") {
+    import graft.pipeline.Pipeline
+    val base = java.nio.file.Files.createTempDirectory("srows").toString
+    Transcripts.writePartitioned(
+      Transcripts.generate(spark, nTurns = 4000, nConvs = 20), s"$base/in")
+    val spec = Pipeline.Canonical.copy(operators = Pipeline.Canonical.operators :+
+      Pipeline.OperatorSpec("filter", Map("drop_where" -> "role = 'system'")))
+    val batch = spark.read.parquet(s"$base/in")
+    StreamingPipeline.manifestSink(spec, s"$base/out")(batch, 0L)
+    val e = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      new java.io.File(s"$base/out/_manifest/batch=${"%019d".format(0L)}.json"))
+    assert(e.get("rows_in").asLong == batch.count())
+    assert(e.get("rows_in").asLong > e.get("rows_out").asLong)
+    val back = spark.read.option("basePath", s"$base/out/sinks").parquet(s"$base/out/sinks")
+      .filter(col("batch_id") === 0).groupBy("route").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(spec.sinks.map(s => s -> e.get("sink_counts").get(s).asLong).toMap ==
+      spec.sinks.map(s => s -> back.getOrElse(s, 0L)).toMap)
+    Bench.deleteRec(base)
   }
 }

@@ -144,11 +144,36 @@ class PipelineSpec extends SparkTestBase {
 
   test("observe tap counts rows without an extra job") {
     val t = graft.model.Transcripts.fromEvents(spark, sfDir)
-    val tapped = graft.agg.AggOps.withThroughputTap(t)
-    val n = tapped.collect().length.toLong // action on THIS plan, not a new count() plan
-    val m = tapped.queryExecution.observedMetrics("throughput")
-    assert(m.getAs[Long]("log_count") == n)
-    assert(m.getAs[Long]("log_raw_bytes") > 0)
+    val (tapped, in, out) = PipelineRunner.tapped(t, Canonical, lit(7L))
+    // action on THIS plan, not a new count() plan
+    val rows = tapped.collect()
+    assert(PipelineRunner.tapCounts(in) == Map((7L, "") -> rows.length.toLong))
+    assert(PipelineRunner.tapCounts(out) ==
+      rows.groupMapReduce(r => (7L, r.getAs[String]("route")))(_ => 1L)(_ + _))
+  }
+
+  test("a tap is one aggregate expression whatever the group size") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+    val base = java.nio.file.Files.createTempDirectory("taps").toString
+    // 2,400 turns, 100 per hour: 24 hour partitions
+    Transcripts.writePartitioned(Transcripts.generate(spark, nTurns = 2400, nConvs = 20,
+      microsPerTurn = 36000000L), base)
+    val parts = PipelineRunner.discoverPartitions(spark, base)
+    assert(parts.size == 24)
+    // the taps of one group's write, as the runner plans them: aggregate
+    // expressions per CollectMetrics node
+    def taps(group: Seq[String]): Seq[Int] = {
+      val input = graft.io.Parquet.read(spark, spark.read.option("basePath", base),
+        group.map(p => s"$base/$p"): _*)
+      PipelineRunner.tapped(input, Canonical, PipelineRunner.HourKey)._1
+        .queryExecution.optimizedPlan.collect { case c: CollectMetrics =>
+          c.metrics.flatMap(_.collect { case a: AggregateExpression => a }).size
+        }
+    }
+    val (two, all) = (taps(parts.take(2)), taps(parts))
+    assert(two.size == 2 && two == all, s"2 partitions: $two, 24 partitions: $all")
+    Bench.deleteRec(base)
   }
 
   test("partitioned write lands each row in exactly one sink, counts match the route tag") {
@@ -184,8 +209,8 @@ class PipelineSpec extends SparkTestBase {
     Bench.deleteRec(base)
   }
 
-  test("footer counts equal Spark counts when an operator drops rows") {
-    val base = java.nio.file.Files.createTempDirectory("footers").toString
+  test("manifest counts equal Spark counts when an operator drops rows") {
+    val base = java.nio.file.Files.createTempDirectory("counts").toString
     Transcripts.writePartitioned(
       Transcripts.generate(spark, nTurns = 8000, nConvs = 20), s"$base/in")
     val spec = Canonical.copy(operators = Canonical.operators :+
@@ -216,6 +241,25 @@ class PipelineSpec extends SparkTestBase {
     // the filter really dropped rows: written < read
     assert(entries.map(_.getAs[Long]("rows_in")).sum >
       entries.map(_.getAs[Long]("rows_out")).sum)
+    Bench.deleteRec(base)
+  }
+
+  test("zero-padded partition names (the reference exporter's layout) commit under their own names") {
+    val base = java.nio.file.Files.createTempDirectory("padded").toString
+    val ts = col("ts")
+    Transcripts.generate(spark, nTurns = 3000, nConvs = 20)
+      .withColumn("year", year(ts).cast("string"))
+      .withColumns(Seq("month" -> month(ts), "day" -> dayofmonth(ts), "hour" -> hour(ts))
+        .map { case (n, c) => n -> lpad(c.cast("string"), 2, "0") }.toMap)
+      .write.partitionBy("year", "month", "day", "hour").parquet(s"$base/in")
+    val parts = PipelineRunner.discoverPartitions(spark, s"$base/in")
+    assert(parts.contains("year=2024/month=01/day=01/hour=00"))
+    val r = PipelineRunner.run(spark, Canonical, s"$base/in", s"$base/out")
+    assert(r.rowsIn == 3000 && r.rowsOut == 3000)
+    val entries = spark.read.option("multiLine", "true")
+      .json(s"$base/out/_manifest/*.json").collect()
+    assert(entries.map(_.getAs[String]("partition")).toSet == parts.toSet)
+    assert(entries.forall(_.getAs[Long]("rows_in") > 0))
     Bench.deleteRec(base)
   }
 
@@ -251,8 +295,8 @@ class PipelineSpec extends SparkTestBase {
       val input = graft.io.Parquet.read(spark, s"$base/in")
       assert(jobsOf(Pipeline.compile(Canonical, spark)(input)) == 0)
       // one job, the write: the lookup dims are hash probes inside its
-      // projection, and the input schema and the manifest counts are
-      // footer reads
+      // projection, the input schema is a footer read, and the manifest
+      // counts are observe taps on the write itself
       val n = jobsOf(PipelineRunner.run(spark, Canonical, s"$base/in", s"$base/out",
         groupSize = parts.size))
       assert(n == 1, s"one group ran $n jobs")
@@ -477,10 +521,50 @@ class ResumeSpec extends SparkTestBase {
       resumed.partitionsSkipped == parts.size - 1)
     assert(sinkCountsOnDisk() == baseline,
       "rerun did not replace the uncommitted partition's stale sink files")
-    // the run's own footer counts see the replaced leaves, not the orphans
+    // the run's own counts are the rows its write committed, not the orphans
     assert(resumed.sinkCounts == Pipeline.Canonical.sinks.map(s =>
       s -> victimShare.getOrElse(s, 0L)).toMap)
     assert(resumed.rowsIn == spark.read.parquet(input).filter(inVictim).count())
+    Bench.deleteRec(base)
+  }
+
+  test("kill between a manifest entry's tmp write and its rename: the partition re-runs, counted once") {
+    val base = java.nio.file.Files.createTempDirectory("killpoint").toString
+    val input = s"$base/in"
+    val out = s"$base/out"
+    Transcripts.writePartitioned(
+      Transcripts.generate(spark, nTurns = 8000, nConvs = 20), input)
+    val parts = PipelineRunner.discoverPartitions(spark, input)
+    assert(parts.size > 1)
+    PipelineRunner.run(spark, Pipeline.Canonical, input, out, groupSize = 2)
+    // the victim's sink files are written and its entry is staged, but the
+    // rename never ran: the tmp holds the whole entry, the json is absent
+    val manifestDir = java.nio.file.Paths.get(s"$out/_manifest")
+    val stem = parts.last.replace('/', '_')
+    java.nio.file.Files.move(manifestDir.resolve(s"$stem.json"),
+      manifestDir.resolve(s".$stem.json.tmp"))
+
+    val resumed = PipelineRunner.run(spark, Pipeline.Canonical, input, out, groupSize = 2)
+    assert(resumed.partitionsProcessed == 1 && resumed.partitionsSkipped == parts.size - 1)
+    assert(new java.io.File(manifestDir.toString).list().toSet ==
+      parts.map(p => p.replace('/', '_') + ".json").toSet)
+    // sinks and manifest both hold every input row exactly once
+    def counts(df: org.apache.spark.sql.DataFrame): Map[(String, String), Long] =
+      df.groupBy("year", "month", "day", "hour", "route").count().collect().map { r =>
+        (s"year=${r.get(0)}/month=${r.get(1)}/day=${r.get(2)}/hour=${r.get(3)}", r.getString(4)) ->
+          r.getLong(5)
+      }.toMap
+    val expected = counts(Pipeline.compile(Pipeline.Canonical, spark)(
+      spark.read.parquet(input)))
+    assert(counts(spark.read.option("basePath", s"$out/sinks").parquet(s"$out/sinks")) ==
+      expected)
+    val entries = spark.read.option("multiLine", "true").json(s"$out/_manifest/*.json").collect()
+    val committed = entries.flatMap { e =>
+      val sc = e.getAs[org.apache.spark.sql.Row]("sink_counts")
+      Pipeline.Canonical.sinks.map(s => (e.getAs[String]("partition"), s) -> sc.getAs[Long](s))
+    }.toMap
+    assert(committed.filter(_._2 > 0) == expected)
+    assert(entries.map(_.getAs[Long]("rows_in")).sum == spark.read.parquet(input).count())
     Bench.deleteRec(base)
   }
 
