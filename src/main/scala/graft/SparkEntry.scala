@@ -864,22 +864,22 @@ object SparkEntry {
     // LAST event time per distinct upstream gateway, and a row missing ANY
     // of the four headers (or carrying an empty one) upserts nothing
     Query("q_topology_routes", (s, d) => {
-      val ch = Dedup.md5Hash64(col("conv_id")) // portable gateway-id source
-      // OptBarrier on the md5-derived headers: topologyRoutes' all-four-
-      // headers gate otherwise pushes below this projection and the
-      // substitution re-runs the md5 chain per predicate reference
-      // (~9 md5 evaluations per row measured); fenced, the projection
-      // computes each header once and the md5 subexpression CSEs
-      val fence = graft.functions.OptBarrier.of _
-      val hdrs = t(s, d).select(col("ts"),
-        fence(when(pmod(col("turn_idx"), lit(7)) =!= 0,
-          concat(lit("org-"), pmod(ch, lit(3))))).as("h_organization_id"),
-        fence(when(pmod(col("turn_idx"), lit(11)) =!= 1,
-          concat(lit("acct-"), pmod(ch, lit(5))))).as("h_account_id"),
-        fence(when(pmod(col("turn_idx"), lit(13)) === 2, lit(""))
-          .otherwise(concat(lit("cfg-"), pmod(ch, lit(2))))).as("h_configuration"),
-        fence(when(col("role") === "tool", concat(lit("gw-"), col("tool")))
-          .otherwise(lit("gw-agent"))).as("h_resource_name"))
+      // the md5 gateway id is computed once per row in a Generate: inlined
+      // into topologyRoutes' all-four-headers gate, the md5 chain ran per
+      // predicate reference (~9 md5 evaluations per row). The headers are
+      // cheap derivations of it; a Generate over a struct of the headers
+      // would hold the chain three times, with no subexpression elimination
+      val ch = col("ch") // portable gateway-id source
+      val hdrs = ParseOps.once(t(s, d), "ch", Dedup.md5Hash64(col("conv_id")))
+        .select(col("ts"),
+          when(pmod(col("turn_idx"), lit(7)) =!= 0,
+            concat(lit("org-"), pmod(ch, lit(3)))).as("h_organization_id"),
+          when(pmod(col("turn_idx"), lit(11)) =!= 1,
+            concat(lit("acct-"), pmod(ch, lit(5)))).as("h_account_id"),
+          when(pmod(col("turn_idx"), lit(13)) === 2, lit(""))
+            .otherwise(concat(lit("cfg-"), pmod(ch, lit(2)))).as("h_configuration"),
+          when(col("role") === "tool", concat(lit("gw-"), col("tool")))
+            .otherwise(lit("gw-agent")).as("h_resource_name"))
       Router.topologyRoutes(hdrs,
         Router.GatewayInfo("org-self", "acct-self", "cfg-self", "gw-self"))
     },
@@ -2208,8 +2208,7 @@ object SparkEntry {
       val path = concat(
         date_format(col("ts"), "'logs/year='yyyy'/month='MM'/day='dd'/hour='HH"),
         format_string("/logs_%d.json", col("turn_idx")))
-      t(s, d).select(col("conv_id"), col("turn_idx"),
-          Transcripts.entityParsed(path).as("g")) // ONE regex pass per path
+      Transcripts.entityParsed(t(s, d), path) // ONE regex pass per path
         .select(col("conv_id"), col("turn_idx"),
           date_format(Transcripts.entityTimeFrom(col("g")), "yyyy-MM-dd HH:mm")
             .as("entity_time"),

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * Two codec tiers:
   *  - [[RealCodec]] — REAL decoders for self-describing formats (24-bit BMP
   *    with padding/bottom-up rows, RIFF PCM16 WAV, a length-prefixed frame
-  *    container), including a real box-filter resize and frame sampler;
+  *    container), including a real frame sampler;
   *  - [[FakeCodec]] — the clearly-marked stub standing in for compressed
   *    formats (JPEG/H.264/MP3) whose decoders aren't in this container.
   * Everything Spark-side — schema, batch shape, partitioning, the typed

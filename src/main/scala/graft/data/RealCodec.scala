@@ -94,39 +94,10 @@ object RealCodec {
     Image(w, h, px)
   }
 
-  /** REAL resize: box-filter downsample to tw×th (the feature-extract /
-    * thumbnail stage), L∞ values normalized to [0,1].
-    */
-  def boxDownsample(img: Image, tw: Int, th: Int): Array[Float] = {
-    val out = new Array[Float](tw * th)
-    var ty = 0
-    while (ty < th) {
-      val y0 = ty * img.height / th
-      val y1 = math.max(y0 + 1, (ty + 1) * img.height / th)
-      var tx = 0
-      while (tx < tw) {
-        val x0 = tx * img.width / tw
-        val x1 = math.max(x0 + 1, (tx + 1) * img.width / tw)
-        var s = 0L
-        var y = y0
-        while (y < y1) {
-          var x = x0
-          while (x < x1) { s += img.pixels(y * img.width + x); x += 1 }
-          y += 1
-        }
-        out(ty * tw + tx) = s.toFloat / ((y1 - y0) * (x1 - x0)) / 255f
-        tx += 1
-      }
-      ty += 1
-    }
-    out
-  }
-
   // ------------------------------------------------------------------
   // WAV (RIFF, PCM16 mono)
   // ------------------------------------------------------------------
   case class Audio(sampleRate: Int, samples: Array[Short]) {
-    def durationMs: Long = samples.length * 1000L / sampleRate
     def rms: Double = {
       var s = 0L; var i = 0
       while (i < samples.length) { s += samples(i).toLong * samples(i); i += 1 }

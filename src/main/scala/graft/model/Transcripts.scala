@@ -371,17 +371,16 @@ object Transcripts {
   val EntityFields: Seq[String] =
     Seq("year", "month", "day", "hour", "minute", "entity_name")
 
-  /** ONE regex pass over the path → struct of all parts (null struct on
-    * non-matching paths, ErrInvalidEntityPath parity). Extracting parts via
+  /** `t` plus `g`: ONE regex pass over the path → struct of all parts (null
+    * struct on non-matching paths, ErrInvalidEntityPath parity), computed
+    * once per row ([[graft.parse.ParseOps.once]]). Extracting parts via
     * separate regexp_extract calls re-runs the regex per part — 8× the work
-    * on the rehydration listing path.
+    * on the rehydration listing path — and so does a range filter on
+    * entity_time, a field derived from the struct, once the regex is
+    * inlined into it (10 regex runs per row).
     */
-  def entityParsed(path: Column): Column =
-    // OptBarrier: rehydration consumers range-filter on entity_time — a
-    // field DERIVED from this struct — and filter pushdown would otherwise
-    // substitute the whole regex into the predicate per referenced group
-    // (measured 10 regex runs per row; see OptBarrier scaladoc)
-    graft.functions.OptBarrier.of(
+  def entityParsed(t: DataFrame, path: Column): DataFrame =
+    graft.parse.ParseOps.once(t, "g",
       graft.functions.RegexExtractStruct.of(path, EntityPathPattern, EntityFields))
 
   /** Path-embedded entity timestamp from the parsed struct; missing minute

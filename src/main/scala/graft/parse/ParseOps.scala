@@ -64,14 +64,22 @@ object ParseOps {
     StructField("path", StringType), StructField("latency_ms", LongType),
     StructField("msg", StringType)))
 
+  /** `t` plus the column `name` holding `value`, computed once per row in
+    * a `Generate` node. The `explode` of a one-element array keeps exactly
+    * one row per input row, and a null value stays null. A filter on
+    * `name` stays above the node, where it reads the computed value: the
+    * optimizer never copies an expensive `value` into each predicate that
+    * reads it. A filter on `t`'s own columns still pushes below the node,
+    * down to the scan.
+    */
+  def once(t: DataFrame, name: String, value: Column): DataFrame =
+    t.select(col("*"), explode(array(value)).as(name))
+
   def parseJson(t: DataFrame): DataFrame =
-    t.filter(isJson)
-      // OptBarrier: downstream validation filters (the OCSF class gates
-      // especially) otherwise push below this projection and re-run the
-      // JSON parse once per substituted field reference (measured ~40
-      // from_json calls per row in q_ocsf_multiclass's pushed filter)
-      .withColumn("p", graft.functions.OptBarrier.of(
-        from_json(col("text"), JsonBodySchema)))
+    // the OCSF class gates filter on many parsed fields: with the parse
+    // inlined into each predicate, q_ocsf_multiclass ran ~40 from_json
+    // per row
+    once(t.filter(isJson), "p", from_json(col("text"), JsonBodySchema))
       .select(col("conv_id"), col("turn_idx"),
         col("p.level").as("level"), col("p.status").as("status"),
         col("p.path").as("path"), col("p.latency_ms").as("latency_ms"),
@@ -319,15 +327,6 @@ object ParseOps {
         try_to_timestamp(concat(lit(s"$y "), c), lit(s"yyyy $pat"))
       case _ => try_to_timestamp(c, lit(pat))
     }
-
-  /** `layout_type: epoch` variants (stanza time_parser): seconds / millis /
-    * micros integer layouts → timestamp. */
-  def parseEpoch(c: Column, layout: String): Column = layout match {
-    case "s" => timestamp_seconds(c.cast("long"))
-    case "ms" => timestamp_millis(c.cast("long"))
-    case "us" => timestamp_micros(c.cast("long"))
-    case other => throw new IllegalArgumentException(s"epoch layout '$other'")
-  }
 
   /** Parse the nginx `time_local` (sans zone — fixture zone is always +0000,
     * and the session timezone is UTC) back into an event timestamp. */

@@ -195,17 +195,27 @@ object PipelineRunner {
     * entered the spec's operators, and `sinkCounts` rows went to each sink. */
   case class KeyCounts(rowsIn: Long, sinkCounts: Map[String, Long])
 
-  /** Discover hour partitions of a `year=/month=/day=/hour=` table. */
+  /** Discover hour partitions of a `year=/month=/day=/hour=` table. A leaf
+    * below `year=` whose levels are not `month=`/`day=`/`hour=` with integer
+    * values (Spark writes `hour=__HIVE_DEFAULT_PARTITION__` for a null hour)
+    * fails here, naming its path, before any group of a run commits. */
   def discoverPartitions(spark: SparkSession, inputPath: String): Seq[String] = {
     val root = new HPath(inputPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def ls(p: HPath): Seq[HPath] =
       if (!fs.exists(p)) Seq.empty
       else fs.listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
-    for {
+    val leaves = for {
       y <- ls(root) if y.getName.startsWith("year=")
       m <- ls(y); d <- ls(m); h <- ls(d)
-    } yield s"${y.getName}/${m.getName}/${d.getName}/${h.getName}"
+    } yield Seq(y, m, d, h).map(_.getName)
+    leaves.map { names =>
+      require(names.zip(Seq("year", "month", "day", "hour"))
+        .forall { case (n, level) => n.matches(s"$level=\\d{1,9}") },
+        s"$inputPath/${names.mkString("/")}: not a year=/month=/day=/hour= " +
+          "partition with integer values")
+      names.mkString("/")
+    }
   }
 
   /** Path of a sink's table: a `route=<name>` partition of the single

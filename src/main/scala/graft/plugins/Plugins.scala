@@ -14,16 +14,15 @@ import graft.parse.ParseOps
   */
 object Plugins {
 
-  /** Fenced one-pass grok: RegexExtractStruct behind an OptBarrier. Plugin
-    * pipelines filter on PARSED fields (on_error drops, severity gates,
-    * data_flow filters), and `PushPredicateThroughNonJoin` substitutes the
-    * whole regex into each pushed predicate — every such filter re-ran the
-    * pattern per row (2x regex per row measured across the plugin corpus).
-    * The fence pins filters above the projection; the regex runs once.
+  /** `input` plus the one-pass grok struct `g` of `c`, computed once per
+    * row ([[ParseOps.once]]). Plugin pipelines filter on PARSED fields
+    * (on_error drops, severity gates, data_flow filters); with the regex
+    * inlined into each such predicate, the plugin corpus ran it twice per
+    * row.
     */
-  private[plugins] def grok(c: Column, pattern: String,
-                            fields: Seq[String]): Column =
-    graft.functions.OptBarrier.of(RegexExtractStruct.of(c, pattern, fields))
+  private[plugins] def grok(input: DataFrame, c: Column, pattern: String,
+                            fields: Seq[String]): DataFrame =
+    ParseOps.once(input, "g", RegexExtractStruct.of(c, pattern, fields))
 
   case class PluginParam(name: String, default: Option[String],
                          supported: Seq[String] = Seq.empty)
@@ -63,9 +62,8 @@ object Plugins {
     PluginParam("log_type", Some("nginx")))) {
 
     protected def build(spark: SparkSession, p: Map[String, String]) = { input =>
-      val parsed = input.filter(ParseOps.isNginx)
-        .withColumn("g", grok(col("text"),
-          ParseOps.NginxPattern, ParseOps.NginxFields))
+      val parsed = grok(input.filter(ParseOps.isNginx), col("text"),
+          ParseOps.NginxPattern, ParseOps.NginxFields)
         .select(
           col("conv_id"), col("turn_idx"), col("tool"),
           col("g.remote_addr").as("remote_addr"),
@@ -108,8 +106,7 @@ object Plugins {
       else {
         val parsed =
           if (p("protocol") == "rfc3164")
-            lines.withColumn("g", grok(col("text"),
-                ParseOps.SyslogPattern, ParseOps.SyslogFields))
+            grok(lines, col("text"), ParseOps.SyslogPattern, ParseOps.SyslogFields)
               .select(col("conv_id"), col("turn_idx"),
                 col("g.pri").cast(IntegerType).as("priority"),
                 (col("g.pri").cast(IntegerType) % 8).as("severity"),
@@ -118,8 +115,8 @@ object Plugins {
                 col("g.message").as("message"),
                 col("text"))
           else // rfc5424: on_error send — fixture 3164 lines yield nulls
-            lines.withColumn("g", grok(col("text"),
-                ParseOps.Syslog5424Pattern, ParseOps.Syslog5424Fields))
+            grok(lines, col("text"),
+                ParseOps.Syslog5424Pattern, ParseOps.Syslog5424Fields)
               .select(col("conv_id"), col("turn_idx"),
                 col("g.pri").cast(IntegerType).as("priority"),
                 (col("g.pri").cast(IntegerType) % 8).as("severity"),
@@ -274,8 +271,7 @@ object Plugins {
         .otherwise(5) // DEBUG1..5 / DETAIL / STATEMENT / HINT
 
     protected def build(spark: SparkSession, p: Map[String, String]) = { input =>
-      val parsed = input
-        .withColumn("g", grok(col("line"), LinePattern, LineFields))
+      val parsed = grok(input, col("line"), LinePattern, LineFields)
         .filter(col("g").isNotNull)
         .select(col("conv_id"), col("turn_idx"),
           col("g.tid").cast(LongType).as("tid"),
@@ -349,9 +345,8 @@ object Plugins {
     PluginParam("log_type", Some("apache_combined")))) {
 
     protected def build(spark: SparkSession, p: Map[String, String]) = { input =>
-      input.filter(ParseOps.isNginx)
-        .withColumn("g", grok(col("text"),
-          ParseOps.NginxPattern, ParseOps.NginxFields))
+      grok(input.filter(ParseOps.isNginx), col("text"),
+          ParseOps.NginxPattern, ParseOps.NginxFields)
         .select(col("conv_id"), col("turn_idx"),
           col("g.remote_addr").as("remote_addr"),
           col("g.method").as("method"), col("g.path").as("path"),
@@ -405,14 +400,12 @@ object Plugins {
       * Prefix-less lines (bare CEF:) keep null event_ts/hostname.
       */
     protected def build(spark: SparkSession, p: Map[String, String]) = { input =>
-      val pre = grok(col("line"),
-        """^(?:(\w{3}\s+\d{1,2}\s+\d{2}:\d{2}:\d{2})\s+(?:([^\s]+)\s+)?)?(CEF:.*)$""",
-        Seq("timestamp", "hostname", "cef_headers"))
       val h = split(col("__cef"), "\\|")
-      input.filter(col("line").contains("CEF:"))
-        .withColumn("__p", pre)
-        .filter(col("__p").isNotNull) // regex_parser on_error: drop
-        .withColumn("__cef", col("__p.cef_headers"))
+      grok(input.filter(col("line").contains("CEF:")), col("line"),
+          """^(?:(\w{3}\s+\d{1,2}\s+\d{2}:\d{2}:\d{2})\s+(?:([^\s]+)\s+)?)?(CEF:.*)$""",
+          Seq("timestamp", "hostname", "cef_headers"))
+        .filter(col("g").isNotNull) // regex_parser on_error: drop
+        .withColumn("__cef", col("g.cef_headers"))
         .select(col("conv_id"), col("turn_idx"),
           regexp_extract(col("__cef"), "CEF:([^\\|]*)", 1).as("version"),
           element_at(h, 2).as("device_vendor"),
@@ -421,11 +414,11 @@ object Plugins {
           element_at(h, 6).as("name"),
           element_at(h, 7).as("severity"),
           element_at(h, 8).as("extensions"),
-          col("__p.hostname").as("hostname"),
+          col("g.hostname").as("hostname"),
           // `location:` semantics (cef yaml:62): the zone-less timestamp is
           // wall time in the configured timezone → convert to UTC
           to_utc_timestamp(
-            graft.parse.ParseOps.gotimeParse(col("__p.timestamp"),
+            graft.parse.ParseOps.gotimeParse(col("g.timestamp"),
               "Jan 02 15:04:05", Some(p("default_year").toInt)),
             p("timezone")).as("event_ts"))
         .withColumn("severity_number",
@@ -443,7 +436,7 @@ object Plugins {
     val Fields = Seq("time", "severity", "message")
 
     protected def build(spark: SparkSession, p: Map[String, String]) = { input =>
-      input.withColumn("g", grok(col("line"), Pattern, Fields))
+      grok(input, col("line"), Pattern, Fields)
         .filter(col("g").isNotNull)
         .select(col("conv_id"), col("turn_idx"),
           col("g.time").as("time"),
@@ -465,7 +458,7 @@ object Plugins {
     val Fields = Seq("pid", "role", "timestamp", "level", "message")
 
     protected def build(spark: SparkSession, p: Map[String, String]) = { input =>
-      input.withColumn("g", grok(col("line"), Pattern, Fields))
+      grok(input, col("line"), Pattern, Fields)
         .filter(col("g").isNotNull)
         .select(col("conv_id"), col("turn_idx"),
           col("g.pid").cast(LongType).as("pid"),
@@ -488,7 +481,7 @@ object Plugins {
     val Fields = Seq("timestamp", "tid", "command", "message")
 
     protected def build(spark: SparkSession, p: Map[String, String]) = { input =>
-      input.withColumn("g", grok(col("line"), Pattern, Fields))
+      grok(input, col("line"), Pattern, Fields)
         .filter(col("g").isNotNull)
         .select(col("conv_id"), col("turn_idx"),
           col("g.timestamp").as("timestamp"),
@@ -545,8 +538,7 @@ object Plugins {
         input.select(col("conv_id"), col("turn_idx"), col("line").as("body"),
           lit(p("log_type")).as("log_type"))
       else {
-        val parsed = input
-          .withColumn("g", grok(col("line"), d.pattern, d.fields))
+        val parsed = grok(input, col("line"), d.pattern, d.fields)
           .filter(col("g").isNotNull) // regex_parser on_error: drop
           .select(Seq(col("conv_id"), col("turn_idx")) ++
             d.fields.map { f =>
@@ -982,10 +974,9 @@ object Plugins {
       StructField("event_id", IntegerType),
       StructField("message", StringType)))
     protected def build(spark: SparkSession, p: Map[String, String]) = { input =>
-      // fenced like the grok sites: the provider-name router filter below
-      // otherwise pushes past this projection and re-runs the JSON parse
-      val j = input.withColumn("b", graft.functions.OptBarrier.of(
-        from_json(col("line"), WinEventSchema)))
+      // parsed once, like the grok sites: the provider-name router filter
+      // below reads the parsed struct instead of parsing the line again
+      val j = ParseOps.once(input, "b", from_json(col("line"), WinEventSchema))
       val routed =
         if (p("parse").toBoolean)
           // the template's router expr is `body.provider.name matches
@@ -1055,6 +1046,14 @@ object Plugins {
   * budget (MaximumPayloadSizeBytes, internal/report/snapshot: the buffer
   * stops accepting once the serialized payload would exceed the cap) —
   * rendered as a running byte sum in deterministic (ts, conv, turn) order.
+  *
+  * A budgeted search scans the hits twice, and must. The contract (and the
+  * oracle's) keeps a row iff its running sum over the GLOBAL order is
+  * within the budget, so a row's offset depends on the bytes of every
+  * earlier row. The first scan yields per-hour byte totals, whose running
+  * offsets decide which buckets can hold kept rows; the second runs the
+  * ordered windows within those buckets. The one-pass form is a single
+  * global ordered window, which runs as one task at any scale.
   */
 object Snapshot {
   def search(t: DataFrame, query: String, minTs: String,

@@ -321,8 +321,7 @@ class DedupSpec extends SparkTestBase {
       PlaneSignBits.of($"wh", Seq(Seq(1L, -1L, 2L), Seq(-3L, 1L, 1L))),
       DotArgmax.of($"wh", Seq(7L, 9L), Seq(Seq(1L, 0L, 0L), Seq(0L, 0L, 1L))),
       MinHashSig.of($"wh", Seq(3L, 5L), Seq(7L, 11L), Dedup.P),
-      SimHashBits.of($"wh"),
-      OptBarrier.of(Md5Long.of($"s")))
+      SimHashBits.of($"wh"))
     val (generated, interpreted) = inCodegenModes {
       input.select(kernels.zipWithIndex.map { case (k, i) => k.as(s"k$i") }: _*)
         .collect().toSeq.sortBy(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
@@ -332,6 +331,16 @@ class DedupSpec extends SparkTestBase {
     assert(generated.head.toSeq.forall(_ == null))
     assert(generated.exists(r => r.getStruct(4) == Row("x", null)))
     assert(generated.count(r => r.getStruct(3) != null) == 1)
+  }
+
+  test("a grok plugin query gives the same rows generated and interpreted") {
+    // the grok struct is computed in a Generate node, which whole-stage
+    // codegen compiles and the interpreted path evaluates row by row
+    val (generated, interpreted) = inCodegenModes {
+      SparkEntry.queries("q_plugin_nginx")(spark, sfDir).collect().toSeq
+        .sortBy(r => (r.getString(0), r.getInt(1)))
+    }
+    assert(generated.nonEmpty && generated == interpreted)
   }
 
   test("assignSplits: deterministic, exhaustive, and stable under subsetting") {
@@ -505,17 +514,12 @@ class MultimodalSpec extends SparkTestBase {
     assert(img.width == 3 && img.height == 2)
     for (y <- 0 until 2; x <- 0 until 3)
       assert(img.pixels(y * 3 + x) == RealCodec.pix(x, y, 5), s"($x,$y)")
-    // real resize: box filter over a known image
-    val big = RealCodec.Image(4, 4, Array.fill(16)(200))
-    val ds = RealCodec.boxDownsample(big, 2, 2)
-    assert(ds.forall(v => math.abs(v - 200f / 255f) < 1e-6))
   }
 
   test("REAL WAV codec: PCM16 round-trip, duration, RMS") {
     import graft.data.RealCodec
     val au = RealCodec.decodeWav(RealCodec.encodeWav(400, 8000, seed = 7))
     assert(au.sampleRate == 8000 && au.samples.length == 400)
-    assert(au.durationMs == 50L)
     (0 until 400).foreach(i => assert(au.samples(i) == RealCodec.sample(i, 7)))
     assert(au.rms > 0)
   }

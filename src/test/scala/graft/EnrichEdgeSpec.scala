@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.enrich.EnrichOps
-import graft.parse.ParseOps
 
 class EnrichEdgeSpec extends SparkTestBase {
   import spark.implicits._
@@ -168,15 +167,6 @@ class EnrichEdgeSpec extends SparkTestBase {
     assert(r.getString(0) == "99999999999999999999") // 20 digits overflow long
     assert(r.getString(1) == "2024-13-99T99:99:99")  // shape-valid, not a time
     assert(r.getString(2) == "maybe")                 // not a ParseBool token
-  }
-
-  test("epoch time layouts (stanza layout_type: epoch)") {
-    val df = Seq((1704067200L, 1704067200123L)).toDF("s", "ms")
-    val r = df.select(
-      ParseOps.parseEpoch(col("s"), "s").as("ts_s"),
-      ParseOps.parseEpoch(col("ms"), "ms").as("ts_ms")).collect().head
-    assert(r.getTimestamp(0).toInstant.getEpochSecond == 1704067200L)
-    assert(r.getTimestamp(1).toInstant.toEpochMilli == 1704067200123L)
   }
 
   test("generated corpus is genuinely skewed and salted agg still exact") {

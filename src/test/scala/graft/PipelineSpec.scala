@@ -263,6 +263,25 @@ class PipelineSpec extends SparkTestBase {
     Bench.deleteRec(base)
   }
 
+  test("a partition leaf without integer values fails the run before any group commits") {
+    val base = java.nio.file.Files.createTempDirectory("badleaf").toString
+    Transcripts.writePartitioned(Transcripts.generate(spark, nTurns = 2400, nConvs = 20,
+      microsPerTurn = 36000000L), s"$base/in")
+    val parts = PipelineRunner.discoverPartitions(spark, s"$base/in")
+    // Spark's leaf for a null hour, planted after every good leaf
+    val last = java.nio.file.Paths.get(s"$base/in/${parts.max}")
+    val bad = last.resolveSibling("hour=__HIVE_DEFAULT_PARTITION__")
+    java.nio.file.Files.createDirectory(bad)
+    java.nio.file.Files.list(last).filter(_.toString.endsWith(".parquet")).limit(1)
+      .forEach(f => java.nio.file.Files.copy(f, bad.resolve(f.getFileName)))
+    val e = intercept[IllegalArgumentException](
+      PipelineRunner.run(spark, Canonical, s"$base/in", s"$base/out", groupSize = 1))
+    assert(e.getMessage.contains("hour=__HIVE_DEFAULT_PARTITION__"), e.getMessage)
+    assert(new Manifest(s"$base/out/_manifest").committedPartitions().isEmpty)
+    assert(!new java.io.File(s"$base/out/sinks").exists())
+    Bench.deleteRec(base)
+  }
+
   test("job budget: compiling runs no job, a one-group run only its few fixed jobs") {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.GraftSparkBridge

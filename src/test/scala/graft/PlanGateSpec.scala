@@ -94,3 +94,61 @@ class PlanGateSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 }
+
+/** Compute-once sites: each parse (or md5 chain) runs once per row in a
+  * `Generate` node, with no non-deterministic fence. A filter on the
+  * parsed fields stays above the node, so the plan holds exactly one parse;
+  * a filter on the source's own columns still reaches the scan.
+  */
+class ParseOncePlanSpec extends SparkTestBase {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs, Literal}
+  import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
+  import org.apache.spark.sql.functions.col
+  import graft.functions.{Md5Long, RegexExtractStruct}
+
+  private def isJson(e: Expression): Boolean = e.isInstanceOf[JsonToStructs]
+
+  private def isGrok(e: Expression): Boolean = e match {
+    case i: Invoke => i.targetObject match {
+      case Literal(_: RegexExtractStruct.Grok, _) => true
+      case _ => false
+    }
+    case _ => false
+  }
+
+  private def isMd5(e: Expression): Boolean = e match {
+    case s: StaticInvoke => s.staticObject == Md5Long.getClass
+    case _ => false
+  }
+
+  test("one parse per row, source filters pushed to the scan, every expression deterministic") {
+    val q = (name: String) => SparkEntry.queries(name)(spark, sfDir)
+    val json = graft.parse.ParseOps.parseJson(
+        graft.model.Transcripts.fromEvents(spark, sfDir))
+      .filter(col("turn_idx") < 50 && col("status") >= 400 && col("level") =!= "debug")
+    // (name, query, the parse, whether IsNotNull(turn_idx) must reach the scan)
+    val cases: Seq[(String, DataFrame, Expression => Boolean, Boolean)] = Seq(
+      ("parseJson", json, isJson, true),
+      ("q_ocsf_v17", q("q_ocsf_v17"), isJson, true),
+      ("q_plugin_sql_server", q("q_plugin_sql_server"), isJson, false),
+      ("q_plugin_nginx", q("q_plugin_nginx"), isGrok, false),
+      ("q_rehydration_range", q("q_rehydration_range"), isGrok, false),
+      ("q_topology_routes", q("q_topology_routes"), isMd5, false))
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try cases.foreach { case (name, df, isParse, pushesTurnIdx) =>
+      assert(df.collect().nonEmpty, name)
+      val plan = df.queryExecution.executedPlan
+      val exprs = plan.collect { case n => n.expressions }.flatten
+        .flatMap(_.collect { case e => e })
+      assert(exprs.count(isParse) == 1, s"$name: one parse\n$plan")
+      assert(exprs.forall(_.deterministic), s"$name: non-deterministic\n$plan")
+      if (pushesTurnIdx) {
+        val pushed = plan.collect { case f: FileSourceScanExec =>
+          f.metadata.getOrElse("PushedFilters", "") }
+        assert(pushed.exists(_.contains("IsNotNull(turn_idx)")), s"$name\n$plan")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+}

@@ -438,4 +438,73 @@ class SparkPropertySpec extends SparkTestBase {
       assert(row.getBoolean(i) == expect, s"'$src': expected $expect")
     }
   }
+
+  test("malformed lines: the compute-once parsers conserve rows in on_error drop and send") {
+    // truncated JSON, unbalanced quotes, empty, null and oversized lines
+    // through each compute-once parse site. Rows out = rows in - rows the
+    // parser drops (its line-class filter, on_error: drop, the sql_server
+    // router), and no row is duplicated or lost by the Generate.
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.functions.{coalesce, col, from_json, lit}
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    import graft.parse.ParseOps
+    import graft.plugins.Plugins
+
+    def json(msg: Gen[String]) = for {
+      lvl <- Gen.oneOf("info", "warn", "error"); st <- Gen.choose(100, 599)
+      m <- msg
+    } yield s"""{"level":"$lvl","status":$st,"path":"/p","latency_ms":5,"msg":"$m"}"""
+    def hadoop(msg: Gen[String]) = for {
+      sev <- Gen.oneOf("INFO", "WARN", "ERROR"); m <- msg
+    } yield s"2024-01-05 10:11:12,345 $sev org.apache.Foo: x$m"
+    def syslog(msg: Gen[String]) = for {
+      pri <- Gen.choose(0, 191); m <- msg
+      hdr <- Gen.oneOf("1 2024-01-05T10:11:12Z host7 app 42 ID7 -", // rfc5424
+        "Jan 05 10:11:12 host7 app[42]:") // rfc3164: on_error send in 5424
+    } yield s"<$pri>$hdr $m"
+    def winEvent(msg: Gen[String]) = for {
+      prov <- Gen.oneOf("MSSQLSERVER", "Application Error", "MSSQLSERVER$ALT")
+      id <- Gen.choose(0, 999); m <- msg
+    } yield s"""{"provider":{"name":"$prov"},"event_id":$id,"message":"$m"}"""
+    def anyLine(msg: Gen[String]) =
+      Gen.oneOf(json(msg), hadoop(msg), syslog(msg), winEvent(msg))
+    val valid = anyLine(Gen.alphaStr)
+    val line: Gen[Option[String]] = Gen.frequency(
+      3 -> valid.map(Some(_)),
+      2 -> (for (s <- valid; k <- Gen.choose(0, s.length - 1)) yield Some(s.take(k))),
+      2 -> (for (s <- valid; k <- Gen.choose(0, s.length)) yield Some(s.patch(k, "\"", 0))),
+      1 -> Gen.const(Some("")),
+      1 -> Gen.const(None),
+      1 -> anyLine(Gen.const("m" * 100000)).map(Some(_)),
+      1 -> Gen.asciiPrintableStr.map(Some(_)))
+
+    val hadoopRe = Plugins.RegexTemplates.find(_.name == "hadoop").get.pattern.r
+    val schema = StructType(Seq(StructField("conv_id", StringType),
+      StructField("turn_idx", IntegerType), StructField("text", StringType),
+      StructField("line", StringType)))
+    val winEventSchema = "provider STRUCT<name: STRING>, event_id INT, message STRING"
+    def turns(df: DataFrame): Seq[Int] =
+      df.select("turn_idx").collect().map(_.getInt(0)).toSeq.sorted
+
+    val prop = Prop.forAll(Gen.listOf(line)) { lines =>
+      val in = spark.createDataFrame(spark.sparkContext.parallelize(
+        lines.zipWithIndex.map { case (l, i) => Row("c", i, l.orNull, l.orNull) }, 2),
+        schema)
+      def kept(p: String => Boolean) = lines.indices.filter(i => lines(i).exists(p))
+      // the router keeps a line whose parsed provider name matches, as the
+      // same parse reads it without a Generate
+      val routed = turns(in.filter(coalesce(from_json(col("line"), winEventSchema,
+        Map.empty[String, String]).getField("provider").getField("name")
+        .rlike("MSSQLSERVER"), lit(false))))
+      turns(ParseOps.parseJson(in)) == kept(_.startsWith("{")) &&
+        turns(Plugins.registry("hadoop")(spark)(in)) ==
+          kept(hadoopRe.findFirstIn(_).isDefined) &&
+        turns(Plugins.SyslogPlugin(spark)(in)) == kept(_.startsWith("<")) &&
+        turns(Plugins.SqlServerPlugin(spark)(in)) == routed &&
+        turns(Plugins.SqlServerPlugin(spark, Map("parse" -> "false"))(in)) ==
+          lines.indices
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, s"malformed lines: ${res.status}")
+  }
 }
